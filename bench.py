@@ -94,8 +94,11 @@ def main() -> None:
             RAW_QUERIES[name](spark, sf_dir).toArrow()
 
     # RAW_QUERIES builds a FRESH DataFrame per timed run, so every run pays
-    # the full plan + shuffle + collect cost (a memoized handle would reuse
-    # materialized shuffle stages and under-report the query's work).
+    # the full physical plan + shuffle + collect cost (a memoized handle
+    # would reuse materialized shuffle stages and under-report the query's
+    # work). For lazy_build queries the fresh DataFrame wraps a memoized
+    # ANALYZED plan (plans/plan_memo.py), so their reps skip the py4j
+    # build + Catalyst analysis constant, never the data work.
     # Alongside it, the MARGINAL number re-executes one already-built plan
     # back-to-back: the delta between the two isolates the per-plan driver
     # constant (Catalyst analysis + codegen source generation + ~0.1-0.15s
@@ -116,8 +119,9 @@ def main() -> None:
         # min-of-5 (was 3): identical-code totals measured 5.7-7.1s across
         # runs on this VM (host contention + C2 compilation still warming
         # during early reps); 5 reps lets the min converge on the true
-        # floor while staying honest — every rep is a full un-memoized
-        # plan + shuffle + fetch.
+        # floor while staying honest — every rep is a fresh physical
+        # plan + shuffle + fetch (lazy_build queries reuse only their
+        # memoized analyzed plan; see above).
         for _ in range(5):
             t0 = time.perf_counter()
             # toArrow(): full materialization of every result row into

@@ -224,14 +224,14 @@ def bpe_tokenize(docs: DataFrame, text_col: str = "text",
     splits < cores and the input is big enough to dominate it; the
     small-sf pinned 0-exchange plan is unchanged (plans/widen.py)."""
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
 
     # round 13: the chain's per-input-byte cost is ~50 passes over the
     # 3x-expanded delimited text — the CHAIN gate (128 KB default)
     # reflects that weight; the 2 MB default left the sf0.1 corpus
     # (584 KB) serial on one core (measured 1.66 s -> 0.27 s widened).
     staged = widen_if_narrow(docs.select(id_col, text_col),
-                             min_bytes=chain_min_bytes()).select(
+                             min_bytes=CHAIN_MIN_BYTES).select(
         F.col(id_col),
         bpe_norm(text_col).alias("__norm"),
         bpe_encode(text_col, merges).alias("__enc"))
@@ -379,9 +379,9 @@ def bpe_tokenize_dict(docs: DataFrame, text_col: str = "text",
     # round 13: the kernel is per-byte heavy like the chain (Python
     # merge loop per distinct word) — same lowered CHAIN gate, so a
     # sub-2MB-but-nontrivial corpus does not serialize on one task.
-    from data_services_spark.plans.widen import chain_min_bytes
+    from data_services_spark.plans.widen import CHAIN_MIN_BYTES
     slim = widen_if_narrow(docs.select(id_col, text_col),
-                           min_bytes=chain_min_bytes())
+                           min_bytes=CHAIN_MIN_BYTES)
     return slim.mapInPandas(kernel, out_schema)
 
 

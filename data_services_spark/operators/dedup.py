@@ -96,8 +96,7 @@ def minhash_signature(col: Column | str, num_hashes: int = 32,
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = 32,
                        shingle_n: int = 3,
-                       hash_family: str = "xxhash64",
-                       derive_partitions: int | None = None) -> DataFrame:
+                       hash_family: str = "xxhash64") -> DataFrame:
     """(id, sig) DataFrame via explode -> wide hash columns -> groupBy(min).
 
     Deliberately NOT the nested-lambda form (`transform(seq, i ->
@@ -107,32 +106,24 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     WholeStageCodegen, gets map-side partial mins before the shuffle, and
     at 100 TB is a plain hash aggregation on doc_id.
 
-    ``derive_partitions``: the signature derivation is CPU-bound
-    (num_hashes hash evaluations per shingle), so its parallelism is
-    capped by the INPUT split count, not by data volume — a corpus
-    arriving as one or two parquet files serializes the whole fold
-    (measured, SCALE.md round-9: 100k docs over the sf1 file's 2
-    splits = 36.7s; `.repartition(32)` first = 5.8s, 6.3×). Set it
-    when reading few-file corpora on many-core hosts; leave None on
-    real cluster layouts, where thousands of input splits already
-    exist and the extra raw-text shuffle would be pure cost.
-
-    Round 13 (guide §2.2): when ``derive_partitions`` is None the
-    size-gated widen guard applies automatically — the per-shingle
-    ``num_hashes``-fold hash fan-out is exactly the per-input-byte-
-    heavy chain the CHAIN gate exists for (measured sf0.1: the 16-slot
-    md5 fold over the single-split 584 KB corpus serialized on one
-    core). The guard no-ops on streaming plans, on >=cores-split scans
-    (any real cluster layout) and under the small-sf gate, so pinned
-    plans and cluster shapes are unchanged; values are repartition-
-    stable (groupBy(id) mins are order-insensitive)."""
-    if derive_partitions is not None:
-        docs = docs.repartition(derive_partitions)
-    else:
-        from data_services_spark.plans.widen import (
-            chain_min_bytes, widen_if_narrow)
-        docs = widen_if_narrow(docs.select(id_col, text_col),
-                               min_bytes=chain_min_bytes())
+    The signature derivation is CPU-bound (num_hashes hash evaluations
+    per shingle), so its parallelism is capped by the INPUT split count,
+    not by data volume — a corpus arriving as one or two parquet files
+    serializes the whole fold (measured, SCALE.md round-9: 100k docs
+    over the sf1 file's 2 splits = 36.7s; `.repartition(32)` first =
+    5.8s, 6.3×). The size-gated widen guard therefore runs first: the
+    per-shingle ``num_hashes``-fold hash fan-out is exactly the
+    per-input-byte-heavy chain the CHAIN gate exists for (measured
+    sf0.1: the 16-slot md5 fold over the single-split 584 KB corpus
+    serialized on one core). The guard no-ops on streaming plans, on
+    >=cores-split scans (any real cluster layout) and under the
+    small-sf gate, so pinned plans and cluster shapes are unchanged;
+    values are repartition-stable (groupBy(id) mins are
+    order-insensitive)."""
+    from data_services_spark.plans.widen import (
+        CHAIN_MIN_BYTES, widen_if_narrow)
+    docs = widen_if_narrow(docs.select(id_col, text_col),
+                           min_bytes=CHAIN_MIN_BYTES)
     toks = docs.select(F.col(id_col).alias("id"),
                        F.explode(shingles(text_col, shingle_n)).alias("__sh"))
     hashed = toks.select(
@@ -147,18 +138,16 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
 def band_hashes(docs: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id", num_hashes: int = 32,
                 bands: int = 8, shingle_n: int = 3,
-                hash_family: str = "xxhash64",
-                derive_partitions: int | None = None) -> DataFrame:
+                hash_family: str = "xxhash64") -> DataFrame:
     """(id, sig, band, bh) — the LSH banding step shared by the batch
     pair join (:func:`minhash_lsh_pairs`) and the streaming incremental
     dedup (streaming/neardup.py): MinHash signature split into `bands`
     bands of `num_hashes/bands` rows, each band's slice hashed to one
     bucket key ``bh``. Two documents are near-dup candidates iff they
-    agree on (band, bh) for at least one band. ``derive_partitions``
-    forwards to :func:`minhash_signatures` (few-input-split corpora)."""
+    agree on (band, bh) for at least one band."""
     rows = num_hashes // bands
     sig = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_n,
-                             hash_family, derive_partitions)
+                             hash_family)
     return sig.select(
         "id", "sig",
         F.explode(
@@ -260,9 +249,9 @@ def simhash64_df(docs: DataFrame, text_col: str = "text",
     # not serialize on one core (same gate/no-op policy as
     # minhash_signatures; groupBy(id) sums are order-insensitive).
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     docs = widen_if_narrow(docs.select(id_col, text_col),
-                           min_bytes=chain_min_bytes())
+                           min_bytes=CHAIN_MIN_BYTES)
     hashed = docs.select(
         F.col(id_col),
         F.explode(shingles(text_col, shingle_n)).alias("__sh"),
@@ -327,9 +316,9 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
     streaming / >=cores-split / small inputs; join+agg output is
     order-insensitive."""
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     docs = widen_if_narrow(docs.select(*block_cols, id_col, text_col),
-                           min_bytes=chain_min_bytes())
+                           min_bytes=CHAIN_MIN_BYTES)
     toks = (docs.select(*block_cols, F.col(id_col).alias("id"),
                         F.explode(F.array_distinct(
                             F.split(_norm_text(text_col), WS_SPLIT))).alias("tok")))
@@ -549,9 +538,9 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     # scan (chain gate; no-op for streaming/multi-split/small inputs;
     # values are per-row, repartition-trivial).
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     docs = widen_if_narrow(docs.select(id_col, text_col),
-                           min_bytes=chain_min_bytes())
+                           min_bytes=CHAIN_MIN_BYTES)
     return (docs
             .select(F.col(id_col),
                     _norm_text(F.coalesce(F.col(text_col), F.lit("")))
@@ -597,9 +586,9 @@ def winnow_fingerprint_rows(docs: DataFrame, text_col: str = "text",
     # scan so it does not serialize (same gate/no-op policy as the
     # array form; the downstream windows re-hash by doc_id regardless).
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     docs = widen_if_narrow(docs.select(id_col, text_col),
-                           min_bytes=chain_min_bytes())
+                           min_bytes=CHAIN_MIN_BYTES)
     staged = docs.select(
         F.col(id_col),
         _norm_text(F.coalesce(F.col(text_col), F.lit(""))).alias("__s"))

@@ -136,9 +136,9 @@ def ngram_contamination(docs: DataFrame, probes: DataFrame,
     outer-join null with 0). The gram fold is chain-weight map work —
     widened when the scan is narrow (no-op at scale / small sf)."""
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     docs = widen_if_narrow(docs.select(doc_id, text_col),
-                           min_bytes=chain_min_bytes())
+                           min_bytes=CHAIN_MIN_BYTES)
     doc_grams = (docs.select(F.col(doc_id),
                              F.explode(F.array_distinct(
                                  shingles(text_col, n))).alias("g"))

@@ -423,9 +423,9 @@ def lsh_banded_near_dup(embeddings: DataFrame, dim: int,
     # every downstream consumer joins or aggregates, so values are
     # repartition-insensitive).
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     embeddings = widen_if_narrow(embeddings.select(id_col, vec_col),
-                                 min_bytes=chain_min_bytes())
+                                 min_bytes=CHAIN_MIN_BYTES)
     bands = band_bucket_exprs(vec_col, dim, n_bands, planes_per_band, seed)
     sig = embeddings.select(
         F.col(id_col),
@@ -522,9 +522,9 @@ def semdedup(embeddings: DataFrame, centroids: Sequence[Sequence[float]],
     # prescribes; eviction degrades to recomputation, never a spill.
     from data_services_spark.functions.cache import persist_slot
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     embeddings = widen_if_narrow(embeddings.select(id_col, vec_col),
-                                 min_bytes=chain_min_bytes())
+                                 min_bytes=CHAIN_MIN_BYTES)
     dots = F.array(*[
         dot_product(F.col(vec_col), F.array(*[F.lit(x) for x in c]))
         for c in centroids])
@@ -810,10 +810,10 @@ def nearest_within_group(embeddings: DataFrame, group_col: str = "label",
     """
     from data_services_spark.functions.vectors import l2_norm
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     probe = widen_if_narrow(
         embeddings.select(group_col, id_col, vec_col),
-        min_bytes=chain_min_bytes())
+        min_bytes=CHAIN_MIN_BYTES)
     a = probe.select(F.col(group_col).alias("g"),
                      F.col(id_col).alias("vec_id"),
                      F.col(vec_col).alias("va"),

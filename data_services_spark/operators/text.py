@@ -270,7 +270,7 @@ def repetition_score(docs: DataFrame, text_col: str = "text",
     """
     from data_services_spark.operators.dedup import shingles
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     grams = shingles(text_col, n)
     n_grams = F.size(grams).cast("long")
     n_distinct = F.size(F.array_distinct(grams)).cast("long")
@@ -278,7 +278,7 @@ def repetition_score(docs: DataFrame, text_col: str = "text",
     # chain-weight work — widen a narrow scan (no-op for streaming /
     # multi-split / small inputs; output is per-row, order-free).
     docs = widen_if_narrow(docs.select("doc_id", text_col),
-                           min_bytes=chain_min_bytes())
+                           min_bytes=CHAIN_MIN_BYTES)
     return docs.select(
         "doc_id",
         n_grams.alias("n_grams"),

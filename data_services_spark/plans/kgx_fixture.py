@@ -137,11 +137,12 @@ def kgx_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan has >= cores splits and the guard no-ops; at sf0.01 the
     1.02 MB input is under the 2 MB gate, so pinned small-sf plans
     keep their single exchange."""
-    from data_services_spark.plans.widen import widen_by_key
+    from data_services_spark.plans.widen import widen_if_narrow
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_partkey", "l_suppkey",
         "l_linenumber")
-    return spark.sql(_KGX_EDGES_SPARK, lineitem=widen_by_key(li, "l_orderkey"))
+    return spark.sql(_KGX_EDGES_SPARK,
+                     lineitem=widen_if_narrow(li, "l_orderkey"))
 
 
 KGX_EDGES_SQL = """

@@ -1,7 +1,6 @@
 """Analyzed-plan rebuild memo — the driver-floor device (round 14,
 r13 VERDICT ask #6, guide §5 "the driver should do almost no data
-work" extended to plan construction, the same memo pattern as
-widen._NPARTS_MEMO).
+work" extended to plan construction).
 
 bench.py times RAW_QUERIES, which must return a FRESH DataFrame per
 call so every execution pays full scan + shuffle + fetch (a memoized
@@ -37,9 +36,9 @@ lazy_build=True)``) and restricted to PURE-LAZY builders:
 - no closures over values computed FROM the input at build time.
 
 Staleness (the r13 ADVICE discipline): the key carries applicationId +
-defaultParallelism (never a GC-aliasable py4j wrapper id), sf_dir, the
-env knobs the builders read (widen/rebalance gates, derive
-partitions), and the split confs; the stored entry additionally
+defaultParallelism (never a GC-aliasable py4j wrapper id), sf_dir and
+the split confs; the layout gates are module constants
+(plans/widen.py), fixed for the process. The stored entry additionally
 records (size, mtime_ns) of every input file and re-stats them on
 every hit — an in-place rewrite of the test data invalidates the
 entry instead of serving a stale file-index snapshot. Plans whose
@@ -53,30 +52,37 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_services_spark.plans.widen import (
-    _local_file_stats, _SPLIT_CONF_KEYS,
-)
+from data_services_spark.plans.widen import _local_path
 
-# Env knobs whose values the lazy builders bake into the plan shape
-# (widen/rebalance decisions, the derive-layout escape hatch). Read at
-# key time so flipping one between calls rebuilds instead of serving
-# the old shape.
-_PLAN_ENV_KEYS = (
-    "SPARK_GRAFT_WIDEN_MIN_BYTES",
-    "SPARK_GRAFT_CHAIN_WIDEN_MIN_BYTES",
-    "SPARK_GRAFT_REBALANCE_MAX_BYTES",
-    "SPARK_GRAFT_DERIVE_PARTITIONS",
-)
+# Confs that set a scan's split count, and with it the widen decision.
+_SPLIT_CONF_KEYS = ("spark.sql.files.maxPartitionBytes",
+                    "spark.sql.files.openCostInBytes",
+                    "spark.sql.files.minPartitionNum")
 
 # key -> (analyzed jplan, sorted input files, (size, mtime_ns) per file)
 _MEMO: dict[tuple, tuple] = {}
+
+
+def _local_file_stats(files: list[str]) -> tuple | None:
+    """(size, mtime_ns) per input file, or None when any file is not
+    locally stat-able — those plans are never memoized."""
+    stats = []
+    for uri in files:
+        path = _local_path(uri)
+        if path is None:
+            return None
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        stats.append((st.st_size, st.st_mtime_ns))
+    return tuple(stats)
 
 
 def _memo_key(spark: SparkSession, name: str, sf_dir: str) -> tuple:
     sc = spark.sparkContext
     conf = spark.conf
     return (sc.applicationId, sc.defaultParallelism, name, sf_dir,
-            tuple(os.environ.get(k) for k in _PLAN_ENV_KEYS),
             tuple(conf.get(k, None) for k in _SPLIT_CONF_KEYS))
 
 

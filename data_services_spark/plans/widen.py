@@ -1,66 +1,67 @@
-"""Narrow-scan widening guard (round-12; the r11 verdict's What's-wrong
-#1): serial per-row chains — the BPE replace chain, the crawl regex
-stack, Arrow mapInPandas kernels — are map-only and ride the scan at
-cluster scale, but ONLY when input splits >= cores. A single parquet
-file under ``spark.sql.files.maxPartitionBytes`` is one split, so at
-local sf1 the ~90-pass chain ran on 1 of 32 cores (424s Spark vs
-111.6s DuckDB, BASELINE_EXACT_sf1.json). One cheap round-robin
-shuffle of the slim pre-chain projection buys cores-wide parallelism
-on exactly the inputs where the chain dominates.
+"""Local-layout policy: the one place that decides when a plan pays an
+explicit shuffle purely for task parallelism.
 
-Policy (why both conditions):
+Every device here exists for one layout fact: a local parquet file
+under ``spark.sql.files.maxPartitionBytes`` with one row group is ONE
+split, so a serial per-row chain over it (the BPE replace chain, the
+crawl regex stack, Arrow mapInPandas kernels) runs on one core, and
+AQE's byte-based coalescing collapses a small shuffle to one task. At
+real scale (many files/row groups, non-local storage) the size gates
+below are OFF and the plans keep Spark's own split and AQE sizing.
 
-- ``partitions < defaultParallelism`` — if the scan already yields
-  >= cores splits (any real multi-file/multi-row-group dataset, and
-  any 100 TB table), widening is a no-op shuffle: skip it.
-- input size >= ``min_bytes`` (default 2 MB, env-overridable via
-  SPARK_GRAFT_WIDEN_MIN_BYTES) — sub-second small-sf runs keep their
-  pinned 0-exchange map-only plans (the shuffle would cost more than
-  it saves, and the plan-guard suite pins those shapes). When the
-  input size cannot be determined (non-local URIs — object stores,
-  HDFS), the guard WIDENS: splits < cores under a serial chain is
-  always worth one bounded shuffle at cluster scale.
+Two batch helpers, size-gated on the plan's own input files:
+
+- :func:`widen_if_narrow` — repartition a scan to the core count iff
+  its input is at least ``min_bytes`` (unknown size counts as large)
+  AND it yields fewer splits than cores. No keys: round-robin; keys:
+  hash partitioning, which skips the keyless form's serial
+  sort-before-repartition and is reused by a downstream groupBy/join
+  on a key superset.
+- :func:`rebalance_if_small` — pin a cores-wide ``repartition`` before
+  (keyed) or after a small shuffle iff the input is at most
+  ``REBALANCE_MAX_BYTES``. ``repartition(n)`` is REPARTITION_BY_NUM,
+  which AQE never re-coalesces; unknown or large inputs keep AQE sizing.
+
+Three constants decide every plan:
+
+- ``WIDEN_MIN_BYTES`` (2 MB): default widen gate — sub-second small-sf
+  runs keep their pinned 0-exchange map-only plans.
+- ``CHAIN_MIN_BYTES`` (128 KB): widen gate for per-input-byte-heavy
+  chains (~150 passes per byte: BPE chain, hash fan-outs, Arrow
+  kernels). Measured r13 at sf0.1 (584 KB documents): chain serial
+  1.66 s -> 0.27 s widened; sf0.01 (65 KB) stays under it.
+- ``REBALANCE_MAX_BYTES`` (64 MB): rebalance gate.
+
+:func:`stream_chain_widen` is the streaming twin of the chain gate for
+file-source streams (the split probe cannot see a streaming plan).
 """
 
 from __future__ import annotations
 
+import math
 import os
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
-DEFAULT_MIN_BYTES = 2 * 1024 * 1024
-
-# Gate for call sites whose per-INPUT-byte post-scan work is 1-2 orders
-# of magnitude above a plain projection — the ~50-pass BPE replace chain
-# (each pass rescans the 3x-expanded delimited text) and the Arrow
-# tokenizer kernel. The widen trade is shuffle O(bytes) vs serial chain
-# O(bytes x passes); with passes ~ 150 the break-even input is ~150x
-# smaller than the default gate's. Measured (r13, sf0.1 584 KB
-# documents): chain serial 1.66 s -> 0.27 s widened; the round-robin
-# shuffle of the slim (id, text) projection costs ~ms. sf0.01 (65 KB)
-# stays under this gate, so the pinned 0-exchange small-sf plans hold.
+WIDEN_MIN_BYTES = 2 * 1024 * 1024
 CHAIN_MIN_BYTES = 128 * 1024
-_CHAIN_ENV = "SPARK_GRAFT_CHAIN_WIDEN_MIN_BYTES"
+REBALANCE_MAX_BYTES = 64 * 1024 * 1024
 
 
-def chain_min_bytes() -> int:
-    """Env-resolved gate for heavy-chain call sites (read at call time).
-
-    Precedence (round 14, r13 ADVICE): the chain-specific
-    $SPARK_GRAFT_CHAIN_WIDEN_MIN_BYTES wins outright when set;
-    otherwise the generic $SPARK_GRAFT_WIDEN_MIN_BYTES applies in BOTH
-    directions — an operator raising the generic gate to suppress
-    widening globally (the documented way to keep pinned plans) now
-    suppresses chain-site widens too, and the force-the-widen-on
-    test/ops low override keeps working as before."""
-    chain = os.environ.get(_CHAIN_ENV)
-    if chain is not None:
-        return int(chain)
-    generic = os.environ.get("SPARK_GRAFT_WIDEN_MIN_BYTES")
-    if generic is not None:
-        return int(generic)
-    return CHAIN_MIN_BYTES
+def _local_path(uri: str) -> str | None:
+    """Local filesystem path of an input-file URI, or None when the
+    file is not stat-able from this driver (remote storage, or a
+    ``file:`` URI with a non-local authority). Percent-escapes are
+    decoded for URIs only; a bare path is returned unchanged."""
+    if uri.startswith("file:"):
+        parsed = urlparse(uri)
+        if parsed.netloc not in ("", "localhost"):
+            return None
+        return unquote(parsed.path)
+    if "://" not in uri:
+        return uri
+    return None
 
 
 def _input_bytes(df: DataFrame) -> int | None:
@@ -72,21 +73,9 @@ def _input_bytes(df: DataFrame) -> int | None:
         return None
     total = 0
     for uri in files:
-        if uri.startswith("file:"):
-            # r12 ADVICE: proper URI parsing — file://host/p would
-            # mis-strip to /host/p under prefix surgery, and percent-
-            # escaped paths (spaces) would stat-fail into the
-            # unknown-size branch. urlparse keeps the authority out of
-            # the path; a non-local authority means the file is not
-            # stat-able from this driver.
-            parsed = urlparse(uri)
-            if parsed.netloc not in ("", "localhost"):
-                return None
-            path = unquote(parsed.path)
-        elif "://" not in uri:
-            path = uri  # bare path, not a URI: no percent-decoding
-        else:
-            return None  # remote storage: size unknown here
+        path = _local_path(uri)
+        if path is None:
+            return None
         try:
             total += os.path.getsize(path)
         except OSError:
@@ -94,226 +83,55 @@ def _input_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def rebalance_if_small(df: DataFrame, source: DataFrame,
-                       max_bytes: int | None = None) -> DataFrame:
-    """Round-robin repartition to cores AFTER a shuffle-producing
-    stage, gated on the SOURCE scan being SMALL (default <= 64 MB,
-    env SPARK_GRAFT_REBALANCE_MAX_BYTES).
+def widen_if_narrow(df: DataFrame, *keys: str,
+                    min_bytes: int = WIDEN_MIN_BYTES) -> DataFrame:
+    """Repartition ``df`` to ``defaultParallelism`` (on ``keys`` when
+    given) iff its input is not known to be under ``min_bytes`` and
+    the scan is narrower than the core count. Returns ``df`` unchanged
+    otherwise, and always for a streaming plan.
 
-    The inverse gate of :func:`widen_if_narrow`, for the stage AFTER
-    a groupBy: AQE's coalescing is byte-based (advisory /
-    minPartitionSize), so a tiny shuffle output collapses to one
-    task — correct when the downstream is cheap, serializing when it
-    carries a heavy per-row chain (measured: crawl_ingest's
-    synth+extract+classifier stages all ran 1-task at sf0.1, the
-    whole post-dedup pipeline on one core). At bench scale the extra
-    explicit exchange costs ~ms and buys cores-wide parallelism; at
-    real scale the gate is OFF (input unknown or large) and AQE's own
-    sizing already yields wide stages — the explicit shuffle would be
-    a pure corpus-sized waste, which is why this is size-gated rather
-    than unconditional. ``repartition(n)`` with an explicit count is
-    REPARTITION_BY_NUM, which AQE never re-coalesces."""
-    if max_bytes is None:
-        max_bytes = int(os.environ.get("SPARK_GRAFT_REBALANCE_MAX_BYTES",
-                                       64 * 1024 * 1024))
-    size = _input_bytes(source)
-    if size is None or size > max_bytes:
-        return df
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(cores)
-
-
-def keyed_rebalance_if_small(df: DataFrame, *cols: str,
-                             max_bytes: int | None = None) -> DataFrame:
-    """Pinned-count KEYED repartition before a window/aggregation, gated
-    on the source scan being SMALL (same gate as
-    :func:`rebalance_if_small`).
-
-    The window operator requires ClusteredDistribution on its partition
-    key; a plain hash exchange satisfies it, but AQE's byte-based
-    coalescing then collapses the small shuffle to 1-2 tasks and the
-    whole window compute serializes (measured r13: window_running_sum's
-    3-window stage ran 1-task at sf0.1 under the 4 MB advisory —
-    0.31 s -> 0.20 s with the pinned count). ``repartition(n, keys)``
-    is REPARTITION_BY_NUM: AQE never re-coalesces it, and the window
-    reuses its partitioning, so the exchange COUNT is unchanged — only
-    the task count. At real scale the gate is OFF (input large or
-    unknown) and AQE's own sizing already yields wide stages; a pinned
-    cores-sized count there would be exactly the local-mode constant
-    the bench rules forbid."""
-    if max_bytes is None:
-        max_bytes = int(os.environ.get("SPARK_GRAFT_REBALANCE_MAX_BYTES",
-                                       64 * 1024 * 1024))
-    size = _input_bytes(df)
-    if size is None or size > max_bytes:
-        return df
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(cores, *cols)
-
-
-# Memo for the scan-partition probe (round 13, guide §1/§5 driver
-# work): ``df.rdd.getNumPartitions()`` runs full physical planning +
-# RDD conversion — measured 38 ms per FRESH plan build vs 0.7 ms for
-# ``inputFiles()``. For a BARE SCAN the partition count is a pure
-# function of (file set + sizes/mtimes, split confs, core count) — so
-# one probe per key is exact and every later fresh build of the same
-# input skips the planning pass. Round 14 (r13 ADVICE, medium): the
-# memo is now written ONLY from bare scan/projection plans — a derived
-# plan (post-exchange/aggregate, e.g. corpus_curate's persisted window
-# output) has the same inputFiles() as the plain scan but a partition
-# count set by its shuffle, and memoizing it under the file key made
-# every later plain scan of the same table skip its widen (or
-# vice-versa). Derived and non-file plans take the direct probe,
-# un-memoized. The key carries file sizes+mtimes (stale-proof against
-# in-place rewrites) and applicationId+parallelism instead of the py4j
-# wrapper id (which can alias after GC).
-_NPARTS_MEMO: dict[tuple, int] = {}
-_SPLIT_CONF_KEYS = ("spark.sql.files.maxPartitionBytes",
-                    "spark.sql.files.openCostInBytes",
-                    "spark.sql.files.minPartitionNum")
-
-# Analyzed-plan node names that cannot change a scan's partitioning.
-_BARE_SCAN_NODES = ("Project", "Filter", "SubqueryAlias", "Relation",
-                    "LogicalRelation", "View")
-
-
-def _is_bare_scan(df: DataFrame) -> bool:
-    """True iff every node of the analyzed logical plan is a
-    projection/filter/alias over a relation — i.e. the physical
-    partition count is the SCAN's, a pure function of files + split
-    confs. Anything else (Repartition, Aggregate, Join, Window, Union,
-    Generate, InMemoryRelation, ...) disqualifies the plan from the
-    partition memo."""
-    try:
-        tree = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-    for line in tree.splitlines():
-        name = line.lstrip(" :+-").split(" ", 1)[0].split("[", 1)[0]
-        if name and not any(name.startswith(n) for n in _BARE_SCAN_NODES):
-            return False
-    return True
-
-
-def _local_file_stats(files: list[str]) -> tuple | None:
-    """(size, mtime_ns) per input file, or None when any file is not
-    locally stat-able — those plans skip the memo (one 38 ms probe on
-    a real deployment is noise; a stale memo is not)."""
-    stats = []
-    for uri in files:
-        if uri.startswith("file:"):
-            parsed = urlparse(uri)
-            if parsed.netloc not in ("", "localhost"):
-                return None
-            path = unquote(parsed.path)
-        elif "://" not in uri:
-            path = uri
-        else:
-            return None
-        try:
-            st = os.stat(path)
-        except OSError:
-            return None
-        stats.append((st.st_size, st.st_mtime_ns))
-    return tuple(stats)
-
-
-def _scan_partitions(df: DataFrame) -> int:
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if not files:
-        return df.rdd.getNumPartitions()
-    ordered = tuple(sorted(files))
-    stats = _local_file_stats(list(ordered))
-    if stats is None or not _is_bare_scan(df):
-        return df.rdd.getNumPartitions()
-    sc = df.sparkSession.sparkContext
-    conf = df.sparkSession.conf
-    key = (sc.applicationId, sc.defaultParallelism, ordered, stats,
-           tuple(conf.get(k, None) for k in _SPLIT_CONF_KEYS))
-    n = _NPARTS_MEMO.get(key)
-    if n is None:
-        n = _NPARTS_MEMO[key] = df.rdd.getNumPartitions()
-    return n
-
-
-def widen_if_narrow(df: DataFrame, min_bytes: int | None = None
-                    ) -> DataFrame:
-    """Repartition ``df`` to ``defaultParallelism`` iff the scan is
-    narrower than the core count AND the input is big enough that a
-    serial chain over it dominates the shuffle cost (module policy).
-    Returns ``df`` unchanged otherwise — small-sf plan pins hold."""
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("SPARK_GRAFT_WIDEN_MIN_BYTES",
-                                       DEFAULT_MIN_BYTES))
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    # r12 ADVICE: the rdd bridge is meaningless for a streaming plan —
-    # check explicitly instead of a bare except that would also swallow
-    # genuine analysis errors (those should surface at first use, not
-    # silently skip the widen).
+    The cheap byte gate runs first; the ``.rdd`` partition probe
+    (full physical planning, ~38 ms) runs only past it. Keys must be
+    high-cardinality (far more distinct values than cores) so the
+    hash buckets stay balanced."""
     if df.isStreaming:
-        return df
-    nparts = _scan_partitions(df)
-    if nparts >= cores:
         return df
     size = _input_bytes(df)
     if size is not None and size < min_bytes:
         return df
-    return df.repartition(cores)
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= cores:
+        return df
+    return df.repartition(cores, *keys)
 
 
-def widen_by_key(df: DataFrame, *cols: str,
-                 min_bytes: int | None = None) -> DataFrame:
-    """KEYED variant of :func:`widen_if_narrow` — same gates (narrow
-    scan, byte floor, streaming-safe), but ``repartition(cores, *cols)``
-    instead of round-robin. Two measured wins (round 14, guide
-    §2.4/§2.5):
+def rebalance_if_small(df: DataFrame, *keys: str) -> DataFrame:
+    """Pinned cores-wide ``repartition`` (on ``keys`` when given) iff
+    ``df``'s input files total at most ``REBALANCE_MAX_BYTES``.
 
-    - a keyless ``repartition(n)`` first pays a LOCAL SORT of its input
-      (``spark.sql.execution.sortBeforeRepartition``, on by default so
-      retried tasks reproduce their row->partition assignment) — on the
-      one-task map side of a narrow scan that sort is serial. Hash
-      partitioning is deterministic per row by construction, so it
-      skips the sort entirely (measured: the widened slim lineitem scan
-      0.80 s round-robin -> ~0.45 s keyed at sf0.1);
-    - a downstream groupBy/join whose keys are a SUPERSET of ``cols``
-      reuses the exchange (ClusteredDistribution is satisfied by hash
-      partitioning on a key subset), deleting the aggregation's own
-      shuffle (kgx_edge_merge: 2 exchanges -> 1).
-
-    Balance caveat: the key must have far more distinct values than
-    cores (guide §2.5 synthetic-key note) — call sites pick a
-    high-cardinality natural key; duplicates of one key land together,
-    which is exactly what the downstream keyed operator needs anyway.
-    """
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("SPARK_GRAFT_WIDEN_MIN_BYTES",
-                                       DEFAULT_MIN_BYTES))
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    Keyless, after a shuffle: AQE byte-coalesces a tiny shuffle output
+    to one task, serializing a heavy downstream chain or every read
+    of a persisted result. Keyed, before a window/aggregation on the
+    same keys: the operator reuses the exchange, so the exchange count
+    is unchanged and only the task count grows. Returns ``df``
+    unchanged for a streaming plan and for large or unknown inputs,
+    where AQE's own sizing already yields wide stages."""
     if df.isStreaming:
         return df
-    nparts = _scan_partitions(df)
-    if nparts >= cores:
-        return df
     size = _input_bytes(df)
-    if size is not None and size < min_bytes:
+    if size is None or size > REBALANCE_MAX_BYTES:
         return df
-    return df.repartition(cores, *cols)
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(cores, *keys)
 
 
 def dir_data_file_sizes(source_dir: str) -> list[int] | None:
     """Sizes of the DATA files under ``source_dir``, recursively, or
-    None when the dir is not locally listable. Round 14 (r13 ADVICE):
-    the previous non-recursive listdir+getsize counted a Spark-written
-    nested partition subdirectory as its inode size (~4 KB), so large
-    dirs could be misclassified as small. Walks the tree, sums only
-    regular files, and skips dot/underscore metadata entries
+    None when the dir is not locally listable. Walks the tree, sums
+    only regular files, and skips dot/underscore metadata entries
     (_spark_metadata, _SUCCESS, .crc) at every level — the same files
-    Spark's own file index ignores."""
+    Spark's own file index ignores — so a nested partition subdirectory
+    is never counted as its inode size."""
     def _raise(err):  # os.walk swallows errors by default; a partial
         raise err      # walk must not masquerade as a small dir
 
@@ -337,30 +155,23 @@ def dir_data_file_sizes(source_dir: str) -> list[int] | None:
 
 
 def stream_chain_widen(spark, source_dir: str) -> int | None:
-    """Streaming twin of :func:`widen_if_narrow`'s chain gate, for
-    file-source streams whose micro-batch parallelism follows the
-    landing dir's file splits (the .rdd probe cannot see a streaming
-    plan). Returns the partition count to ``repartition`` the stream
-    to — ``defaultParallelism`` — when ALL of:
+    """Streaming twin of the chain gate, for file-source streams whose
+    micro-batch parallelism follows the landing dir's file splits.
+    Returns the partition count to ``repartition`` the stream to —
+    ``defaultParallelism`` — when ALL of:
 
     - the landing dir is locally stat-able (object stores return None:
-      the caller leaves the stream alone, exactly the widen guard's
-      unknown-size posture inverted — here an unknown source means a
-      real deployment whose landing dir yields many splits per batch);
-    - its bytes clear the chain gate (tiny drains keep their pinned
-      no-shuffle plans);
+      an unknown source means a real deployment whose landing dir
+      yields many splits per batch, so the stream is left alone);
+    - its bytes clear ``CHAIN_MIN_BYTES`` (tiny drains keep their
+      pinned no-shuffle plans);
     - the estimated split count (per-file ceil(bytes/maxPartitionBytes))
-      is below the core count — when the dir already splits >= cores
-      wide, the explicit shuffle would be the pure corpus-sized waste
-      the batch guard also refuses.
+      is below the core count.
     """
-    import math
-
     sizes = dir_data_file_sizes(source_dir)
     if sizes is None:
         return None
-    total = sum(sizes)
-    if total < chain_min_bytes():
+    if sum(sizes) < CHAIN_MIN_BYTES:
         return None
     try:
         mpb = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))

@@ -52,22 +52,6 @@ RAW_QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def _derive_repartition(df: DataFrame) -> DataFrame:
-    """Local-layout escape hatch for the CPU-bound hash/fingerprint
-    folds (round-10, closing the r9 sf1 budget gap): when
-    ``SPARK_GRAFT_DERIVE_PARTITIONS`` is set, repartition the corpus
-    BEFORE the fold so its parallelism is not capped by the input
-    split count — a local-file artifact (the sf1 parquet arrives as
-    1-2 splits; SCALE.md measured 6.3x from 32-way repartitioning,
-    round 9). Leave unset on cluster layouts, where thousands of
-    input splits already exist and the extra raw-text shuffle is pure
-    cost. Every consumer is repartition-stable by pinned contract, so
-    the knob can never change values — only task layout."""
-    import os
-    n = os.environ.get("SPARK_GRAFT_DERIVE_PARTITIONS")
-    return df.repartition(int(n)) if n else df
-
-
 def _bpe_frag():
     from data_services_spark.operators.bpe import bpe_sql
     return bpe_sql("text")
@@ -91,7 +75,7 @@ def register(name: str, sql: str | None = None, cache_plan: bool = True,
     analyzed tree in a brand-new Dataset, so every execution still
     re-reads parquet and re-shuffles in full while the pure driver
     constant (py4j tree construction + Catalyst analysis + widen
-    probes) is paid once per (session, sf_dir, knobs, file stats)."""
+    probes) is paid once per (session, sf_dir, split confs, file stats)."""
     def deco(fn: QueryFn) -> QueryFn:
         def building(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Round 14 (r13 ADVICE): a fresh query build releases every
@@ -834,8 +818,8 @@ def kgx_edge_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the transform, so '|'-join order is byte-identical to the oracle's
     list_sort (measured: 2.26 s -> 1.25 s warm noop in-session at
     sf0.1; full-row parity verified at sf0.01/sf0.1)."""
-    from data_services_spark.plans.widen import widen_by_key
-    li = widen_by_key(
+    from data_services_spark.plans.widen import widen_if_narrow
+    li = widen_if_narrow(
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_partkey", "l_suppkey",
             "l_linenumber"),
@@ -998,8 +982,8 @@ def kgx_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     string per output group is built after the aggregate. The keyed
     widen's hash exchange is reused by the distinct (l_orderkey is a
     distinct key). Oracle-verified at sf0.01/sf0.1."""
-    from data_services_spark.plans.widen import widen_by_key
-    li = widen_by_key(
+    from data_services_spark.plans.widen import widen_if_narrow
+    li = widen_if_narrow(
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_partkey"),
         "l_orderkey")
@@ -1368,14 +1352,14 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 13 (guide §2.5 task-layout): the window's hash exchange is
     byte-coalesced by AQE to 1-2 tasks at bench scale (the events
     shuffle is ~3 MB under the 4 MB advisory), serializing the
-    3-window sort+compute. keyed_rebalance_if_small pins the exchange
+    3-window sort+compute. A keyed rebalance_if_small pins the exchange
     to a cores-wide REPARTITION_BY_NUM on the SAME key, which the
     window reuses — still exactly one exchange, identical values
     (per-user_id computation is partition-local either way), measured
     0.31 s -> 0.20 s noop at sf0.1. Size-gated: large/unknown inputs
     keep the plain hash exchange and AQE sizing (plans/widen.py)."""
-    from data_services_spark.plans.widen import keyed_rebalance_if_small
-    e = keyed_rebalance_if_small(
+    from data_services_spark.plans.widen import rebalance_if_small
+    e = rebalance_if_small(
         load_table(spark, sf_dir, "events"), "user_id")
     return spark.sql("""
 SELECT event_id, user_id,
@@ -1890,8 +1874,7 @@ def winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints) — MOSS-style matching at LSH-band cost, never
     all-pairs. The max_df stop-fingerprint cap (mirrored in the oracle)
     bounds every bucket's quadratic contribution."""
-    d = _derive_repartition(
-        load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     return winnow_shared_pairs(d, k=_WIN_K, window=_WIN_W, min_shared=2,
                                max_df=_WIN_MAXDF)
 
@@ -1943,8 +1926,7 @@ def winnow_clone_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster by definition)."""
     from data_services_spark.functions.cache import persist_slot
     from data_services_spark.operators.components import dedup_clusters
-    d = _derive_repartition(
-        load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     pairs = winnow_shared_pairs(d, k=_WIN_K, window=_WIN_W,
                                 min_shared=2, max_df=_WIN_MAXDF) \
         .select("id_a", "id_b")
@@ -2094,8 +2076,7 @@ def minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable md5-derived hash family — LSH is deterministic once the
     family is fixed, so the oracle reproduces every candidate pair and
     signature-estimated Jaccard bit-for-bit (16 hashes, 4 bands)."""
-    d = _derive_repartition(
-        load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     return (minhash_lsh_pairs(d, num_hashes=_MH_N, bands=_MH_BANDS,
                               hash_family="md5")
             .select("id_a", "id_b", "est_jaccard"))
@@ -2144,8 +2125,7 @@ def near_dup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploding at scale). Exactly oracle-checked end to end via the md5
     hash family."""
     from data_services_spark.operators.dedup import verify_jaccard
-    d = _derive_repartition(
-        load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     cand = minhash_lsh_pairs(d, num_hashes=_MH_N, bands=_MH_BANDS,
                              hash_family="md5")
     return verify_jaccard(d, cand, threshold=0.8)
@@ -2749,14 +2729,14 @@ def bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_services_spark.operators.bpe import bpe_norm, bpe_token_count
     from data_services_spark.operators.text import lang_id
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     # round 12: the per-row chain rides the scan — widen a 1-split
     # large input so it does not serialize on one core (plans/widen.py).
     # round 13: chain-weighted gate (the replace chain's per-byte cost
     # is ~150x a plain map — see widen.CHAIN_MIN_BYTES).
     d = widen_if_narrow(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        min_bytes=chain_min_bytes())
+        min_bytes=CHAIN_MIN_BYTES)
     norm = bpe_norm("text")
     nw = F.when(F.length(norm) == 0, F.lit(0)).otherwise(
         F.size(F.split(norm, " "))).cast("long")
@@ -3283,14 +3263,14 @@ def crawl_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         url_domain,
     )
     from data_services_spark.plans.widen import (
-        keyed_rebalance_if_small, widen_by_key,
+        rebalance_if_small, widen_if_narrow,
     )
     # widen guard (round 12; keyed since round 14 — hash on the unique
     # doc_id skips the keyless repartition's serial map-side sort): the
     # pre-shuffle half (URL synth + canonicalization regexes) runs on
     # the scan's splits — a 1-split sf1 file would serialize it on one
     # core
-    d = widen_by_key(
+    d = widen_if_narrow(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         "doc_id")
     half = F.floor(F.col("doc_id") / F.lit(2)).cast("long")
@@ -3308,7 +3288,7 @@ def crawl_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange fewer (measured: 0.75 -> 0.55 s fresh in-session).
     # Size-gated exactly like the old form: real-scale plans keep the
     # groupBy's own AQE-sized exchange and never pay a pinned count.
-    canon = keyed_rebalance_if_small(canon, "curl")
+    canon = rebalance_if_small(canon, "curl")
     surv = canon.groupBy("curl").agg(
         F.min("doc_id").alias("doc_id"),
         F.min_by("text", "doc_id").alias("text"),
@@ -3719,8 +3699,8 @@ def record_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     CURIEs, no string is ever built per row, and the 3 output strings
     are built once per GROUP (measured: 1.11 s -> see
     OPTIMIZATION_r14.md). Values oracle-verified at sf0.01/sf0.1."""
-    from data_services_spark.plans.widen import widen_by_key
-    li = widen_by_key(
+    from data_services_spark.plans.widen import widen_if_narrow
+    li = widen_if_narrow(
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_suppkey"),
         "l_orderkey")
@@ -4710,8 +4690,7 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_services_spark.operators.dedup import verify_jaccard
     from data_services_spark.operators.sampling import source_mixture_sample
     from data_services_spark.operators.text import tokenize
-    d = _derive_repartition(
-        load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     n_tok = F.size(tokenize("text"))
     qual = (d.filter(
                 (n_tok >= 5)
@@ -4733,8 +4712,7 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CURATE_EXACT_CACHE,
         rebalance_if_small(
             qual.withColumn("keeper", F.min("doc_id").over(keyw))
-            .filter(F.col("doc_id") == F.col("keeper")).drop("keeper"),
-            source=d))
+            .filter(F.col("doc_id") == F.col("keeper")).drop("keeper")))
     cand = minhash_lsh_pairs(exact, num_hashes=_MH_N, bands=_MH_BANDS,
                              hash_family="md5")
     pairs = persist_slot(
@@ -5022,13 +5000,13 @@ def vocab_topk_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort."""
     from data_services_spark.operators.bpe import bpe_subwords
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     # round 12: the segmentation chain runs map-side BEFORE the
     # groupBy — widen a 1-split large input (plans/widen.py);
     # round 13: chain-weighted gate (see widen.CHAIN_MIN_BYTES).
     d = widen_if_narrow(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        min_bytes=chain_min_bytes())
+        min_bytes=CHAIN_MIN_BYTES)
     return (d.select(F.explode(bpe_subwords("text")).alias("token"))
             .groupBy("token").agg(F.count(F.lit(1)).alias("n"))
             .orderBy(F.desc("n"), "token").limit(100))
@@ -5465,13 +5443,13 @@ def doc_chunks_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_services_spark.operators.bpe import bpe_subwords
     from data_services_spark.operators.text import chunk_documents
     from data_services_spark.plans.widen import (
-        chain_min_bytes, widen_if_narrow)
+        CHAIN_MIN_BYTES, widen_if_narrow)
     # round 12: the segmentation chain evaluates inside the chunk
     # explode — widen a 1-split large input (plans/widen.py);
     # round 13: chain-weighted gate (see widen.CHAIN_MIN_BYTES).
     d = widen_if_narrow(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        min_bytes=chain_min_bytes())
+        min_bytes=CHAIN_MIN_BYTES)
     return chunk_documents(d, chunk_tokens=64, stride=48,
                            tokens=bpe_subwords("text"))
 
@@ -6563,8 +6541,7 @@ def fuzzy_dedup_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs' fixed 30-char prefixes. Same propose→verify composition the
     Jaccard capstone uses, with edit distance as the verifier — the md5
     hash family makes the whole pipeline exactly oracle-checkable."""
-    d = _derive_repartition(
-        load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     cand = minhash_lsh_pairs(d, num_hashes=_MH_N, bands=_MH_BANDS,
                              hash_family="md5").select("id_a", "id_b")
     pref = d.select(

@@ -112,26 +112,19 @@ def stream_interval_join(views: DataFrame, purchases: DataFrame,
 # (local landing dirs), cap at the session conf, and DO NOTHING when
 # the size is unknown (object stores / real deployments, where the
 # session conf is already sized to the workload).
-_STATE_PARTS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
-_STATE_TARGET_ENV = "SPARK_GRAFT_STREAM_STATE_TARGET_BYTES"
-_STATE_TARGET_DEFAULT = 32 * 1024 * 1024
+STATE_TARGET_BYTES = 32 * 1024 * 1024
 
 
 def sized_state_partitions(spark: SparkSession,
                            source_dir: str) -> int | None:
     """Stateful-shuffle partition count sized to the local source dir:
-    ceil(bytes / $SPARK_GRAFT_STREAM_STATE_TARGET_BYTES [32 MiB]),
-    floored at 1 and capped at the session's shuffle-partition conf.
-    $SPARK_GRAFT_STREAM_STATE_PARTITIONS overrides outright. Returns
-    None — caller leaves the session conf alone — when the directory
-    is not locally stat-able (real deployments size the session conf
-    to the workload instead)."""
+    ceil(bytes / STATE_TARGET_BYTES [32 MiB]), floored at 4 and capped
+    at the session's shuffle-partition conf. Returns None — caller
+    leaves the session conf alone — when the directory is not locally
+    stat-able (real deployments size the session conf to the workload
+    instead)."""
     import math
-    import os
 
-    env = os.environ.get(_STATE_PARTS_ENV)
-    if env:
-        return int(env)
     # Round 14 (r13 ADVICE): recursive data-file walk — the flat
     # listdir counted nested partition subdirs as their ~4 KB inode
     # size, undercounting Spark-written landing dirs.
@@ -140,7 +133,6 @@ def sized_state_partitions(spark: SparkSession,
     if sizes is None:
         return None
     total = sum(sizes)
-    target = int(os.environ.get(_STATE_TARGET_ENV, _STATE_TARGET_DEFAULT))
     try:
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):  # "auto" on managed platforms
@@ -150,7 +142,7 @@ def sized_state_partitions(spark: SparkSession,
     # serialize compute-heavy operators (measured sf0.1: session
     # windows 3.3 s at 1 partition, 1.6 s at 4; interval join flat
     # 2.6-2.7 s across 1-4, 4.4 s at 8, 7.8 s at 32).
-    return min(cap, max(4, math.ceil(total / target)))
+    return min(cap, max(4, math.ceil(total / STATE_TARGET_BYTES)))
 
 
 def run_to_memory_sink(stream: DataFrame, name: str,

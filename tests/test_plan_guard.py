@@ -383,12 +383,14 @@ EXPECTED = {
                               exchanges_max=0, single_max=0, py=0),
     # round-9 ingest capstone: URL synth -> canonicalize -> exact-URL
     # dedup -> HTML synth -> extract -> classifier gate fuses into ONE
-    # scan and ONE+ONE exchanges — the first-wins dedup groupBy plus
-    # (round 12) the size-gated post-shuffle rebalance that stops AQE
-    # byte-coalescing from serializing the heavy synth/extract/
-    # classify chain on one task at bench scale (plans/widen.py:
-    # rebalance_if_small; OFF at real scale, so 100 TB plans keep the
-    # single dedup exchange). The min_by merge device carries
+    # scan and at most two exchanges — the keyed widen of the scan on
+    # doc_id (past its 2 MB gate) and the keyed rebalance on curl
+    # BEFORE the first-wins dedup groupBy, which reuses it instead of
+    # adding its own; the pinned count stops AQE byte-coalescing from
+    # serializing the heavy synth/extract/classify chain on one task
+    # at bench scale (plans/widen.py: rebalance_if_small; OFF at real
+    # scale, so 100 TB plans keep the groupBy's own AQE-sized
+    # exchange). The min_by merge device carries
     # text/domain through the shuffle so no stage needs a join, and
     # every other stage is map-side string algebra or a per-row fold.
     # Zero Python.

@@ -76,27 +76,6 @@ def test_plan_memo_invalidates_on_file_rewrite(spark, tmp_path):
     assert d3.count() == 5  # region rows, not stale nation plan
 
 
-def test_plan_memo_invalidates_on_widen_env_change(spark, monkeypatch):
-    """Plan-shaping env knobs are part of the key: flipping the widen
-    gate between calls must rebuild (the baked-in widen decision could
-    differ), not serve the previous shape."""
-    from data_services_spark.plans.plan_memo import rebuild_or_build
-
-    calls = []
-
-    def builder(s, sf):
-        calls.append(1)
-        return s.read.parquet(os.path.join(SF_DIR, "nation.parquet"))
-
-    monkeypatch.delenv("SPARK_GRAFT_WIDEN_MIN_BYTES", raising=False)
-    rebuild_or_build(spark, "memo_env_probe", SF_DIR, builder)
-    rebuild_or_build(spark, "memo_env_probe", SF_DIR, builder)
-    assert len(calls) == 1
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_MIN_BYTES", "1")
-    rebuild_or_build(spark, "memo_env_probe", SF_DIR, builder)
-    assert len(calls) == 2
-
-
 @pytest.mark.parametrize("name", [
     "q1_pricing_summary", "q3_shipping_priority", "kgx_edge_merge",
     "kgx_node_merge", "window_running_sum", "tumbling_window",

@@ -1383,26 +1383,22 @@ def test_stream_domain_cap_input_contract_and_one_status_per_key(
             [(1, NULL_DOMAIN)], SCHEMA), state_dir, 2, k=2)
 
 
-def test_sized_state_partitions_gate_and_drain_parity(spark, events_dir):
-    """Round 13: the stateful-shuffle sizing device. Contract: env
-    override wins outright; a non-stat-able dir returns None (leave
-    the session conf alone); the derived count is bytes/target floored
-    at 4 and capped by the session conf; and a drain under a pinned
-    count returns EXACTLY the rows of a default drain while restoring
-    the session conf afterwards."""
+def test_sized_state_partitions_gate_and_drain_parity(spark, events_dir,
+                                                     monkeypatch):
+    """Round 13: the stateful-shuffle sizing device. Contract: a
+    non-stat-able dir returns None (leave the session conf alone); the
+    derived count is bytes/STATE_TARGET_BYTES floored at 4 and capped
+    by the session conf; and a drain under a pinned count returns
+    EXACTLY the rows of a default drain while restoring the session
+    conf afterwards."""
     import math
     import os
 
+    from data_services_spark.streaming import events
     from data_services_spark.streaming.events import (
         sized_state_partitions, stream_tumbling_counts)
 
     assert sized_state_partitions(spark, "/nonexistent-dir-xyz") is None
-
-    os.environ["SPARK_GRAFT_STREAM_STATE_PARTITIONS"] = "7"
-    try:
-        assert sized_state_partitions(spark, events_dir) == 7
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_STATE_PARTITIONS"]
 
     size = sum(os.path.getsize(os.path.join(events_dir, f))
                for f in os.listdir(events_dir))
@@ -1410,6 +1406,10 @@ def test_sized_state_partitions_gate_and_drain_parity(spark, events_dir):
     want = min(cap, max(4, math.ceil(size / (32 * 1024 * 1024))))
     n = sized_state_partitions(spark, events_dir)
     assert n == want
+    # a target far below the dir size hits the session-conf cap
+    with monkeypatch.context() as m:
+        m.setattr(events, "STATE_TARGET_BYTES", 1)
+        assert sized_state_partitions(spark, events_dir) == cap
 
     conf_before = spark.conf.get("spark.sql.shuffle.partitions")
     stream = read_event_stream(spark, events_dir)

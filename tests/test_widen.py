@@ -1,11 +1,13 @@
-"""Narrow-scan widening guard (plans/widen.py, round 12 — the r11
-verdict's What's-wrong #1): the serial-chain queries repartition to
-cores exactly when (splits < cores) AND (input >= threshold), and the
-small-sf pinned 0-exchange plans stay untouched."""
+"""Local-layout policy (plans/widen.py): the serial-chain queries
+repartition to cores exactly when (input >= threshold) AND
+(splits < cores), the small-sf pinned 0-exchange plans stay untouched,
+and small shuffles are rebalanced only for small local inputs."""
 
 from __future__ import annotations
 
 import os
+
+import pytest
 
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -52,57 +54,57 @@ def test_widen_noop_when_already_wide(spark):
     from data_services_spark.plans.widen import widen_if_narrow
 
     d = spark.range(0, 1000, 1, spark.sparkContext.defaultParallelism)
-    assert widen_if_narrow(d, min_bytes=1) is d
+    # min_bytes=0: a file-less plan (0 bytes) passes the byte gate, so
+    # the split probe alone must refuse the widen
+    assert widen_if_narrow(d, min_bytes=0) is d
 
 
-def test_widened_tokenizers_stay_value_exact(spark):
-    """End to end at a forced-low threshold: bpe_tokenize and
+def test_widened_tokenizers_stay_value_exact(spark, monkeypatch):
+    """End to end at a forced-low chain gate: bpe_tokenize and
     bpe_tokenize_dict both gain the exchange and still produce the
     exact same rows as their unwidened forms (the sf1 correctness
-    contract for the widen fix)."""
+    contract for the widen fix). The operators are called directly,
+    so no plan-memo entry built under the real gate can be served."""
     from data_services_spark.operators.bpe import (
         bpe_tokenize, bpe_tokenize_dict,
     )
+    from data_services_spark.plans import widen
 
     d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")) \
         .select("doc_id", "text")
-    os.environ["SPARK_GRAFT_WIDEN_MIN_BYTES"] = "1"
-    try:
-        chain = bpe_tokenize(d)
-        kern = bpe_tokenize_dict(d)
-        assert _n_parts(chain) == spark.sparkContext.defaultParallelism
-        assert _n_parts(kern) == spark.sparkContext.defaultParallelism
-        rows_c = sorted(tuple(r) for r in chain.collect())
-        rows_k = sorted(tuple(r) for r in kern.collect())
-    finally:
-        del os.environ["SPARK_GRAFT_WIDEN_MIN_BYTES"]
     base = sorted(tuple(r) for r in bpe_tokenize(d).collect())
-    assert rows_c == base
-    assert rows_k == base
+    monkeypatch.setattr(widen, "CHAIN_MIN_BYTES", 1)
+    chain = bpe_tokenize(d)
+    kern = bpe_tokenize_dict(d)
+    assert _n_parts(chain) == spark.sparkContext.defaultParallelism
+    assert _n_parts(kern) == spark.sparkContext.defaultParallelism
+    assert sorted(tuple(r) for r in chain.collect()) == base
+    assert sorted(tuple(r) for r in kern.collect()) == base
 
 
 def test_widen_by_key_gates_and_exchange_reuse(spark):
-    """widen_by_key (round 14): gates exactly like widen_if_narrow
-    (unchanged handle under the byte floor and when already wide), and
-    when it fires the exchange is HASH partitioning on the key — no
-    sort-before-repartition — which a groupBy on a key superset reuses
-    (exactly ONE exchange in the whole aggregate plan)."""
+    """The keyed case of widen_if_narrow: gates exactly like the
+    keyless case (unchanged handle under the byte floor and when
+    already wide), and when it fires the exchange is HASH partitioning
+    on the key — no sort-before-repartition — which a groupBy on a key
+    superset reuses (exactly ONE exchange in the whole aggregate
+    plan)."""
     import pyspark.sql.functions as F
 
-    from data_services_spark.plans.widen import widen_by_key
+    from data_services_spark.plans.widen import widen_if_narrow
 
     d = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")) \
         .select("l_orderkey", "l_partkey")
     # below the byte floor: unchanged handle, no Repartition node
-    assert widen_by_key(d, "l_orderkey",
-                        min_bytes=10 * 1024 * 1024 * 1024) is d
+    assert widen_if_narrow(d, "l_orderkey",
+                           min_bytes=10 * 1024 * 1024 * 1024) is d
     # already wide: unchanged handle whatever the size
     wide_in = spark.range(0, 1000, 1,
                           spark.sparkContext.defaultParallelism)
-    assert widen_by_key(wide_in, "id", min_bytes=1) is wide_in
+    assert widen_if_narrow(wide_in, "id", min_bytes=0) is wide_in
 
     cores = spark.sparkContext.defaultParallelism
-    w = widen_by_key(d, "l_orderkey", min_bytes=1)  # force the widen
+    w = widen_if_narrow(d, "l_orderkey", min_bytes=1)  # force the widen
     assert _n_parts(w) == cores
     plan = w._jdf.queryExecution().toString()
     assert "hashpartitioning(l_orderkey" in plan
@@ -117,92 +119,120 @@ def test_widen_by_key_gates_and_exchange_reuse(spark):
     assert sorted(tuple(r) for r in agg.collect()) == base
 
 
-def test_rebalance_if_small_gate(spark):
-    """rebalance_if_small: repartitions to cores when the SOURCE scan
-    is under the gate, is a no-op above it (a real-scale plan must
-    never pay the extra shuffle), and never changes values."""
+def test_rebalance_if_small_gate(spark, monkeypatch):
+    """rebalance_if_small: repartitions to cores when the plan's own
+    input files are under the gate, is a no-op above it (a real-scale
+    plan must never pay the extra shuffle), and never changes values."""
     import pyspark.sql.functions as F
 
-    from data_services_spark.plans.widen import rebalance_if_small
+    from data_services_spark.plans import widen
 
     src = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")) \
         .select("doc_id", "text")
     grouped = src.groupBy((F.col("doc_id") % 7).alias("g")) \
         .agg(F.count(F.lit(1)).alias("n"))
 
-    on = rebalance_if_small(grouped, src)  # 65 KB source: gate ON
+    on = widen.rebalance_if_small(grouped)  # 65 KB input: gate ON
     assert "Repartition" in on._jdf.queryExecution().optimizedPlan() \
         .toString()
-    off = rebalance_if_small(grouped, src, max_bytes=1)  # gate OFF
-    assert off is grouped
+    monkeypatch.setattr(widen, "REBALANCE_MAX_BYTES", 1)
+    assert widen.rebalance_if_small(grouped) is grouped  # gate OFF
 
     rows_on = sorted(tuple(r) for r in on.collect())
     rows_off = sorted(tuple(r) for r in grouped.collect())
     assert rows_on == rows_off
 
 
-def test_scan_partition_memo_matches_direct_probe(spark):
-    """Round 13: the file-backed partition-count memo returns exactly
-    what the direct .rdd probe reports — for different projections of
-    the same files (the count is projection-independent) — and keys on
-    the split confs, so a conf change re-probes instead of returning a
-    stale count."""
+@pytest.mark.parametrize("uri, path", [
+    ("file:///a%20b/x.parquet", "/a b/x.parquet"),
+    ("file:/a%20b/x.parquet", "/a b/x.parquet"),
+    ("file://localhost/p", "/p"),
+    ("file://host/p", None),
+    ("s3a://b/k", None),
+    ("/data/x%20y.parquet", "/data/x%20y.parquet"),
+])
+def test_local_path_parses_input_file_uris(uri, path):
+    """One URI->local-path parser serves the widen byte gate and the
+    plan memo's file stats: percent-escapes decode for URIs only, a
+    non-local authority or remote scheme is not stat-able here, and a
+    bare path passes through unchanged."""
+    from data_services_spark.plans.widen import _local_path
+
+    assert _local_path(uri) == path
+
+
+def test_layout_helpers_leave_streaming_plans_alone(spark):
+    """Neither helper may add a repartition to a streaming plan: its
+    micro-batch layout is the source's (stream_chain_widen decides it
+    for file streams)."""
     from data_services_spark.plans.widen import (
-        _NPARTS_MEMO, _scan_partitions)
+        rebalance_if_small, widen_if_narrow)
 
-    path = os.path.join(SF_DIR, "lineitem.parquet")
-    a = spark.read.parquet(path).select("l_orderkey")
-    b = spark.read.parquet(path).select("l_orderkey", "l_partkey",
-                                        "l_shipdate")
-    direct = a.rdd.getNumPartitions()
-    assert _scan_partitions(a) == direct
-    assert _scan_partitions(b) == direct  # memo hit, same files
-
-    # non-file plans bypass the memo entirely (direct probe)
-    mem = spark.createDataFrame([(1,), (2,)], "x int")
-    assert _scan_partitions(mem) == mem.rdd.getNumPartitions()
-
-    # round 14 (r13 ADVICE): a DERIVED plan over the same files — same
-    # inputFiles(), partition count set by its shuffle, not the scan —
-    # must take the direct probe and must NOT poison the bare-scan memo
-    cores = spark.sparkContext.defaultParallelism
-    derived = spark.read.parquet(path).select("l_orderkey") \
-        .repartition(cores)
-    assert _scan_partitions(derived) == cores
-    assert _scan_partitions(a) == direct  # memo unpoisoned
-
-    # a split-conf change must invalidate: force a tiny split size and
-    # check the memo re-probes (more partitions for the same file)
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes",
-                       str(256 * 1024))
-        c = spark.read.parquet(path).select("l_orderkey")
-        assert _scan_partitions(c) == c.rdd.getNumPartitions()
-        assert _scan_partitions(c) > direct
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-    _NPARTS_MEMO.clear()
+    s = spark.readStream.format("rate").load()
+    assert widen_if_narrow(s, min_bytes=1) is s
+    assert widen_if_narrow(s, "value", min_bytes=1) is s
+    assert rebalance_if_small(s) is s
+    assert rebalance_if_small(s, "value") is s
 
 
-def test_chain_min_bytes_env_precedence(monkeypatch):
-    """Round 14 (r13 ADVICE): the generic $SPARK_GRAFT_WIDEN_MIN_BYTES
-    applies to chain sites in BOTH directions when the chain-specific
-    env is unset (raising it to suppress widening globally now works);
-    the chain env, when set, wins outright."""
+def test_unknown_size_input_widens_when_narrow(spark, monkeypatch):
+    """A plan whose input is not locally stat-able (object storage)
+    passes the byte gate — at cluster scale a 1-split scan under a
+    serial chain is always worth one bounded shuffle — and widens at
+    the default gate; rebalance_if_small stays OFF for it."""
     from data_services_spark.plans.widen import (
-        CHAIN_MIN_BYTES, chain_min_bytes)
+        rebalance_if_small, widen_if_narrow)
 
-    monkeypatch.delenv("SPARK_GRAFT_WIDEN_MIN_BYTES", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_CHAIN_WIDEN_MIN_BYTES", raising=False)
-    assert chain_min_bytes() == CHAIN_MIN_BYTES
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_MIN_BYTES", "1")
-    assert chain_min_bytes() == 1          # lower: force-on still works
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_MIN_BYTES",
-                       str(10 * CHAIN_MIN_BYTES))
-    assert chain_min_bytes() == 10 * CHAIN_MIN_BYTES  # raise: suppresses
-    monkeypatch.setenv("SPARK_GRAFT_CHAIN_WIDEN_MIN_BYTES", "7")
-    assert chain_min_bytes() == 7          # chain-specific wins outright
+    d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")) \
+        .select("doc_id", "text")
+    assert widen_if_narrow(d) is d  # 65 KB local: under the 2 MB gate
+    monkeypatch.setattr(d, "inputFiles",
+                        lambda: ["s3a://bucket/documents.parquet"])
+    wide = widen_if_narrow(d)
+    assert wide is not d
+    assert _n_parts(wide) == spark.sparkContext.defaultParallelism
+    assert rebalance_if_small(d) is d
+
+
+def test_corpus_curate_window_reads_only_the_documents_scan(spark,
+                                                            monkeypatch):
+    """corpus_curate gates its post-window rebalance on the window
+    output's OWN input files; that equals gating on the documents scan
+    because the window output reads exactly that scan's files."""
+    from data_services_spark.catalog import load_table
+    from data_services_spark.plans import widen
+    from data_services_spark.registry import RAW_QUERIES
+    from tests.conftest import SF_DIR as SMALL_SF
+
+    seen = []
+    real = widen.rebalance_if_small
+
+    def spy(df, *keys):
+        seen.append(df)
+        return real(df, *keys)
+
+    monkeypatch.setattr(widen, "rebalance_if_small", spy)
+    RAW_QUERIES["corpus_curate"](spark, SMALL_SF)
+    assert len(seen) == 1
+    docs = load_table(spark, SMALL_SF, "documents")
+    assert sorted(seen[0].inputFiles()) == sorted(docs.inputFiles())
+
+
+def test_env_knobs_are_deployment_settings_only():
+    """Knob-creep guard: the package reads only deployment settings
+    from SPARK_GRAFT_* variables. Layout thresholds are module
+    constants (plans/widen.py, streaming/events.py), never env knobs."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / \
+        "data_services_spark"
+    names = set()
+    for f in pkg.rglob("*.py"):
+        names |= set(re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read_text()))
+    assert names == {f"SPARK_GRAFT_{n}" for n in (
+        "CPUS", "MASTER", "DRIVER_MEM", "SF_DIR", "AQE_ADVISORY_BYTES",
+        "BCAST_BYTES", "PARQUET_BATCH_ROWS")}
 
 
 def test_dir_data_file_sizes_recursive(tmp_path):
@@ -246,7 +276,7 @@ def test_stream_chain_widen_gates(spark, tmp_path):
     byte gate, cores for a large narrow dir, and None once the dir's
     estimated splits reach the core count."""
     from data_services_spark.plans.widen import (
-        chain_min_bytes, stream_chain_widen)
+        CHAIN_MIN_BYTES, stream_chain_widen)
 
     assert stream_chain_widen(spark, str(tmp_path / "missing")) is None
 
@@ -257,14 +287,14 @@ def test_stream_chain_widen_gates(spark, tmp_path):
 
     big = tmp_path / "big"
     big.mkdir()
-    (big / "f.parquet").write_bytes(b"x" * (chain_min_bytes() + 1))
+    (big / "f.parquet").write_bytes(b"x" * (CHAIN_MIN_BYTES + 1))
     cores = spark.sparkContext.defaultParallelism
     assert stream_chain_widen(spark, str(big)) == cores
 
     # many files -> estimated splits >= cores -> no widen
     wide = tmp_path / "wide"
     wide.mkdir()
-    per = max(1, (chain_min_bytes() // cores) + 1)
+    per = max(1, (CHAIN_MIN_BYTES // cores) + 1)
     for i in range(cores):
         (wide / f"f{i}.parquet").write_bytes(b"x" * per)
     assert stream_chain_widen(spark, str(wide)) is None

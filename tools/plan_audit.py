@@ -63,21 +63,23 @@ NOTES = {
         "the min-rank merge loop must run in Python to stay flat in "
         "merge-table size (the chain form is linear in it); the "
         "per-task distinct-word cache makes kernel cost O(distinct "
-        "words per task) under Zipf. Zero exchanges at this sf; the "
-        "widen guard adds one round-robin exchange only past the "
-        "2 MB input gate (plans/widen.py)."),
+        "words per task) under Zipf. The one round-robin exchange is "
+        "the widen guard, past the 128 KB chain gate (plans/widen.py: "
+        "CHAIN_MIN_BYTES) that sf0.1's 584 KB corpus clears; sf0.01 "
+        "stays under it with zero exchanges."),
     "token_packing_dict": (
         "- NOTE (round 12): same one-slot persist as "
         "token_packing_bpe — the Arrow kernel executes ONCE (textual "
         "duplication of the cached subtree across prefix-sum branches "
         "is a print artifact, same class as image_near_dup's note)."),
     "crawl_ingest": (
-        "- NOTE (round 12): the second exchange is the size-gated "
-        "post-dedup rebalance_if_small (plans/widen.py) — AQE "
-        "byte-coalescing otherwise serialized the synth/extract/"
-        "classify chain on one task at bench scale; the gate is OFF "
-        "for large inputs, so a 100 TB plan keeps the single dedup "
-        "exchange."),
+        "- NOTE (round 14): the exchanges are the keyed widen of the "
+        "scan on doc_id and the size-gated keyed rebalance_if_small on "
+        "curl BEFORE the dedup groupBy, which reuses it (plans/"
+        "widen.py) — AQE byte-coalescing otherwise serialized the "
+        "synth/extract/classify chain on one task at bench scale; both "
+        "gates are OFF for large inputs, so a 100 TB plan keeps the "
+        "groupBy's own exchange."),
     "token_packing_bpe": (
         "- NOTE (round 11): the (doc_id, n_tokens) projection persists "
         "one-slot before the prefix-sum machinery, so the BPE replace "
