@@ -7,6 +7,12 @@ pushdown/pruning. The single normalization: ``events.ts`` arrives as LongType
 nanoseconds (see session._RUNTIME_CONFS) and is converted to a microsecond
 TIMESTAMP with integer arithmetic (``DIV 1000`` — never a double round-trip,
 which would corrupt epochs beyond 2^53 ns).
+
+Loaded handles are reused through the driver-side memo
+(plans/plan_memo.py), which skips the per-call file listing and parquet
+footer/schema read (~100ms of driver I/O per load) and re-stats the
+table's files on every hit: a table rewritten in place gets a fresh
+scan, never the old handle's file index.
 """
 
 from __future__ import annotations
@@ -16,6 +22,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from data_services_spark.plans.plan_memo import memo_get, memo_put
 from data_services_spark.session import configure_session
 
 TABLES = (
@@ -26,16 +33,10 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# (session_id, sf_dir, name) -> DataFrame. DataFrames are immutable plan
-# handles, so reuse is safe; caching skips the per-call file listing and
-# parquet footer/schema read (~100ms of driver I/O per load_table call).
-_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table; returns a DataFrame with engine-normalized schema."""
-    key = (id(spark._jsparkSession), sf_dir, name)
-    hit = _CACHE.get(key)
+    key = ("load_table", sf_dir, name)
+    hit = memo_get(spark, key)
     if hit is not None:
         return hit
     configure_session(spark)
@@ -43,7 +44,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # lossless ns -> us (data verified to carry no sub-us precision)
         df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    _CACHE[key] = df
+    memo_put(spark, key, df, df.inputFiles())
     return df
 
 

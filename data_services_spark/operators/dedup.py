@@ -346,15 +346,6 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
 _PJ_CACHE: list[DataFrame] = []
 
 
-def prefix_jaccard_release() -> None:
-    """Unpersist the ordered-array cache left by the most recent
-    :func:`prefix_jaccard_join` call. Safe any time, including after
-    the owning SparkSession stopped; previously returned results stay
-    correct, they just recompute instead of reading cache."""
-    from data_services_spark.functions.cache import release_slot
-    release_slot(_PJ_CACHE)
-
-
 def prefix_jaccard_join(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id",
                         threshold: float = 0.8) -> DataFrame:
@@ -620,15 +611,6 @@ def winnow_fingerprint_rows(docs: DataFrame, text_col: str = "text",
 # the bm25/bigram/PPJoin device (functions/cache.py): at most one
 # cached relation alive per session, each call releases the previous.
 _WINNOW_CACHE: list[DataFrame] = []
-
-
-def winnow_release() -> None:
-    """Unpersist the inverted-index cache left by the most recent
-    :func:`winnow_shared_pairs` call. Safe any time, including after
-    the owning SparkSession stopped; previously returned results stay
-    correct, they just recompute instead of reading cache."""
-    from data_services_spark.functions.cache import release_slot
-    release_slot(_WINNOW_CACHE)
 
 
 def winnow_shared_pairs(docs: DataFrame, text_col: str = "text",

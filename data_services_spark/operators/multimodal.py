@@ -440,16 +440,6 @@ def image_dhash(df: DataFrame, payload_col: str = "payload",
 _NEAR_DUP_CACHE: list[DataFrame] = []
 
 
-def image_near_dup_release() -> None:
-    """Unpersist the hash-relation cache left by the most recent
-    :func:`image_near_dup` call (the one-slot contract —
-    functions/cache.py: safe any time, swallows a dead-session JVM
-    unpersist; previously returned results stay correct and merely
-    recompute)."""
-    from data_services_spark.functions.cache import release_slot
-    release_slot(_NEAR_DUP_CACHE)
-
-
 def image_near_dup(hashes: DataFrame, max_hamming: int = 10,
                    id_col: str = "doc_id") -> DataFrame:
     """Image near-dup pairs over dHash values (the simhash band device
@@ -462,7 +452,7 @@ def image_near_dup(hashes: DataFrame, max_hamming: int = 10,
     sum of band-bucket quadratics, and only 16-byte hashes shuffle.
 
     The incoming hash relation is PERSISTED before banding (one-slot
-    MEMORY_ONLY — the bm25/bigram device; :func:`image_near_dup_release`
+    MEMORY_ONLY — the bm25/bigram device; ``release_all_slots``
     drops it, eviction degrades to recomputation): ``hashes`` is
     normally the output of :func:`image_dhash`, i.e. a full
     decode-every-image Arrow pass, and the band self-join would

@@ -168,16 +168,6 @@ def ngram_contamination(docs: DataFrame, probes: DataFrame,
 _PACK_CACHE: list[DataFrame] = []
 
 
-def pack_release() -> None:
-    """Unpersist the (doc_id, n_tokens) cache left by the most recent
-    :func:`pack_by_token_budget` call (only expensive-`token_count`
-    calls persist). Safe any time, including after the owning session
-    stopped — previously returned DataFrames stay correct (eviction
-    degrades to recomputation under the MEMORY_ONLY contract)."""
-    from data_services_spark.functions.cache import release_slot
-    release_slot(_PACK_CACHE)
-
-
 def pack_by_token_budget(docs: DataFrame, budget: int,
                          doc_id: str = "doc_id",
                          text_col: str = "text",
@@ -206,7 +196,7 @@ def pack_by_token_budget(docs: DataFrame, budget: int,
     measured in token_packing_bpe's r10 plan. When True (the default
     whenever a custom ``token_count`` is given), the 2-column
     ``(doc_id, n_tokens)`` projection is materialized through the
-    one-slot MEMORY_ONLY cache (:func:`pack_release` frees it), so the
+    one-slot MEMORY_ONLY cache (the next query build frees it), so the
     tokenizer executes exactly once and every downstream branch reads
     16-byte rows from cache. The default whitespace count stays
     unpersisted — recomputing a split() is cheaper than caching it.
@@ -400,22 +390,6 @@ def source_mixture_sample(df: DataFrame, source_col: str,
 _DSIR_CACHE: list[DataFrame] = []
 
 
-def dsir_release() -> None:
-    """Unpersist the token-stream cache left by the most recent
-    :func:`dsir_logweights` call. Safe to call any time; a previously
-    returned weights DataFrame stays CORRECT afterwards (evicted cache
-    degrades to recomputation, the documented MEMORY_ONLY contract),
-    it just loses the single-materialization speedup.
-
-    'Any time' includes AFTER the owning SparkSession stopped: the
-    cached blocks died with that session's BlockManager, so a failing
-    JVM-side unpersist (NullPointerException from the dead driver
-    endpoint) means there is nothing left to release — swallow it
-    rather than fail a valid call on a fresh session (round-8 review)."""
-    from data_services_spark.functions.cache import release_slot
-    release_slot(_DSIR_CACHE)
-
-
 def dsir_logweights(docs: DataFrame, target: DataFrame,
                     n_buckets: int = 256, text_col: str = "text",
                     id_col: str = "doc_id", seed: int = 9) -> DataFrame:
@@ -479,7 +453,8 @@ def dsir_logweights(docs: DataFrame, target: DataFrame,
     # still reads it), so it cannot be unpersisted here without paying
     # the full recompute the persist exists to avoid. Instead the leak
     # is BOUNDED to one slot: each call releases the previous call's
-    # cache, and dsir_release() drops the last one — so a long-lived
+    # cache, and the next query build (functions/cache.py
+    # release_all_slots) drops the last one — so a long-lived
     # session holds at most one cached token stream, never one per call
     # (round-7 ADVICE; the unbounded form is the exact class
     # test_minhash_lsh_leaves_no_cached_rdds bans elsewhere).

@@ -22,31 +22,7 @@ from pyspark.sql import DataFrame, Window
 from data_services_spark.functions.vectors import (
     cosine_similarity, dot_product,
 )
-
-
-# Memoized query vectors: (plan semantic hash, query_id, cols) -> vector.
-# A query vector is DATA, not a plan — refetching the same 1-row lookup on
-# every plan build charged ~0.2s/build at sf1 for a value that cannot
-# change within a process over immutable input files (the same assumption
-# every engine's scan-level caching makes; key includes the analyzed
-# plan's semantic hash, so a different source path/filter never aliases).
-_QVEC_CACHE: dict[tuple, list[float]] = {}
-_QVEC_CACHE_MAX = 256
-
-
-def clear_query_vector_cache() -> int:
-    """Drop all memoized query vectors; returns how many were evicted.
-
-    The cache assumes input files are immutable for the process
-    lifetime. A long-lived service that rewrites files IN PLACE at the
-    same path (compaction, dataset regeneration) must call this after
-    the rewrite — the semantic-hash key sees the same plan and would
-    serve the pre-rewrite vector. (Writers that publish a NEW path or
-    generation — the pattern everything in streaming/ingest.py uses —
-    never need it: a different path changes the plan hash.)"""
-    n = len(_QVEC_CACHE)
-    _QVEC_CACHE.clear()
-    return n
+from data_services_spark.plans.plan_memo import memo_get, memo_put
 
 
 def _query_vector(embeddings: DataFrame, query_id: int,
@@ -58,25 +34,31 @@ def _query_vector(embeddings: DataFrame, query_id: int,
     dim*8 bytes to every corpus row, far worse than one bounded 1-row
     job. Every other pure-Catalyst path instead joins the query in as a
     1-row broadcast (:func:`ann_hyperplane_topk`, :func:`ivf_fixed_topk`,
-    :func:`ivf_topk`) — zero extra jobs."""
+    :func:`ivf_topk`) — zero extra jobs.
+
+    The vector is DATA, not a plan: refetching the same 1-row lookup on
+    every plan build charged ~0.2s/build at sf1, so it is memoized
+    (plans/plan_memo.py) under the analyzed plan's semantic hash — a
+    different source path/filter never aliases — and the stat check on
+    the embeddings' input files refetches it after an in-place
+    rewrite."""
+    spark = embeddings.sparkSession
     try:
-        key = (embeddings._jdf.queryExecution().analyzed().semanticHash(),
+        key = ("query_vector",
+               embeddings._jdf.queryExecution().analyzed().semanticHash(),
                query_id, id_col, vec_col)
     except Exception:
         key = None
-    if key is not None and key in _QVEC_CACHE:
-        return _QVEC_CACHE[key]
+    if key is not None:
+        vec = memo_get(spark, key)
+        if vec is not None:
+            return vec
     row = embeddings.filter(F.col(id_col) == query_id).select(vec_col).head()
     if row is None:
         raise KeyError(f"query id {query_id} not found")
     vec = list(row[0])
     if key is not None:
-        if len(_QVEC_CACHE) >= _QVEC_CACHE_MAX:
-            # Evict the oldest entry (insertion order), not the whole
-            # cache — a service cycling >256 distinct (plan, id) pairs
-            # keeps its hot tail instead of thrashing from empty.
-            _QVEC_CACHE.pop(next(iter(_QVEC_CACHE)))
-        _QVEC_CACHE[key] = vec
+        memo_put(spark, key, vec, embeddings.inputFiles())
     return vec
 
 
@@ -460,15 +442,6 @@ def lsh_banded_near_dup(embeddings: DataFrame, dim: int,
 # bm25/winnow device (functions/cache.py): at most one cached relation
 # alive per session, each call releases the previous call's.
 _SEMDEDUP_CACHE: list[DataFrame] = []
-
-
-def semdedup_release() -> None:
-    """Unpersist the assignment cache left by the most recent
-    :func:`semdedup` call. Safe any time, including after the owning
-    SparkSession stopped; previously returned results stay correct,
-    they just recompute instead of reading cache."""
-    from data_services_spark.functions.cache import release_slot
-    release_slot(_SEMDEDUP_CACHE)
 
 
 def semdedup(embeddings: DataFrame, centroids: Sequence[Sequence[float]],

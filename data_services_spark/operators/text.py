@@ -87,16 +87,6 @@ def tfidf(docs: DataFrame, text_col: str = "text",
 _BM25_CACHE: list[DataFrame] = []
 
 
-def bm25_release() -> None:
-    """Unpersist the per-doc tf cache left by the most recent
-    :func:`bm25_scores` call (the one-slot contract —
-    functions/cache.py: safe any time, swallows a dead-session JVM
-    unpersist; previously returned results stay correct and merely
-    recompute)."""
-    from data_services_spark.functions.cache import release_slot
-    release_slot(_BM25_CACHE)
-
-
 def bm25_scores(docs: DataFrame, query_terms: tuple[str, ...],
                 k1: float = 1.2, b: float = 0.75,
                 text_col: str = "text",
@@ -134,7 +124,7 @@ def bm25_scores(docs: DataFrame, query_terms: tuple[str, ...],
 
     The per-doc tf/length pass is derived once and PERSISTED
     (MEMORY_ONLY, one-slot bound — the bigram_logprob device: each
-    call releases the previous call's cache, :func:`bm25_release`
+    call releases the previous call's cache, ``release_all_slots``
     drops the last; eviction degrades to recomputation, never a disk
     spill), so the corpus-stats aggregate and the scoring branch read
     ONE materialization of the tokenize + literal-fold work instead of
@@ -321,16 +311,6 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
 _BIGRAM_CACHE: list[DataFrame] = []
 
 
-def bigram_release() -> None:
-    """Unpersist the bigram-stream cache left by the most recent
-    :func:`bigram_logprob` call. Safe any time, including after the
-    owning SparkSession stopped (the blocks died with it — a failing
-    JVM-side unpersist is swallowed); previously returned results stay
-    correct, they just recompute instead of reading cache."""
-    from data_services_spark.functions.cache import release_slot
-    release_slot(_BIGRAM_CACHE)
-
-
 def bigram_logprob(docs: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id", n_buckets: int = 256,
                    seed: int = 11) -> DataFrame:
@@ -354,7 +334,7 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
 
     Scale shape: the bigram stream is derived once and PERSISTED
     (MEMORY_ONLY, one-slot bound — the dsir_logweights device: each
-    call releases the previous call's cache, :func:`bigram_release`
+    call releases the previous call's cache, ``release_all_slots``
     drops the last; eviction degrades to recomputation, never a disk
     spill of the stream), so the two model fits (map-side-combined
     groupBys of <= n_buckets² longs) and the scoring join all read one

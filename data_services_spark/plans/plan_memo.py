@@ -1,28 +1,36 @@
-"""Analyzed-plan rebuild memo — the driver-floor device (round 14,
-r13 VERDICT ask #6, guide §5 "the driver should do almost no data
-work" extended to plan construction).
+"""The one driver-side memo: every value the driver reuses across
+calls (table handles, analyzed plans, query vectors, trained tables)
+lives in ``_MEMO`` behind two primitives, :func:`memo_get` and
+:func:`memo_put`.
 
-bench.py times RAW_QUERIES, which must return a FRESH DataFrame per
-call so every execution pays full scan + shuffle + fetch (a memoized
-HANDLE re-executes its finalized AQE plan and silently reuses its
-materialized shuffle outputs — that is what the bench's separate
-"marginal" column measures, and it under-reports the query's work).
-But a fresh PySpark build also re-pays a pure driver constant that has
-nothing to do with the data: py4j round trips constructing the
-expression tree, Catalyst ANALYSIS, and the widen guard's probes —
-profiled at 0.03-0.13 s per bench query (tools/bench_phases.py),
-~16% of the calm-host fresh total.
+Staleness (aim 3: a stale input triggers a rebuild, never a serve):
+every key is prefixed with the session's applicationId (never a
+GC-aliasable py4j wrapper id), and every entry records (size,
+mtime_ns) of the input files its value was built from. A hit re-stats
+them; an in-place rewrite of any file drops the entry and the caller
+rebuilds instead of serving a stale file-index snapshot. Values whose
+inputs are not locally stat-able are never stored (one build per call
+on real deployments; a stale plan is worse than 100 ms). The store
+holds at most ``MEMO_CAP`` entries; an insert past the cap evicts the
+single oldest one, which only ever costs a rebuild.
 
-This memo removes exactly that constant and nothing else: it stores
-the ANALYZED LOGICAL PLAN (a JVM expression tree — no data, no RDDs,
-no shuffle state) keyed on everything that can change the tree, and on
-a hit wraps the SAME tree in a brand-new ``Dataset.ofRows``. A new
-Dataset means a new QueryExecution, new physical planning, new RDDs —
-so every execution still re-reads parquet and re-shuffles end to end.
-Measured proof (sf0.1, same session): q3 fresh-build 0.72 s,
-ofRows-rebuild 0.56 s, same-handle marginal re-run 0.06 s — the
-rebuild sits at full-execution cost minus the build constant, nowhere
-near the shuffle-reusing marginal.
+:func:`rebuild_or_build` is the analyzed-plan rebuild on top of the
+store (round 14, r13 VERDICT ask #6). bench.py times RAW_QUERIES,
+which must return a FRESH DataFrame per call so every execution pays
+full scan + shuffle + fetch (a memoized HANDLE re-executes its
+finalized AQE plan and silently reuses its materialized shuffle
+outputs). But a fresh PySpark build also re-pays a pure driver
+constant: py4j round trips constructing the expression tree, Catalyst
+ANALYSIS, and the widen guard's probes — profiled at 0.03-0.13 s per
+bench query (tools/bench_phases.py), ~16% of the calm-host fresh
+total. The memo stores the ANALYZED LOGICAL PLAN (a JVM expression
+tree — no data, no RDDs, no shuffle state) and on a hit wraps the SAME
+tree in a brand-new ``Dataset.ofRows``: a new QueryExecution, new
+physical planning, new RDDs, so every execution still re-reads parquet
+and re-shuffles end to end. Measured proof (sf0.1, same session): q3
+fresh-build 0.72 s, ofRows-rebuild 0.56 s, same-handle marginal
+re-run 0.06 s — the rebuild sits at full-execution cost minus the
+build constant, nowhere near the shuffle-reusing marginal.
 
 Eligibility is OPT-IN per registry entry (``@register(...,
 lazy_build=True)``) and restricted to PURE-LAZY builders:
@@ -35,15 +43,9 @@ lazy_build=True)``) and restricted to PURE-LAZY builders:
   subtree would silently read the previous call's cached data);
 - no closures over values computed FROM the input at build time.
 
-Staleness (the r13 ADVICE discipline): the key carries applicationId +
-defaultParallelism (never a GC-aliasable py4j wrapper id), sf_dir and
-the split confs; the layout gates are module constants
-(plans/widen.py), fixed for the process. The stored entry additionally
-records (size, mtime_ns) of every input file and re-stats them on
-every hit — an in-place rewrite of the test data invalidates the
-entry instead of serving a stale file-index snapshot. Plans whose
-inputs are not locally stat-able are never memoized (one build per
-call on real deployments; a stale plan is worse than 100 ms).
+The plan key adds defaultParallelism, sf_dir and the split confs; the
+layout gates are module constants (plans/widen.py), fixed for the
+process. A plan with no input files is never memoized.
 """
 
 from __future__ import annotations
@@ -59,13 +61,16 @@ _SPLIT_CONF_KEYS = ("spark.sql.files.maxPartitionBytes",
                     "spark.sql.files.openCostInBytes",
                     "spark.sql.files.minPartitionNum")
 
-# key -> (analyzed jplan, sorted input files, (size, mtime_ns) per file)
+MEMO_CAP = 512
+
+# (applicationId, *key) -> (value, sorted input files, (size, mtime_ns)
+# per file); insertion order is age order.
 _MEMO: dict[tuple, tuple] = {}
 
 
 def _local_file_stats(files: list[str]) -> tuple | None:
     """(size, mtime_ns) per input file, or None when any file is not
-    locally stat-able — those plans are never memoized."""
+    locally stat-able — those values are never memoized."""
     stats = []
     for uri in files:
         path = _local_path(uri)
@@ -79,11 +84,33 @@ def _local_file_stats(files: list[str]) -> tuple | None:
     return tuple(stats)
 
 
-def _memo_key(spark: SparkSession, name: str, sf_dir: str) -> tuple:
-    sc = spark.sparkContext
-    conf = spark.conf
-    return (sc.applicationId, sc.defaultParallelism, name, sf_dir,
-            tuple(conf.get(k, None) for k in _SPLIT_CONF_KEYS))
+def memo_get(spark: SparkSession, key: tuple):
+    """The value stored under ``key`` for this session, or None when
+    absent or when any of its input files changed since it was
+    stored (the stale entry is dropped)."""
+    full = (spark.sparkContext.applicationId, *key)
+    hit = _MEMO.get(full)
+    if hit is None:
+        return None
+    value, files, stats = hit
+    if _local_file_stats(files) != stats:
+        _MEMO.pop(full, None)  # inputs rewritten in place: rebuild
+        return None
+    return value
+
+
+def memo_put(spark: SparkSession, key: tuple, value,
+             files: list[str]) -> None:
+    """Store ``value`` under ``key`` for this session, built from
+    ``files`` (may be empty); stores nothing when any file is not
+    locally stat-able."""
+    files = sorted(files)
+    stats = _local_file_stats(files)
+    if stats is None:
+        return
+    _MEMO[(spark.sparkContext.applicationId, *key)] = (value, files, stats)
+    if len(_MEMO) > MEMO_CAP:
+        del _MEMO[next(iter(_MEMO))]
 
 
 def rebuild_or_build(spark: SparkSession, name: str, sf_dir: str,
@@ -92,22 +119,19 @@ def rebuild_or_build(spark: SparkSession, name: str, sf_dir: str,
     plan when the key matches and every input file is byte/mtime
     identical; otherwise run ``builder`` and (when stat-able) memoize
     its analyzed plan."""
-    key = _memo_key(spark, name, sf_dir)
-    hit = _MEMO.get(key)
-    if hit is not None:
-        jplan, files, stats = hit
-        if _local_file_stats(files) == stats:
-            jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                spark._jsparkSession, jplan)
-            return DataFrame(jdf, spark)
-        _MEMO.pop(key, None)  # inputs rewritten in place: rebuild
+    key = (spark.sparkContext.defaultParallelism, name, sf_dir,
+           tuple(spark.conf.get(k, None) for k in _SPLIT_CONF_KEYS))
+    jplan = memo_get(spark, key)
+    if jplan is not None:
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, jplan)
+        return DataFrame(jdf, spark)
     df = builder(spark, sf_dir)
     try:
-        files = sorted(df.inputFiles())
-        stats = _local_file_stats(files) if files else None
+        files = df.inputFiles()
         jplan = df._jdf.queryExecution().analyzed()
     except Exception:
         return df  # un-introspectable plan: never memoize, always build
-    if stats is not None:
-        _MEMO[key] = (jplan, files, stats)
+    if files:
+        memo_put(spark, key, jplan, files)
     return df

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from data_services_spark.catalog import load_table, load_tables
 from data_services_spark.functions import numeric as nfn
+from data_services_spark.functions.cache import release_all_slots
 from data_services_spark.functions.numeric import (
     davg, dmoney, dsum, dsum_expr, sql_davg, sql_dsum, sql_dsum_expr,
 )
@@ -41,14 +42,18 @@ from data_services_spark.operators.multimodal import (
     attach_binary_payload, decode_media, extract_payload_meta,
 )
 from data_services_spark.plans import kgx_fixture as kgx
+from data_services_spark.plans.plan_memo import (
+    memo_get, memo_put, rebuild_or_build,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
+# Every entry builds a FRESH DataFrame per call. bench.py times these — a
+# memoized handle would reuse materialized shuffle stages across runs and
+# under-report the query's true work. RAW_QUERIES is the same dict under
+# the name bench.py and perfbench import.
 QUERIES: dict[str, QueryFn] = {}
-# Unwrapped builders: construct a FRESH DataFrame per call. bench.py times
-# these — a memoized handle would reuse materialized shuffle stages across
-# runs and under-report the query's true work.
-RAW_QUERIES: dict[str, QueryFn] = {}
+RAW_QUERIES = QUERIES
 ORACLES: dict[str, str] = {}
 
 
@@ -57,72 +62,36 @@ def _bpe_frag():
     return bpe_sql("text")
 
 
-def register(name: str, sql: str | None = None, cache_plan: bool = True,
-             lazy_build: bool = False):
-    """Register a query; by default the built DataFrame is memoized per
-    (session, sf_dir) — a prepared-statement-style plan cache. A DataFrame
-    is an immutable plan handle: reusing it reuses the analyzed/optimized
-    plan and compiled codegen, so repeated executions pay only run time
-    (what DuckDB's ~ms SQL re-parse costs there is ~300ms of py4j +
-    Catalyst analysis here without the cache). `cache_plan=False` for
-    queries with per-call side effects that must re-run.
+def register(name: str, sql: str | None = None, lazy_build: bool = False):
+    """Register a query builder and its DuckDB oracle SQL.
+
+    Every call of the registered entry is a fresh build: it first
+    releases every one-slot persist left by PREVIOUS queries
+    (functions/cache.py — e.g. corpus_curate's full-text survivor cache
+    no longer stays pinned for the rest of the session); each query
+    re-fills its own slots inside its own timed region, and
+    re-executing an already-built plan never lands here.
 
     ``lazy_build=True`` (round 14, VERDICT ask #6) declares the builder
     PURE-LAZY — no jobs run at build time, no persist/one-slot cache in
     the plan, no closures over values computed from the input — and
-    opts its RAW_QUERIES entry into the analyzed-plan rebuild memo
+    routes the entry through the analyzed-plan rebuild
     (plans/plan_memo.py): repeat fresh builds wrap the memoized
     analyzed tree in a brand-new Dataset, so every execution still
     re-reads parquet and re-shuffles in full while the pure driver
     constant (py4j tree construction + Catalyst analysis + widen
-    probes) is paid once per (session, sf_dir, split confs, file stats)."""
+    probes) is paid once per (session, sf_dir, split confs, file
+    stats)."""
     def deco(fn: QueryFn) -> QueryFn:
         def building(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Round 14 (r13 ADVICE): a fresh query build releases every
-            # one-slot persist left by PREVIOUS queries (e.g.
-            # corpus_curate's full-text survivor cache stayed pinned for
-            # the rest of the session). Each query re-fills its own
-            # slots inside its own timed region; re-executing an
-            # already-built plan never lands here, so nothing is
-            # released mid-flight for marginal/bench reps.
-            from data_services_spark.functions.cache import (
-                release_all_slots,
-            )
             release_all_slots()
+            if lazy_build:
+                return rebuild_or_build(spark, name, sf_dir, fn)
             return fn(spark, sf_dir)
 
         building.__name__ = fn.__name__
         building.__doc__ = fn.__doc__
-        if lazy_build:
-            from data_services_spark.plans.plan_memo import rebuild_or_build
-
-            def raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-                from data_services_spark.functions.cache import (
-                    release_all_slots,
-                )
-                release_all_slots()  # same fresh-build semantics
-                return rebuild_or_build(spark, name, sf_dir, fn)
-
-            raw.__name__ = fn.__name__
-            raw.__doc__ = fn.__doc__
-            RAW_QUERIES[name] = raw
-        else:
-            RAW_QUERIES[name] = building
-        if cache_plan:
-            plans: dict[tuple[int, str], DataFrame] = {}
-
-            def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-                key = (id(spark._jsparkSession), sf_dir)
-                df = plans.get(key)
-                if df is None:
-                    df = plans[key] = building(spark, sf_dir)
-                return df
-
-            cached.__name__ = fn.__name__
-            cached.__doc__ = fn.__doc__
-            QUERIES[name] = cached
-        else:
-            QUERIES[name] = building
+        QUERIES[name] = building
         if sql is not None:
             ORACLES[name] = sql
         return fn
@@ -1459,7 +1428,7 @@ SELECT epoch_ms(date_trunc('hour', ts)) AS window_start_ms, event_type,
        COUNT(*) AS n,
        {_DSUM_F('value', 'sum_value')}
 FROM events GROUP BY 1, 2
-""", cache_plan=False)  # drains a stream per call; must re-run end-to-end
+""")
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1/T4 via a REAL Structured Streaming pipeline: file-source readStream
     -> watermark -> tumbling agg -> complete-mode memory sink, drained with
@@ -1506,7 +1475,7 @@ SELECT (epoch_ms(ts) // 900000 - k) * 900000 AS window_start_ms,
        event_type, COUNT(*) AS n
 FROM events CROSS JOIN (SELECT unnest(range(4)) AS k)
 GROUP BY 1, 2
-""", cache_plan=False)  # drains a stream per call; must re-run end-to-end
+""")
 def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 via a REAL readStream: watermarked sliding 1h/15min counts,
     complete-mode memory sink, availableNow drain — checked against the
@@ -1547,7 +1516,7 @@ SELECT user_id, epoch_ms(MIN(ts)) AS session_start_ms,
 FROM s GROUP BY user_id, sid
 HAVING MAX(ts) + INTERVAL 30 MINUTE
        <= (SELECT MAX(ts) - INTERVAL 10 MINUTE FROM events)
-""", cache_plan=False)  # drains a stream per call; must re-run end-to-end
+""")
 def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 via a REAL readStream: watermarked session windows (30-min
     gap), availableNow drain, APPEND mode (the only mode session
@@ -1581,7 +1550,7 @@ JOIN (SELECT * FROM events WHERE event_type = 'view') v
   ON v.user_id = p.user_id
  AND v.ts <= p.ts
  AND v.ts >= p.ts - INTERVAL 1 HOUR
-""", cache_plan=False)  # drains a stream per call; must re-run end-to-end
+""")
 def stream_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T-family stream-stream join via a REAL Structured Streaming
     pipeline: two watermarked file-source streams interval-joined
@@ -3178,8 +3147,7 @@ def quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                                seed=7)
 
 
-@register("stream_classify", _QC_SQL,
-          cache_plan=False)  # drains a stream per call
+@register("stream_classify", _QC_SQL)
 def stream_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T-family x L19: the quality classifier on the STREAMING ingest
     path — a stateless map over a REAL readStream of the documents
@@ -5340,8 +5308,7 @@ SELECT doc_id, n_tokens, CAST(p // 512 AS BIGINT) AS chunk_id FROM pre
 """
 
 
-@register("stream_tokenize", _BPE_TOKENIZE_SQL,
-          cache_plan=False)  # drains a stream per call
+@register("stream_tokenize", _BPE_TOKENIZE_SQL)
 def stream_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T-family x L26 (round 12): BPE tokenization on the STREAMING
     ingest path — a stateless map over a REAL readStream of the
@@ -5388,7 +5355,8 @@ def token_packing_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists one-slot before the prefix-sum machinery, so the replace
     chain runs ONCE (1 parquet scan; the r10 plan re-tokenized the
     corpus on each of 4 scans — at 100 TB, 3 redundant full-corpus
-    tokenizations). `sampling.pack_release()` frees the slot."""
+    tokenizations). The next query build frees the slot
+    (`functions.cache.release_all_slots`)."""
     from data_services_spark.operators.bpe import bpe_token_count
     from data_services_spark.operators.sampling import pack_by_token_budget
     d = load_table(spark, sf_dir, "documents")
@@ -5459,11 +5427,6 @@ def _bpe_frag_trained():
     return bpe_sql("text", TRAINED_MERGES)
 
 
-# per-session learned-table memo for bpe_tokenize_trained (see its
-# docstring; keyed like the register() plan cache)
-_BPE_TRAINED_BY_SESSION: dict[int, tuple] = {}
-
-
 @register("bpe_tokenize_trained", f"""
 SELECT doc_id,
        {_bpe_frag_trained()['n_bpe']} AS n_bpe_tokens,
@@ -5487,18 +5450,17 @@ def bpe_tokenize_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-scan/0-exchange/0-Python replace chain (plan-pinned)."""
     from data_services_spark.operators.bpe import (
         TRAIN_CORPUS, TRAINED_MERGES, bpe_train)
-    # train once per session (the ivf_topk trained-artifact device):
+    # train once per session (in the driver-side memo, plans/plan_memo):
     # the loop is deterministic, so re-calls — RAW_QUERIES rebuilds,
     # plan-guard probes, bench reps — reuse the session's table
     # instead of re-running ~40 tiny Spark jobs per plan build
-    skey = id(spark._jsparkSession)
-    learned = _BPE_TRAINED_BY_SESSION.get(skey)
+    learned = memo_get(spark, ("bpe_trained",))
     if learned is None:
         corpus = spark.createDataFrame(
             [(i, s) for i, s in enumerate(TRAIN_CORPUS)],
             "doc_id long, text string")
         learned = bpe_train(corpus, num_merges=len(TRAINED_MERGES))
-        _BPE_TRAINED_BY_SESSION[skey] = learned
+        memo_put(spark, ("bpe_trained",), learned, [])
     if learned != TRAINED_MERGES:
         diff = [i for i, (x, y) in enumerate(zip(learned, TRAINED_MERGES))
                 if x != y]
@@ -6478,7 +6440,7 @@ def stats_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("stream_enrich", """
 SELECT e.event_id, e.user_id, n.n_name AS region_name, e.value
 FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey
-""", cache_plan=False)  # drains a stream per call; must re-run end-to-end
+""")
 def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T-family stream-static enrichment: a REAL readStream over events
     joined to the static nation dimension (streaming/events.py::
@@ -6780,55 +6742,3 @@ def queries() -> dict[str, QueryFn]:
 
 def oracle_sql() -> dict[str, str]:
     return _ordered(ORACLES)
-
-
-# ---------------------------------------------------------------------------
-# Prepared plans
-# ---------------------------------------------------------------------------
-_PREPARED: dict[tuple[str, str, str], DataFrame] = {}
-# Bounded (round-8 verdict ask #7): a long-lived service session cycling
-# many (name, sf_dir) pairs would otherwise grow the dict without limit —
-# the same slow-leak class the dsir/bigram one-slot caches guard against.
-# LRU at a cap comfortably above the registry size: every registry query
-# for two sf_dirs fits, so the driver/sweep harness never evicts, while a
-# pathological scan over unbounded sf_dirs stays O(cap). Eviction is
-# FREE to be wrong — a dropped handle just rebuilds its plan on next use
-# (correctness never depends on the cache), so no unpersist bookkeeping
-# is needed: prepared handles are plans, not materialized state.
-_PREPARED_CAP = 512
-
-
-def prepared_release() -> None:
-    """Drop every memoized prepared-plan handle. Plans rebuild on next
-    use; nothing is persisted JVM-side, so this is pure dict surgery —
-    safe any time, including after the owning session stopped."""
-    _PREPARED.clear()
-
-
-def prepared(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized DataFrame handle for repeated execution of a registry
-    query — the engine's prepared-statement facility.
-
-    Building a plan is not free: py4j Column construction, Catalyst
-    analysis, and optimization cost 0.3–1.5s for the larger plans here
-    (measured, BASELINE.md round 4 — e.g. ~0.7s for kgx_node_merge's
-    three-branch fixture parse, ~1.5s for knn's 770-node unrolled
-    scoring tree). Spark caches the analyzed/optimized QueryExecution on
-    the DataFrame object, so re-executing the SAME handle skips all of
-    it (0.31s vs 1.18s measured on kgx_node_merge at sf1). A service
-    issuing the same parameterized query repeatedly should hold the
-    handle; this helper does that keyed by (name, sf_dir, Spark app id)
-    so handles never leak across sessions. bench.py deliberately does
-    NOT use it — its contract is full fresh-plan cost per run.
-    """
-    key = (name, sf_dir, spark.sparkContext.applicationId)
-    df = _PREPARED.get(key)
-    if df is None:
-        df = RAW_QUERIES[name](spark, sf_dir)
-    else:
-        # re-insertion keeps dict order = recency order (LRU)
-        del _PREPARED[key]
-    _PREPARED[key] = df
-    while len(_PREPARED) > _PREPARED_CAP:
-        _PREPARED.pop(next(iter(_PREPARED)))
-    return df

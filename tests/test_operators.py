@@ -8,6 +8,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 import pytest
 
+from data_services_spark.functions.cache import release_all_slots
 from data_services_spark.operators import (
     asof_join, connected_edge_subset, exact_text_dedup, knn_topk,
     minhash_lsh_pairs, normalization_failures, sessionize, simhash64,
@@ -785,60 +786,6 @@ def test_hll_union_is_lossless(spark):
     assert abs(merged - exact) / exact < 0.05
 
 
-def test_prepared_handle_is_memoized_per_session(spark):
-    from data_services_spark import registry
-
-    a = registry.prepared("q1_pricing_summary", spark,
-                          "/root/testdata/sf0.001")
-    b = registry.prepared("q1_pricing_summary", spark,
-                          "/root/testdata/sf0.001")
-    c = registry.prepared("q1_pricing_summary", spark,
-                          "/root/testdata/sf0.01")
-    assert a is b          # same (name, sf_dir, session) -> same handle
-    assert a is not c      # different sf_dir -> fresh plan
-    assert a.count() == 6  # and the handle still executes
-
-
-def test_prepared_cache_is_bounded_lru_and_releasable(spark):
-    """_PREPARED must not grow without bound in a long-lived service
-    session (round-8 verdict ask #7): LRU-bounded at _PREPARED_CAP,
-    recency refreshed on hit, and prepared_release() empties it.
-    Eviction only ever costs a plan rebuild — pinned by checking a
-    re-requested evicted handle is a NEW object that still executes."""
-    from data_services_spark import registry
-
-    registry.prepared_release()
-    assert len(registry._PREPARED) == 0
-    saved_cap = registry._PREPARED_CAP
-    registry._PREPARED_CAP = 3
-    try:
-        dirs = [f"/root/testdata/sf0.001#{i}" for i in range(3)]
-        # distinct keys via distinct sf_dir strings would break the
-        # read; use distinct NAMES against one real dir instead
-        names = ["q1_pricing_summary", "q6_forecast_revenue",
-                 "record_counts", "string_functions"]
-        sf = "/root/testdata/sf0.001"
-        del dirs
-        h0 = registry.prepared(names[0], spark, sf)
-        registry.prepared(names[1], spark, sf)
-        registry.prepared(names[2], spark, sf)
-        # touch names[0] -> it becomes most-recent
-        assert registry.prepared(names[0], spark, sf) is h0
-        # 4th distinct key evicts the LRU entry (names[1], not names[0])
-        registry.prepared(names[3], spark, sf)
-        assert len(registry._PREPARED) == 3
-        keys = {k[0] for k in registry._PREPARED}
-        assert names[1] not in keys and names[0] in keys
-        # evicted handle rebuilds fresh and still executes
-        h1b = registry.prepared(names[1], spark, sf)
-        assert h1b.count() >= 0
-        registry.prepared_release()
-        assert len(registry._PREPARED) == 0
-    finally:
-        registry._PREPARED_CAP = saved_cap
-        registry.prepared_release()
-
-
 def _encode_png(pixels, color_type, filters):
     """Minimal in-test PNG encoder (stdlib): forward-filters each row
     with the given per-row filter type so the decoder's unfilter paths
@@ -1171,35 +1118,6 @@ def test_quantile_bucket_count_capped_and_warned(spark):
         bucket_by_leading_key(df, "k", 150, balance="quantile")
 
 
-def test_query_vector_cache_evicts_one_and_clears(spark):
-    """Round-5 advisor: the qvec cache must evict ONE entry on overflow
-    (not thrash from empty) and expose an explicit invalidation hook for
-    in-place file rewrites."""
-    from data_services_spark.operators import similarity as sim
-
-    saved = dict(sim._QVEC_CACHE)
-    sim._QVEC_CACHE.clear()
-    try:
-        sim._QVEC_CACHE.update({("k", i): [float(i)] for i in range(3)})
-        old_max = sim._QVEC_CACHE_MAX
-        sim._QVEC_CACHE_MAX = 3
-        try:
-            df = spark.createDataFrame(
-                [(7, [1.0, 2.0])], "vec_id long, embedding array<double>")
-            vec = sim._query_vector(df, 7, "vec_id", "embedding")
-            assert vec == [1.0, 2.0]
-            assert len(sim._QVEC_CACHE) == 3          # one in, one out
-            assert ("k", 0) not in sim._QVEC_CACHE    # oldest evicted
-            assert ("k", 1) in sim._QVEC_CACHE
-        finally:
-            sim._QVEC_CACHE_MAX = old_max
-        assert sim.clear_query_vector_cache() == 3
-        assert sim._QVEC_CACHE == {}
-    finally:
-        sim._QVEC_CACHE.clear()
-        sim._QVEC_CACHE.update(saved)
-
-
 def test_bucket_quantile_balance_on_skewed_keys(spark):
     """balance='quantile' must (a) keep the running sum exact on a
     heavily skewed key distribution and (b) actually balance where
@@ -1342,12 +1260,12 @@ def test_winnow_shared_pairs_one_slot_cache_and_release(spark):
                                            min_shared=1).collect())
     dd.winnow_shared_pairs(d, k=8, window=4, min_shared=1).collect()
     assert len(dd._WINNOW_CACHE) == 1   # second call evicted the first
-    dd.winnow_release()
+    release_all_slots()
     assert not dd._WINNOW_CACHE
     plain = dd.winnow_shared_pairs(d, k=8, window=4, min_shared=1)
     recomputed = sorted(tuple(r) for r in plain.collect())
     assert recomputed == cached
-    dd.winnow_release()
+    release_all_slots()
 
 
 def test_winnow_rows_equals_array_form(spark):
@@ -1994,7 +1912,7 @@ def test_prefix_jaccard_threshold_validation_and_release(spark):
     dd.prefix_jaccard_join(docs).collect()
     dd.prefix_jaccard_join(docs).collect()   # second call evicts first
     assert len(dd._PJ_CACHE) == 1
-    dd.prefix_jaccard_release()
+    release_all_slots()
     assert not dd._PJ_CACHE
 
 
@@ -2175,11 +2093,10 @@ def test_hashed_linear_score_extra_cols_pass_through_both_paths(spark):
 def test_image_near_dup_one_slot_cache_contract(spark):
     """The round-10 persist: each image_near_dup call holds at most
     ONE cached hash relation (the bm25/bigram one-slot contract) — a
-    second call releases the first call's blocks, and the explicit
-    release drops the last; results stay correct either way."""
+    second call releases the first call's blocks, and release_all_slots
+    drops the last; results stay correct either way."""
     from data_services_spark.operators.multimodal import (
         _NEAR_DUP_CACHE, encode_png_gray, image_dhash, image_near_dup,
-        image_near_dup_release,
     )
 
     def img(seed):
@@ -2198,9 +2115,9 @@ def test_image_near_dup_one_slot_cache_contract(spark):
             image_near_dup(image_dhash(d), max_hamming=3).collect()}
     assert out2 == out1 >= {(0, 1), (2, 3), (4, 5)}
     assert len(_NEAR_DUP_CACHE) == 1 and _NEAR_DUP_CACHE[0] is not first
-    image_near_dup_release()
+    release_all_slots()
     assert not _NEAR_DUP_CACHE
-    image_near_dup_release()  # idempotent on an empty slot
+    release_all_slots()  # idempotent on an empty slot
 
 
 def test_prefix_jaccard_threshold_snap_warns(spark):

@@ -198,7 +198,7 @@ EXPECTED = {
     "dsir_resample": dict(scans=1, pushed_min=0, joins=set(),
                           exchanges_max=1, single_max=0, py=0),
     # round-8/9: BM25 — ONE parquet scan: the per-doc tf/length fold
-    # persists (one-slot MEMORY_ONLY, bm25_release device, round-9 —
+    # persists (one-slot MEMORY_ONLY, bm25_scores device, round-9 —
     # the r8 form re-tokenized the corpus for the stats branch), so
     # the stats aggregate and the scoring branch are both
     # InMemoryTableScans of the same materialization. The stats
@@ -209,7 +209,7 @@ EXPECTED = {
                       joins={"BroadcastNestedLoopJoin"},
                       exchanges_max=1, single_max=1, py=0),
     # round-8: hashed bigram LM — ONE parquet scan: the bigram stream
-    # persists (one-slot MEMORY_ONLY, bigram_release device) and the
+    # persists (one-slot MEMORY_ONLY, bigram_logprob device) and the
     # two bounded model fits (<= 256 / 65536 rows, map-side combined)
     # plus the scoring branch all read the cached materialization
     # (3 InMemoryTableScans, 1 Scan parquet). Both models re-enter via
@@ -268,7 +268,7 @@ EXPECTED = {
     "quality_classifier": dict(scans=1, pushed_min=0, joins=set(),
                                exchanges_max=0, single_max=0, py=0),
     # round-9 PPJoin: the df-ordered per-doc array relation persists
-    # (one-slot MEMORY_ONLY, prefix_jaccard_release device) so the
+    # (one-slot MEMORY_ONLY, prefix_jaccard_join device) so the
     # prefix explode and both verify sides read ONE materialization —
     # 2 parquet scans (token-df fit + array build), not the 8 measured
     # without the cache. Candidate and verify joins broadcast at this

@@ -1,6 +1,7 @@
-"""Analyzed-plan rebuild memo (plans/plan_memo.py, round 14 VERDICT
-ask #6): fresh Datasets from a memoized analyzed tree must be real
-re-executions — never handle reuse, never stale plans."""
+"""The driver-side memo (plans/plan_memo.py) and its analyzed-plan
+rebuild (round 14 VERDICT ask #6): fresh Datasets from a memoized
+analyzed tree must be real re-executions — never handle reuse, never
+stale plans or table handles."""
 
 from __future__ import annotations
 
@@ -51,8 +52,16 @@ def test_plan_memo_keys_isolate_sf_dirs(spark):
 def test_plan_memo_invalidates_on_file_rewrite(spark, tmp_path):
     """An in-place rewrite of an input file (different size/mtime)
     must re-run the builder, not serve the stale file-index snapshot
-    (the r13 ADVICE staleness discipline)."""
+    (the r13 ADVICE staleness discipline) — through the memo itself,
+    through catalog.load_table, and through a registered query whose
+    builder reads its table via load_table (a cached table handle
+    would hand the rebuild the old file index and silently drop the
+    rows beyond the old file length)."""
+    import pyarrow.parquet as pq
+
+    from data_services_spark.catalog import load_table
     from data_services_spark.plans.plan_memo import rebuild_or_build
+    from data_services_spark.registry import _Q1_SQL, RAW_QUERIES
 
     src = os.path.join(SF_DIR, "nation.parquet")
     path = str(tmp_path / "nation.parquet")
@@ -75,6 +84,23 @@ def test_plan_memo_invalidates_on_file_rewrite(spark, tmp_path):
     assert len(calls) == 2  # stale entry dropped, builder re-ran
     assert d3.count() == 5  # region rows, not stale nation plan
 
+    lineitem = pq.read_table(os.path.join(
+        os.path.dirname(SF_DIR), "sf0.01", "lineitem.parquet"))
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    li_path = os.path.join(sf_dir, "lineitem.parquet")
+    pq.write_table(lineitem.slice(0, 2000), li_path, row_group_size=500)
+    assert load_table(spark, sf_dir, "lineitem").count() == 2000
+    RAW_QUERIES["q1_pricing_summary"](spark, sf_dir).collect()
+    pq.write_table(lineitem.slice(0, 40000), li_path, row_group_size=500)
+    fresh = spark.read.parquet(li_path)
+    assert fresh.count() == 40000
+    assert load_table(spark, sf_dir, "lineitem").count() == 40000
+    q1 = RAW_QUERIES["q1_pricing_summary"](spark, sf_dir)
+    want = spark.sql(_Q1_SQL.replace("FROM lineitem", "FROM {lineitem}"),
+                     lineitem=fresh)
+    assert _rows(q1) == _rows(want)
+
 
 @pytest.mark.parametrize("name", [
     "q1_pricing_summary", "q3_shipping_priority", "kgx_edge_merge",
@@ -90,3 +116,45 @@ def test_lazy_build_queries_value_parity_first_vs_rebuilt(spark, name):
     first = _rows(RAW_QUERIES[name](spark, SF_DIR))
     rebuilt = _rows(RAW_QUERIES[name](spark, SF_DIR))
     assert first == rebuilt
+
+
+def test_memo_evicts_oldest_skips_remote_and_refetches_query_vector(
+        spark, tmp_path, monkeypatch):
+    """The one driver-side memo: past MEMO_CAP an insert evicts exactly
+    the oldest entry; a value built from a file that cannot be stat'ed
+    locally is never stored; a memoized query vector is refetched after
+    its embeddings file is rewritten in place."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_services_spark.catalog import load_table
+    from data_services_spark.operators.similarity import _query_vector
+    from data_services_spark.plans import plan_memo as pm
+
+    monkeypatch.setattr(pm, "_MEMO", {})
+    monkeypatch.setattr(pm, "MEMO_CAP", 3)
+    for i in range(4):
+        pm.memo_put(spark, ("probe", i), i, [])
+    assert len(pm._MEMO) == 3
+    assert [pm.memo_get(spark, ("probe", i)) for i in range(4)] == \
+        [None, 1, 2, 3]
+    pm.memo_put(spark, ("remote",), "v", ["s3a://b/k"])
+    assert pm.memo_get(spark, ("remote",)) is None
+    assert len(pm._MEMO) == 3  # stored nothing, evicted nothing
+
+    path = str(tmp_path / "embeddings.parquet")
+
+    def write(vec):
+        pq.write_table(pa.table({"vec_id": pa.array([7], pa.int64()),
+                                 "embedding": [vec]}), path)
+
+    def fetch():
+        emb = load_table(spark, str(tmp_path), "embeddings")
+        return _query_vector(emb, 7, "vec_id", "embedding")
+
+    write([1.0, 2.0])
+    first = fetch()
+    assert first == [1.0, 2.0]
+    assert fetch() is first  # memo hit: no second 1-row job
+    write([3.0, 4.0, 5.0])
+    assert fetch() == [3.0, 4.0, 5.0]

@@ -372,17 +372,17 @@ def test_dsir_resample_boundary_margin():
 def test_dsir_cache_bounded_and_releasable(spark):
     """dsir_logweights persists the bucketed token stream for the
     scoring pass; the unpersist point is the NEXT call (one-slot
-    bound) or an explicit dsir_release().  Round-7 ADVICE: the
-    unbounded form leaked one registered cached DataFrame per call —
-    the exact class test_minhash_lsh_leaves_no_cached_rdds bans."""
-    from data_services_spark.operators.sampling import (
-        dsir_logweights, dsir_release,
-    )
+    bound) or release_all_slots() at the next query build.  Round-7
+    ADVICE: the unbounded form leaked one registered cached DataFrame
+    per call — the exact class test_minhash_lsh_leaves_no_cached_rdds
+    bans."""
+    from data_services_spark.functions.cache import release_all_slots
+    from data_services_spark.operators.sampling import dsir_logweights
 
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    dsir_release()
+    release_all_slots()
     base = n_cached()
     d = spark.createDataFrame(
         [(i, "alpha beta gamma delta") for i in range(30)],
@@ -397,7 +397,7 @@ def test_dsir_cache_bounded_and_releasable(spark):
     assert n_cached() == base + 1, "second call must not stack a leak"
     # a result built on a released cache stays CORRECT (recompute path)
     assert w1.count() == 30
-    dsir_release()
+    release_all_slots()
     assert n_cached() == base
     assert w2.count() == 30
 

@@ -200,20 +200,20 @@ def test_bigram_logprob_matches_reference_and_flags_word_salad(spark):
 
     # the bigram-stream persist is one-slot bounded and releasable
     # (the dsir_logweights contract)
-    from data_services_spark.operators.text import bigram_release
+    from data_services_spark.functions.cache import release_all_slots
 
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
     before = n_cached()
-    bigram_release()
+    release_all_slots()
     assert n_cached() <= before
     base = n_cached()
     bigram_logprob(d, n_buckets=64, seed=11).count()
     assert n_cached() == base + 1
     bigram_logprob(d, n_buckets=64, seed=11).count()
     assert n_cached() == base + 1, "second call must not stack a leak"
-    bigram_release()
+    release_all_slots()
     assert n_cached() == base
 
 
@@ -221,8 +221,9 @@ def test_bm25_cache_is_one_slot_bounded_and_releasable(spark):
     """bm25_scores persists its per-doc tf pass (round-9: the r8 form
     tokenized the corpus twice); the cache must follow the repo's
     one-slot discipline — a second call releases the first, and
-    bm25_release() drops the last (the bigram_release contract)."""
-    from data_services_spark.operators.text import bm25_release, bm25_scores
+    release_all_slots() drops the last (the bigram_logprob contract)."""
+    from data_services_spark.functions.cache import release_all_slots
+    from data_services_spark.operators.text import bm25_scores
 
     d = spark.createDataFrame(
         [(1, "spark shuffles data"), (2, "duck walks"), (3, "spark spark"),
@@ -232,7 +233,7 @@ def test_bm25_cache_is_one_slot_bounded_and_releasable(spark):
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    bm25_release()
+    release_all_slots()
     base = n_cached()
     s1 = {r["doc_id"]: r["score"]
           for r in bm25_scores(d, ("spark",)).collect()}
@@ -242,7 +243,7 @@ def test_bm25_cache_is_one_slot_bounded_and_releasable(spark):
     assert n_cached() == base + 1, "second call must not stack a leak"
     assert s1 == s2
     assert s1[3] > s1[1] > 0.0 and s1[2] == 0.0
-    bm25_release()
+    release_all_slots()
     assert n_cached() == base
 
 

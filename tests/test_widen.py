@@ -235,6 +235,35 @@ def test_env_knobs_are_deployment_settings_only():
         "BCAST_BYTES", "PARQUET_BATCH_ROWS")}
 
 
+def test_one_driver_side_memo():
+    """Cache-creep guard: the only module-level memo dict in the
+    package is plans/plan_memo.py's stat-checked ``_MEMO``; nothing
+    keys state on a py4j wrapper id; ``register`` has no caching
+    parameter, and QUERIES/RAW_QUERIES are one dict of fresh builds."""
+    import inspect
+    import pathlib
+    import re
+
+    from data_services_spark.registry import QUERIES, RAW_QUERIES, register
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / \
+        "data_services_spark"
+    memos, id_keys = [], []
+    for f in sorted(pkg.rglob("*.py")):
+        text = f.read_text()
+        rel = f.relative_to(pkg).as_posix()
+        memos += [f"{rel}:{m}" for m in re.findall(
+            r"^(_[A-Z_]*(?:CACHE|MEMO|PREPARED|BY_SESSION)[A-Z_]*): dict",
+            text, re.M)]
+        if "id(spark._jsparkSession)" in text:
+            id_keys.append(rel)
+    assert memos == ["plans/plan_memo.py:_MEMO"]
+    assert id_keys == []
+    assert list(inspect.signature(register).parameters) == \
+        ["name", "sql", "lazy_build"]
+    assert QUERIES is RAW_QUERIES
+
+
 def test_dir_data_file_sizes_recursive(tmp_path):
     """Round 14 (r13 ADVICE): nested partition subdirs are walked (the
     flat listdir counted them as ~4 KB inodes), metadata entries are
