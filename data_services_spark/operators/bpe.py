@@ -577,46 +577,12 @@ def _safe_merge_batch(stats: list[tuple[str, str, int]],
     return committed
 
 
-def _relaxed_merge_batch(stats: list[tuple[str, str, int]],
-                         outputs: set[str],
-                         limit: int) -> list[tuple[str, str]]:
-    """The industry-standard FAST batching (``strict_order=False``):
-    take up to ``limit`` pairwise symbol-disjoint candidates from the
-    priority-sorted list, SKIPPING conflicts (they re-queue next
-    round) and applying no created-pair/tie safety checks. The
-    resulting table is always well-formed and valid for the tokenizer
-    (disjointness keeps each committed pair's own count exact at
-    commit time; collision outputs are skipped), but the MERGE ORDER
-    is not guaranteed to equal one-merge-per-round training — counts
-    of later batch members ignore pairs the earlier members created.
-    Measured: 40 merges in 5 rounds on the English fixture (the
-    strict selector needs 17 — its prefix rule is provably maximal
-    for pair-stats-only inference, so bigger strict batches would
-    require exact n-gram accounting, not a looser heuristic)."""
-    committed: list[tuple[str, str]] = []
-    touched: set[str] = set()
-    batch_outputs: set[str] = set()
-    for a, b, _cnt in stats:
-        if len(committed) >= limit:
-            break
-        out = a + b
-        if out in outputs or out in batch_outputs:
-            continue
-        if a in touched or b in touched:
-            continue
-        committed.append((a, b))
-        touched.update((a, b))
-        batch_outputs.add(out)
-    return committed
-
-
 def bpe_train(docs: "DataFrame", num_merges: int,
               text_col: str = "text", min_count: int = 2,
               checkpoint_every: int = 16,
               max_driver_vocab: int = 1_000_000,
               max_batch: int = 64,
-              stats_width: int = 512,
-              strict_order: bool = True
+              stats_width: int = 512
               ) -> tuple[tuple[str, str], ...]:
     """Learn a BPE merge table FROM the corpus (Sennrich 2016 §3;
     decision rules in the section comment above). Returns the
@@ -647,16 +613,9 @@ def bpe_train(docs: "DataFrame", num_merges: int,
       same order as one-merge-per-round; conflicts re-queue). Batching
       is what keeps a large-vocab training from paying one scheduling
       barrier per merge: measured 40 merges in 17 rounds (2.4x) on
-      the English fixture under the STRICT selector — whose prefix
-      rule is maximal for pair-stats-only inference (any larger
-      order-exact batch needs exact n-gram accounting) — and 5
-      rounds (8x) under ``strict_order=False``, the industry-standard
-      relaxation that skips conflicting candidates instead of
-      stopping (table still well-formed and tokenizer-valid, but
-      merge ORDER is no longer guaranteed to match sequential
-      training: later batch members score on counts that ignore
-      earlier members' effects — use it for production-scale vocab
-      builds, never where the parity contract matters). Lineage
+      the English fixture — the selector's prefix rule is maximal
+      for pair-stats-only inference (any larger order-exact batch
+      needs exact n-gram accounting). Lineage
       localCheckpoints every ``checkpoint_every`` rounds; pass
       ``max_driver_vocab=0`` to force this venue (the parity pytests
       do, so both venues stay decision-pinned; ``max_batch=1``
@@ -715,12 +674,9 @@ def bpe_train(docs: "DataFrame", num_merges: int,
             rounds += 1
             cands = [(r["a"], r["b"], r["cnt"]) for r in top]
             limit = min(max(1, max_batch), num_merges - len(merges))
-            if strict_order:
-                batch = _safe_merge_batch(
-                    cands, truncated=len(top) >= stats_width,
-                    outputs=outputs, limit=limit)
-            else:
-                batch = _relaxed_merge_batch(cands, outputs, limit)
+            batch = _safe_merge_batch(
+                cands, truncated=len(top) >= stats_width,
+                outputs=outputs, limit=limit)
             if not batch:
                 break
             enc_col: Column = F.col("enc")

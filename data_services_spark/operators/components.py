@@ -248,7 +248,7 @@ def triangle_count(edges: DataFrame, src: str = "src",
 
 def bfs_levels(edges: DataFrame, sources: DataFrame, iterations: int,
                src: str = "src", dst: str = "dst",
-               node: str = "node", checkpoint: bool = False) -> DataFrame:
+               node: str = "node") -> DataFrame:
     """Multi-source BFS distance, fixed ``iterations`` rounds: (node,
     dist) for every node within `iterations` hops of any source —
     exactly the frontier-expansion levels, all-integer so an unrolled
@@ -261,34 +261,18 @@ def bfs_levels(edges: DataFrame, sources: DataFrame, iterations: int,
     rounds (not to-convergence) keeps the plan finite and the oracle
     expressible.
 
-    ``checkpoint=False`` returns one pure lazy plan (oracle-comparable,
-    no pinned state) — but the unrolled tree re-derives ``edges`` once
-    per round per union branch (the registered demo's plan audit shows
-    16 scans for 2 rounds). At scale pass ``checkpoint=True``: the edge
-    list and each round's distance vector pin via ``localCheckpoint``,
-    every round reads edges exactly once, and superseded rounds free
-    their blocks immediately (the :func:`connected_components`
-    discipline — the returned frame keeps O(1) pinned state)."""
-    spark = edges.sparkSession
-    e_ids = set()
-    if checkpoint:
-        edges, e_ids = _eager_checkpoint(
-            edges.select(F.col(src).alias(src), F.col(dst).alias(dst)))
+    The result is one pure lazy plan (oracle-comparable, no pinned
+    state); the unrolled tree re-derives ``edges`` once per round per
+    union branch (the registered demo's plan audit shows 16 scans for 2
+    rounds)."""
     dist = sources.select(F.col(sources.columns[0]).alias(node),
                           F.lit(0).cast("long").alias("dist"))
-    dist_ids: set = set()
     for _ in range(iterations):
         hop = (edges.join(dist, F.col(src) == F.col(node))
                .select(F.col(dst).alias(node),
                        (F.col("dist") + F.lit(1)).alias("dist")))
         dist = (dist.unionByName(hop)
                 .groupBy(node).agg(F.min("dist").alias("dist")))
-        if checkpoint:
-            dist, new_ids = _eager_checkpoint(dist)
-            _unpersist_rdds(spark, dist_ids)
-            dist_ids = new_ids
-    if checkpoint:
-        _unpersist_rdds(spark, e_ids)
     return dist
 
 

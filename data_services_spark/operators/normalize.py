@@ -9,9 +9,9 @@ endpoint are routed to a failures file.
 Spark-first re-expression: the map is a *DataFrame* ``(orig_id, canon_id,
 ...)`` and the rewrite is two broadcast hash joins (the map is tiny relative
 to the edge set — millions of ids vs billions of edges at 100 TB, well within
-broadcast range after dedup; if it ever is not, drop the hint and let
-sort-merge + AQE skew handling take over). Failure routing falls out of the
-same left join as a null-canon filter — no second pass over the edges.
+broadcast range after dedup, so the hint is unconditional). Failure routing
+falls out of the same left join as a null-canon filter — no second pass over
+the edges.
 
 The *service* side (batched HTTP with retry) is modeled by
 :class:`NodeNormalizerService` as a ``mapInPandas`` operator with a pluggable
@@ -28,16 +28,15 @@ from pyspark.sql import DataFrame
 
 
 def apply_node_map(edges: DataFrame, node_map: DataFrame,
-                   endpoint: str, broadcast: bool = True) -> DataFrame:
+                   endpoint: str) -> DataFrame:
     """Left-join rewrite of one endpoint column via (orig_id, canon_id) map.
 
     Adds ``{endpoint}_normalized`` boolean; keeps the original id when the
     map misses (reference keeps the row for failure routing).
     """
-    m = node_map.select(F.col("orig_id").alias(f"__orig_{endpoint}"),
-                        F.col("canon_id").alias(f"__canon_{endpoint}"))
-    if broadcast:
-        m = F.broadcast(m)
+    m = F.broadcast(
+        node_map.select(F.col("orig_id").alias(f"__orig_{endpoint}"),
+                        F.col("canon_id").alias(f"__canon_{endpoint}")))
     joined = edges.join(m, edges[endpoint] == m[f"__orig_{endpoint}"], "left")
     return (joined
             .withColumn(f"{endpoint}_normalized",
@@ -57,8 +56,8 @@ def normalize_edges(edges: DataFrame, node_map: DataFrame,
 
 def apply_predicate_map(edges: DataFrame, predicate_map: DataFrame,
                         predicate_col: str = "predicate",
-                        default: str | None = "biolink:related_to",
-                        broadcast: bool = True) -> DataFrame:
+                        default: str | None = "biolink:related_to"
+                        ) -> DataFrame:
     """J1 edge/predicate normalization (EdgeNormalizer twin): rewrite the
     predicate column to its canonical biolink predicate via a
     ``(raw_pred, biolink_pred)`` map `[R: Common/normalization.py —
@@ -71,10 +70,9 @@ def apply_predicate_map(edges: DataFrame, predicate_map: DataFrame,
     ``default`` when given, flagged ``predicate_normalized = false`` either
     way so callers can route failures exactly like node-norm failures (J2).
     """
-    m = predicate_map.select(F.col("raw_pred").alias("__raw_pred"),
-                             F.col("biolink_pred").alias("__biolink_pred"))
-    if broadcast:
-        m = F.broadcast(m)
+    m = F.broadcast(
+        predicate_map.select(F.col("raw_pred").alias("__raw_pred"),
+                             F.col("biolink_pred").alias("__biolink_pred")))
     joined = edges.join(m, edges[predicate_col] == m["__raw_pred"], "left")
     fallback = F.lit(default) if default is not None else F.col(predicate_col)
     return (joined

@@ -10,6 +10,11 @@ Two physical strategies with identical results:
   k*num_partitions candidate rows ever shuffle. Same ordering contract.
 
 Both accumulate in float64 left-to-right, so scores agree bit-for-bit.
+
+SemDeDup has one path per entry point: literal-centroid :func:`semdedup`
+drops duplicates with an oracle-checked SQL cell equi-join, and
+:func:`semdedup_indexed` (trained IVF index) with one numpy matmul per
+cell — the only indexed kernel.
 """
 
 from __future__ import annotations
@@ -514,12 +519,12 @@ def semdedup(embeddings: DataFrame, centroids: Sequence[Sequence[float]],
 
 
 def _semdedup_survivors(tagged: DataFrame, threshold: float, id_col: str,
-                        vec_col: str, dim: int | None,
-                        block_size: int | None = None) -> DataFrame:
-    """The cluster-local upper-triangular drop rule shared by the
-    literal-centroid twin and the trained-index path: `tagged` carries
+                        vec_col: str, dim: int | None) -> DataFrame:
+    """The cluster-local upper-triangular drop rule of the
+    literal-centroid twin, as one SQL cell equi-join: `tagged` carries
     (id, vec, cell); a row is dropped iff an earlier same-cell row sits
-    at cosine >= threshold.
+    at cosine >= threshold. The trained-index path runs the same rule in
+    the numpy kernel (:func:`_semdedup_survivors_arrow`).
 
     The pair predicate is the MULTIPLICATIVE form of the cosine test,
     ``dot(a,b) >= tau * |a| * |b|``: norms are computed once per
@@ -527,77 +532,18 @@ def _semdedup_survivors(tagged: DataFrame, threshold: float, id_col: str,
     at the sf1 pair budget (67M proposed pairs for 200k vectors at
     448 cells) cuts per-pair work from three unrolled 64-term folds to
     one. The oracle mirrors the same multiplicative expression, so the
-    boundary decision stays bit-identical cross-engine.
-
-    ``block_size`` turns on the BLOCKED TRIANGLE JOIN for skewed
-    cells. The plain cell equi-join serializes each cell's full
-    quadratic into the task that owns its join key — k-means cells are
-    heavy-tailed, so one hot cell stalls the stage (measured at sf1:
-    a 2600-vector cell = 3.4M pairs in one straggler task, 594s for a
-    stage whose balanced compute is ~60s). With blocks: members rank
-    by id within their cell, block p = rank div B; an earlier-side row
-    in block p replicates to every block-pair (p, q>=p), a later-side
-    row in block q to every (p<=q, q), and the join key becomes
-    (cell, p, q) — the hot cell's 66 block-pairs spread over the whole
-    executor pool while single-block cells keep exactly one copy per
-    side. Decisions are identical: blocks partition by id rank, so
-    every (earlier, later) pair lands in exactly one block-pair."""
+    boundary decision stays bit-identical cross-engine."""
     from data_services_spark.functions.vectors import l2_norm
 
     normed = tagged.withColumn("__nrm", l2_norm(F.col(vec_col), dim))
-    if block_size is None:
-        a = normed.select("cell", F.col(id_col).alias("__ida"),
-                          F.col(vec_col).alias("__va"),
-                          F.col("__nrm").alias("__na"))
-        b = normed.select("cell", F.col(id_col).alias("__idb"),
-                          F.col(vec_col).alias("__vb"),
-                          F.col("__nrm").alias("__nb"))
-        pairs = (a.join(b, "cell")
-                 .filter(F.col("__ida") < F.col("__idb")))
-    else:
-        w = Window.partitionBy("cell").orderBy(id_col)
-        blocked = (normed
-                   .withColumn("__blk", ((F.row_number().over(w) - 1)
-                                         / F.lit(block_size))
-                               .cast("long"))
-                   .withColumn("__nblk",
-                               F.max("__blk").over(
-                                   Window.partitionBy("cell"))))
-        a = (blocked.select(
-                "cell", F.col("__blk").alias("__p"),
-                F.explode(F.sequence(F.col("__blk"), F.col("__nblk")))
-                 .alias("__q"),
-                F.col(id_col).alias("__ida"),
-                F.col(vec_col).alias("__va"),
-                F.col("__nrm").alias("__na")))
-        b = (blocked.select(
-                "cell",
-                F.explode(F.sequence(F.lit(0).cast("long"),
-                                     F.col("__blk"))).alias("__p"),
-                F.col("__blk").alias("__q"),
-                F.col(id_col).alias("__idb"),
-                F.col(vec_col).alias("__vb"),
-                F.col("__nrm").alias("__nb")))
-        # Explicit numPartitions pins the exchange: AQE's coalescing
-        # sizes partitions by shuffle INPUT bytes and cannot see that a
-        # block-pair partition explodes quadratically on output —
-        # measured at sf1 it folded the spread-out block-pairs back
-        # into 5 partitions, recreating the straggler this
-        # decomposition exists to kill. REPARTITION_BY_NUM exchanges
-        # are exempt from coalescing.
-        # conf may be non-numeric on managed platforms ("auto" under
-        # Databricks AQE) — fall back to the cluster's default
-        # parallelism rather than dying in the only environments the
-        # blocked path targets.
-        try:
-            nparts = int(tagged.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            nparts = tagged.sparkSession.sparkContext.defaultParallelism
-        a = a.repartition(nparts, "cell", "__p", "__q")
-        b = b.repartition(nparts, "cell", "__p", "__q")
-        pairs = (a.join(b, ["cell", "__p", "__q"])
-                 .filter(F.col("__ida") < F.col("__idb")))
+    a = normed.select("cell", F.col(id_col).alias("__ida"),
+                      F.col(vec_col).alias("__va"),
+                      F.col("__nrm").alias("__na"))
+    b = normed.select("cell", F.col(id_col).alias("__idb"),
+                      F.col(vec_col).alias("__vb"),
+                      F.col("__nrm").alias("__nb"))
+    pairs = (a.join(b, "cell")
+             .filter(F.col("__ida") < F.col("__idb")))
     # __na/__nb > 0 guards the multiplicative form's zero-vector edge:
     # dot(0,b) = 0 >= tau*0*|b| would otherwise mark every zero vector a
     # duplicate of everything (the division form yields NaN -> false).
@@ -667,13 +613,7 @@ def _semdedup_survivors_arrow(tagged: DataFrame, threshold: float,
             .applyInPandas(_dedup_cell, schema=out_schema))
 
 
-_UNSET = object()  # distinguishes "knob not passed" from an explicit None
-
-
 def semdedup_indexed(spark, index_dir: str, threshold: float = 0.9,
-                     dim: int | None = None,
-                     kernel: str = "arrow",
-                     block_size=_UNSET,
                      max_cell_warn: int = 100_000) -> DataFrame:
     """Production SemDeDup: the same upper-triangular cluster-local rule
     as :func:`semdedup`, with cluster assignment read from a persisted
@@ -687,18 +627,11 @@ def semdedup_indexed(spark, index_dir: str, threshold: float = 0.9,
     grouping key. New vectors route through :func:`ivf_append` and are
     deduped by the same call — no rebuild.
 
-    ``kernel="arrow"`` (default) runs the numpy pairwise kernel
-    (:func:`_semdedup_survivors_arrow`) — measured 594s -> 9.5s on the
-    sf1 skew case (200k vectors, 448 cells, hottest cell 2600; 67.5M
-    proposed pairs), identical decisions. ``kernel="sql"`` keeps the
-    pure-JVM join form (bit-exact vs the oracle-checked twin); give it
-    `block_size` to spread a hot cell's quadratic across the executor
-    pool (blocked triangle join: 594s -> 256s on the same case — the
-    join's 12.8 µs/pair row-materialization floor remains, which is
-    why the matmul kernel is the default). Left unset it defaults to
-    1024; an EXPLICIT ``block_size=None`` selects the plain unblocked
-    cell equi-join (the sentinel default keeps "not passed" and
-    "None" distinguishable — round-8 advice).
+    The drop rule runs in the numpy pairwise kernel
+    (:func:`_semdedup_survivors_arrow`): measured 9.5 s on the sf1 skew
+    case (200k vectors, 448 cells, hottest cell 2600; 67.5M proposed
+    pairs) against 594 s for the SQL cell equi-join, with identical
+    decisions on margin-bearing data.
 
     Returns (id, cell, kept) for every indexed vector."""
     import os
@@ -731,28 +664,7 @@ def semdedup_indexed(spark, index_dir: str, threshold: float = 0.9,
         corpus = spark.read.parquet(os.path.join(index_dir, "corpus"))
     tagged = corpus.select(F.col(id_col), F.col(vec_col),
                            F.col("__cell").cast("long").alias("cell"))
-    if kernel == "arrow":
-        # dim/block_size are SQL-kernel tuning knobs (join-side slab
-        # width); the arrow kernel batches per cell and ignores both.
-        # Raising here (rather than a silent no-op) is what tells a
-        # caller tuning block_size that they are tuning the wrong
-        # kernel — the r7 default of block_size=1024 made exactly that
-        # mistake invisible (ADVICE round 7).
-        if dim is not None or block_size is not _UNSET:
-            raise ValueError(
-                "dim/block_size only apply to kernel='sql'; the arrow "
-                "kernel batches whole cells (pass kernel='sql' to tune "
-                "the blocked triangle join)")
-        return _semdedup_survivors_arrow(tagged, threshold, id_col, vec_col)
-    if kernel != "sql":
-        raise ValueError(f"unknown kernel {kernel!r} (arrow|sql)")
-    # _UNSET -> the blocked default (1024: the measured skew-spreading
-    # operating point); an EXPLICIT block_size=None selects the plain
-    # cell equi-join — previously unreachable through this API because
-    # None doubled as "unset" (round-8 advice: sentinel, not None).
-    return _semdedup_survivors(tagged, threshold, id_col, vec_col, dim,
-                               block_size=1024 if block_size is _UNSET
-                               else block_size)
+    return _semdedup_survivors_arrow(tagged, threshold, id_col, vec_col)
 
 
 def nearest_within_group(embeddings: DataFrame, group_col: str = "label",

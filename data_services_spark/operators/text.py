@@ -400,31 +400,12 @@ def _cls_weight(bucket: Column) -> Column:
         - F.lit(_CLS_SHIFT)
 
 
-# Validation memo for hashed_linear_score's weights-table gate: id ->
-# weakref of the already-validated DataFrame (the weakref's liveness
-# check makes id reuse after GC harmless — a dead ref never matches).
-_CLS_VALIDATED: dict[int, object] = {}
-
-
-def _weights_validated(wdf: DataFrame) -> bool:
-    ref = _CLS_VALIDATED.get(id(wdf))
-    return ref is not None and ref() is wdf
-
-
-def _mark_weights_validated(wdf: DataFrame) -> None:
-    import weakref
-    key = id(wdf)
-    _CLS_VALIDATED[key] = weakref.ref(
-        wdf, lambda _r, k=key: _CLS_VALIDATED.pop(k, None))
-
-
 def hashed_linear_score(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n_buckets: int = 256,
                         n_pair_buckets: int = 65536, seed: int = 7,
                         weights: DataFrame | None = None,
                         pair_weights: DataFrame | None = None,
-                        extra_cols: tuple[str, ...] = (),
-                        validate: bool = True) -> DataFrame:
+                        extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """fastText-style hashed linear quality classifier (the DCLM /
     CCNet model-based filter): mean-pooled word + word-bigram features,
     each hashed to a fixed-size bucket space, scored against a linear
@@ -504,18 +485,11 @@ def hashed_linear_score(docs: DataFrame, text_col: str = "text",
         if pair_weights is None:
             raise ValueError("pair_weights required when weights given")
         # integer-contract gate (round-10 advice): one tiny aggregate
-        # per model table — never a per-row check on the corpus. The
-        # verdict is MEMOIZED per weights-DataFrame identity (round-10
-        # advice #4): the gate runs eagerly at construction, so a
-        # caller building plans in a loop (per-micro-batch foreachBatch)
-        # with the SAME model tables pays the two extra Spark jobs once,
-        # not per call. `validate=False` skips entirely for callers that
-        # pre-validate (the gate's raise conditions are properties of
-        # the model export, not of the scored corpus).
+        # per model table — never a per-row check on the corpus. It
+        # runs eagerly on every call that passes weights: two small
+        # Spark jobs over broadcast-sized tables.
         for wdf, wname in ((weights, "weights"),
                            (pair_weights, "pair_weights")):
-            if not validate or _weights_validated(wdf):
-                continue
             chk = wdf.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count(F.col("bucket")).alias("nb"),  # non-null only
@@ -545,7 +519,6 @@ def hashed_linear_score(docs: DataFrame, text_col: str = "text",
                     " would silently zero or truncate through the"
                     " integer cast; scale and round the export to"
                     " integers (the logit sign is scale-invariant)")
-            _mark_weights_validated(wdf)
         # explode_outer, not explode: a NULL text tokenizes to a NULL
         # array, and a plain explode would DROP the document from this
         # path while the formula path keeps it (with NULL outputs) —

@@ -164,9 +164,7 @@ def sliding(events: DataFrame, ts_col: str, duration: str, slide: str,
 
 
 def bucket_by_leading_key(df: DataFrame, key_col: str,
-                          num_buckets: int,
-                          bucket_alias: str = "__bucket",
-                          balance: str = "linear") -> DataFrame:
+                          num_buckets: int) -> DataFrame:
     """Assign each row an order-consistent bucket id that is a PURE
     FUNCTION OF THE ROW'S DATA — `least(n-1, floor((k - min) / span * n))`
     over the leading order column, with min/max supplied by a one-row
@@ -187,21 +185,10 @@ def bucket_by_leading_key(df: DataFrame, key_col: str,
     double is order-preserving, floor is monotone), so bucket i's rows
     all precede bucket i+1's in the total order; equal keys always share
     a bucket; NULL keys land in bucket 0 (Spark default NULLS FIRST).
-    Balance modes (both data-derived and order-consistent):
-
-    - ``"linear"`` (default): min/max linear spacing — one tiny
-      aggregate, ideal for roughly-uniform keys (dense ids, epochs);
-      skewed distributions give uneven buckets (correctness
-      unaffected).
-    - ``"quantile"``: boundaries at exact key percentiles (one
-      one-row aggregate of ``num_buckets - 1`` ``F.percentile`` values,
-      broadcast; rows self-assign by counting boundaries below their
-      key — a codegen sum of comparisons). Balanced under ANY
-      distribution, bounded only by ties: rows equal to a boundary
-      share a bucket. Cost is O(num_buckets) expression terms per row —
-      use for moderate bucket counts (<=128); exact percentile is a
-      deterministic sort-based aggregate, so buckets are stable across
-      partitionings like everything else here.
+    The spacing is linear between min and max — one tiny aggregate,
+    ideal for roughly-uniform keys (dense ids, epochs); skewed
+    distributions give uneven buckets (correctness unaffected). The
+    bucket lands in column ``__bucket``.
 
     String/binary keys get a monotone numeric surrogate: the first 8
     bytes, zero-padded, read as an unsigned big-endian integer — exactly
@@ -228,35 +215,6 @@ def bucket_by_leading_key(df: DataFrame, key_col: str,
         raise ValueError(
             f"bucket_by_leading_key needs a numeric/timestamp/string "
             f"leading order column; {key_col} is {dt.simpleString()}.")
-    if balance == "quantile":
-        if num_buckets > 128:
-            import warnings
-
-            # Honor the caller's explicit choice, but loudly: the mode
-            # costs num_buckets-1 exact percentile aggregates plus that
-            # many per-row comparison terms — past ~128 the expression
-            # tree's codegen cost dwarfs any balance win (the <=128
-            # guidance above). Callers who hit this via a derived
-            # default instead get the capped default in
-            # scalable_running_sum.
-            warnings.warn(
-                f"balance='quantile' with num_buckets={num_buckets} "
-                "builds an O(num_buckets) expression tree per row; "
-                "keep it <=128 (see docstring) or use balance='linear'",
-                stacklevel=2)
-        qs = [i / num_buckets for i in range(1, num_buckets)]
-        bounds = df.agg(*[F.percentile(key, q).alias(f"__qb{i}")
-                          for i, q in enumerate(qs)])
-        bucket = F.lit(0)
-        for i in range(len(qs)):
-            bucket = bucket + F.when(key > F.col(f"__qb{i}"), 1) \
-                .otherwise(0)
-        return (df.crossJoin(F.broadcast(bounds))
-                .withColumn(bucket_alias, bucket.cast("int"))
-                .drop(*[f"__qb{i}" for i in range(len(qs))]))
-    if balance != "linear":
-        raise ValueError(f"balance must be 'linear' or 'quantile', "
-                         f"got {balance!r}")
     stats = df.agg(F.min(key).alias("__kmin"), F.max(key).alias("__kmax"))
     span = F.col("__kmax") - F.col("__kmin")
     # NULL keys MUST branch explicitly to bucket 0 (Spark sorts them
@@ -270,14 +228,13 @@ def bucket_by_leading_key(df: DataFrame, key_col: str,
     bucket = F.least(F.lit(num_buckets - 1),
                      F.floor(frac * num_buckets)).cast("int")
     return (df.crossJoin(F.broadcast(stats))
-            .withColumn(bucket_alias, bucket)
+            .withColumn("__bucket", bucket)
             .drop("__kmin", "__kmax"))
 
 
 def scalable_running_sum(df: DataFrame, order_cols: Sequence[str],
                          value: Column | str, out: str,
-                         num_partitions: int | None = None,
-                         balance: str = "linear") -> DataFrame:
+                         num_partitions: int | None = None) -> DataFrame:
     """Global running sum WITHOUT a single-partition sort — the two-pass
     prefix-sum decomposition for the pattern `SUM(x) OVER (ORDER BY ...
     ROWS UNBOUNDED PRECEDING)` that otherwise funnels the whole table
@@ -306,14 +263,7 @@ def scalable_running_sum(df: DataFrame, order_cols: Sequence[str],
     spark = df.sparkSession
     n = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if num_partitions is None and balance == "quantile":
-        # A derived default (shuffle.partitions, typically 200) would
-        # silently exceed quantile mode's <=128 expression-tree guidance
-        # (round-5 advisor); more buckets past the core count buy no
-        # balance anyway. Explicit num_partitions is honored (with a
-        # warning past 128, see bucket_by_leading_key).
-        n = min(n, 128)
-    d = bucket_by_leading_key(df, order_cols[0], n, balance=balance)
+    d = bucket_by_leading_key(df, order_cols[0], n)
     w_in = (Window.partitionBy("__bucket").orderBy(*oc)
             .rowsBetween(Window.unboundedPreceding, 0))
     t = d.withColumn("__run", F.sum(v).over(w_in))

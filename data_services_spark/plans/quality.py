@@ -20,10 +20,8 @@ boolean verdict against its threshold):
 - ``matches(col, regex)``  — fraction of values matching a pattern
 - ``min_rows(n)``          — table cardinality floor
 
-Exact ``unique`` uses `count_distinct`, which Spark executes with an
-expand + two-phase aggregate — still one scan. At 100 TB swap
-``approx=True`` to ride `approx_count_distinct` (HLL sketch, no
-expand); the report then marks the metric approximate.
+``unique`` uses `count_distinct`, which Spark executes with an expand +
+two-phase aggregate — still one scan.
 """
 
 from __future__ import annotations
@@ -62,12 +60,10 @@ def not_null(col: str, threshold: float = 1.0) -> Check:
                  _frac(F.col(col).isNotNull()), threshold)
 
 
-def unique(col: str, threshold: float = 1.0, approx: bool = False) -> Check:
-    d = (F.approx_count_distinct(col) if approx else F.count_distinct(col))
+def unique(col: str, threshold: float = 1.0) -> Check:
     metric = F.when(F.count(col) == 0, F.lit(1.0)) \
-              .otherwise(d.cast("double") / F.count(col))
-    kind = "unique_approx" if approx else "unique"
-    return Check(f"{kind}:{col}", col, metric, threshold)
+              .otherwise(F.count_distinct(col).cast("double") / F.count(col))
+    return Check(f"unique:{col}", col, metric, threshold)
 
 
 def accepted(col: str, values: Sequence[str],

@@ -37,10 +37,12 @@ _RUNTIME_CONFS = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "262144",
     # Arrow-optimized Python UDTF evaluation (D5 surface).
     "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
-    # spark.sql.parquet.columnarReaderBatchSize is added at
-    # configure_session() time from $SPARK_GRAFT_PARQUET_BATCH_ROWS — like
-    # every other env knob it must be read at CALL time, not import time,
-    # or setting it programmatically after import silently no-ops.
+    # Parquet vectorized-reader batch rows: 4x the 4096 default. Measured
+    # at the sf1 bench: q1 scan-agg 0.46->0.32s, tumbling 0.51->0.35s —
+    # larger column batches amortize per-batch reader overhead; 65536 is
+    # marginally faster still on narrow scans but costs batch x row-width
+    # heap per open reader (risky on wide text schemas).
+    "spark.sql.parquet.columnarReaderBatchSize": "16384",
     # Scale posture on ANY session, driver-owned included: these are all
     # runtime-settable SQL confs, so apply them defensively rather than
     # only at build time.
@@ -82,15 +84,6 @@ _BCAST_DEFAULT = 16 * 1024 * 1024
 # value there inflates task counts pathologically.
 _AQE_ADVISORY_ENV = "SPARK_GRAFT_AQE_ADVISORY_BYTES"
 
-# Parquet vectorized-reader batch rows: 4x the 4096 default. Measured at
-# the sf1 bench: q1 scan-agg 0.46->0.32s, tumbling 0.51->0.35s — larger
-# column batches amortize per-batch reader overhead; 65536 is marginally
-# faster still on narrow scans but costs batch x row-width heap per open
-# reader (risky on wide text schemas), so 16384 is the global and
-# $SPARK_GRAFT_PARQUET_BATCH_ROWS overrides per workload.
-_PARQUET_BATCH_ENV = "SPARK_GRAFT_PARQUET_BATCH_ROWS"
-_PARQUET_BATCH_DEFAULT = "16384"
-
 
 def _build_confs() -> dict[str, str]:
     """Static confs for sessions we create ourselves (JVM-start-time
@@ -105,18 +98,16 @@ def _build_confs() -> dict[str, str]:
     }
 
 
-def configure_session(spark: SparkSession,
-                      aqe_advisory_bytes: int | None = None) -> SparkSession:
+def configure_session(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (idempotent, cheap).
 
-    `aqe_advisory_bytes` (or $SPARK_GRAFT_AQE_ADVISORY_BYTES) overrides the
-    AQE coalesce target; unset leaves Spark's default (64MB) — see the
-    _AQE_ADVISORY_ENV comment for why this is not a hard global.
+    $SPARK_GRAFT_AQE_ADVISORY_BYTES overrides the AQE coalesce target;
+    unset leaves Spark's default (64MB) — see the _AQE_ADVISORY_ENV
+    comment for why this is not a hard global. Env knobs are read here,
+    at CALL time, so setting one after import still takes effect.
     """
     confs = dict(_RUNTIME_CONFS)
-    confs["spark.sql.parquet.columnarReaderBatchSize"] = \
-        os.environ.get(_PARQUET_BATCH_ENV, _PARQUET_BATCH_DEFAULT)
-    advisory = aqe_advisory_bytes or os.environ.get(_AQE_ADVISORY_ENV)
+    advisory = os.environ.get(_AQE_ADVISORY_ENV)
     if advisory:
         confs["spark.sql.adaptive.advisoryPartitionSizeInBytes"] = \
             str(int(advisory))

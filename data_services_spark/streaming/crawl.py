@@ -76,8 +76,7 @@ def ingest_crawl_batch(spark: SparkSession, batch: DataFrame,
                        state_dir: str, batch_id: int,
                        url_col: str = "url", page_col: str = "page",
                        id_col: str = "doc_id",
-                       num_buckets: int = 64,
-                       prune_state_read: bool = True) -> None:
+                       num_buckets: int = 64) -> None:
     """The foreachBatch body (callable directly for batch backfills):
     decide kept/duplicate for every page in ``batch``, extract+score
     the kept ones, update the URL state, write decisions + results.
@@ -103,21 +102,18 @@ def ingest_crawl_batch(spark: SparkSession, batch: DataFrame,
         "curl", F.coalesce(F.col("curl"), F.lit("invalid url <null>")))
     canon = canon.persist()
     try:
-        _decide_and_commit(spark, canon, state_dir, batch_id,
-                           num_buckets, prune_state_read)
+        _decide_and_commit(spark, canon, state_dir, batch_id, num_buckets)
     finally:
         canon.unpersist()
 
 
 def _decide_and_commit(spark: SparkSession, canon: DataFrame,
                        state_dir: str, batch_id: int,
-                       num_buckets: int,
-                       prune_state_read: bool) -> None:
+                       num_buckets: int) -> None:
     surv = None
     try:
         surv = _decide_and_commit_inner(spark, canon, state_dir,
-                                        batch_id, num_buckets,
-                                        prune_state_read)
+                                        batch_id, num_buckets)
     finally:
         if surv is not None:
             surv.unpersist()
@@ -125,8 +121,7 @@ def _decide_and_commit(spark: SparkSession, canon: DataFrame,
 
 def _decide_and_commit_inner(spark: SparkSession, canon: DataFrame,
                              state_dir: str, batch_id: int,
-                             num_buckets: int,
-                             prune_state_read: bool) -> DataFrame:
+                             num_buckets: int) -> DataFrame:
     id_type = canon.schema["doc_id"].dataType
 
     # intra-batch first-wins per canonical URL (min id carries page +
@@ -146,8 +141,7 @@ def _decide_and_commit_inner(spark: SparkSession, canon: DataFrame,
 
     # cross-corpus probe: pre-batch snapshot, bucket-pruned on curl
     probe = _probe_buckets(surv, _read_manifest(state_dir),
-                           bucket_cols=BUCKET_COLS) \
-        if prune_state_read else None
+                           bucket_cols=BUCKET_COLS)
     state = _state_before_batch(spark, state_dir, batch_id, buckets=probe)
     if state is not None:
         corpus_dup = (state.select("curl", "kept_id")

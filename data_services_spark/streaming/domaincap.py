@@ -103,8 +103,7 @@ def cap_domain_batch(spark: SparkSession, batch: DataFrame,
                      state_dir: str, batch_id: int, k: int,
                      domain_col: str = "domain",
                      id_col: str = "doc_id",
-                     num_buckets: int = 64,
-                     prune_state_read: bool = True) -> None:
+                     num_buckets: int = 64) -> None:
     """The foreachBatch body (callable directly for batch backfills):
     decide kept/capped/evicted for ``batch`` against the per-domain
     keep-list state, update the state, write decisions."""
@@ -169,7 +168,7 @@ def cap_domain_batch(spark: SparkSession, batch: DataFrame,
         keyed = (rows.filter(F.col("doc_id").isNotNull())
                  .select("domain", "doc_id").distinct().persist())
         _cap_and_commit(spark, keyed, null_ids, state_dir, batch_id, k,
-                        num_buckets, prune_state_read)
+                        num_buckets)
     finally:
         if keyed is not None:
             keyed.unpersist()
@@ -178,13 +177,11 @@ def cap_domain_batch(spark: SparkSession, batch: DataFrame,
 
 def _cap_and_commit(spark: SparkSession, rows: DataFrame,
                     null_ids: DataFrame, state_dir: str, batch_id: int,
-                    k: int, num_buckets: int,
-                    prune_state_read: bool) -> None:
+                    k: int, num_buckets: int) -> None:
     cand = _bottom_k(rows, k)
 
     probe = _probe_buckets(cand, _read_manifest(state_dir),
-                           bucket_cols=BUCKET_COLS) \
-        if prune_state_read else None
+                           bucket_cols=BUCKET_COLS)
     state = _state_before_batch(spark, state_dir, batch_id,
                                 buckets=probe)
     if state is not None:

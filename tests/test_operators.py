@@ -633,25 +633,6 @@ def test_bfs_levels_chain(spark):
     assert got == {1: 0, 2: 1, 3: 2}
 
 
-def test_bfs_checkpointed_matches_lazy_and_frees_blocks(spark):
-    from data_services_spark.operators.components import (
-        _persistent_rdd_ids, bfs_levels)
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "src long, dst long")
-    seeds = spark.createDataFrame([(1,), (10,)], "s long")
-    lazy = {(r["node"], r["dist"])
-            for r in bfs_levels(edges, seeds, iterations=3).collect()}
-    before = len(_persistent_rdd_ids(spark))
-    ck = bfs_levels(edges, seeds, iterations=3, checkpoint=True)
-    got = {(r["node"], r["dist"]) for r in ck.collect()}
-    after = len(_persistent_rdd_ids(spark))
-    assert got == lazy == {(1, 0), (2, 1), (3, 2), (4, 3),
-                           (10, 0), (11, 1)}
-    # only the final round's checkpoint may stay pinned
-    assert after - before <= 1
-
-
 def test_scalable_running_sum_matches_window_and_distributes(spark):
     from data_services_spark.operators.windows import scalable_running_sum
     from pyspark.sql import Window
@@ -1090,44 +1071,14 @@ def test_scalable_running_sum_string_keys(spark):
     assert got == want
 
 
-def test_quantile_bucket_count_capped_and_warned(spark):
-    """Round-5 advisor: balance='quantile' builds an O(num_buckets)
-    expression tree, so (a) the derived default in scalable_running_sum
-    caps at 128 instead of inheriting shuffle.partitions=200 silently,
-    and (b) an explicit count past 128 warns but is honored."""
-    import warnings
-
-    from data_services_spark.operators.windows import (
-        bucket_by_leading_key, scalable_running_sum,
-    )
-
-    df = spark.range(200).select(
-        F.col("id").alias("k"), (F.col("id") % 5 + 1).alias("v"))
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # any warning -> test failure
-        got = sorted(
-            (r["k"], r["s"]) for r in scalable_running_sum(
-                df, ["k"], "v", "s", balance="quantile").collect())
-    want = []
-    run = 0
-    for k in range(200):
-        run += k % 5 + 1
-        want.append((k, run))
-    assert got == want
-    with pytest.warns(UserWarning, match="num_buckets=150"):
-        bucket_by_leading_key(df, "k", 150, balance="quantile")
-
-
 def test_bucket_quantile_balance_on_skewed_keys(spark):
-    """balance='quantile' must (a) keep the running sum exact on a
-    heavily skewed key distribution and (b) actually balance where
-    linear bucketing collapses: with 99% of keys in [0,10) and a sparse
-    tail out to 1e9, linear puts ~everything in bucket 0."""
+    """The running sum stays exact on a heavily skewed key distribution:
+    with 99% of keys in [0,10) and a sparse tail out to 1e9, linear
+    bucketing puts ~everything in bucket 0 (balance suffers, values do
+    not)."""
     from pyspark.sql import Window
 
-    from data_services_spark.operators.windows import (
-        bucket_by_leading_key, scalable_running_sum,
-    )
+    from data_services_spark.operators.windows import scalable_running_sum
 
     rows = [(i % 10, 1, i) for i in range(990)] + \
         [(10**9 + i, 1, 1000 + i) for i in range(10)]
@@ -1136,34 +1087,18 @@ def test_bucket_quantile_balance_on_skewed_keys(spark):
         Window.unboundedPreceding, 0)
     want = sorted((r["k"], r["tie"], r["s"]) for r in
                   df.withColumn("s", F.sum("v").over(w)).collect())
-    for mode in ("linear", "quantile"):
-        got = sorted((r["k"], r["tie"], r["s"]) for r in
-                     scalable_running_sum(df, ["k", "tie"], "v", "s",
-                                          num_partitions=8,
-                                          balance=mode).collect())
-        assert got == want, mode
-
-    def max_bucket(mode):
-        b = bucket_by_leading_key(df, "k", 8, balance=mode)
-        return max(r["n"] for r in b.groupBy("__bucket")
-                   .agg(F.count(F.lit(1)).alias("n")).collect())
-
-    # linear: the whole head lands in bucket 0 (tail stretches the span)
-    assert max_bucket("linear") >= 990
-    # quantile: bounded by tie mass — each of the 10 head values is 99
-    # rows, so no bucket need exceed ~2 tie-groups
-    assert max_bucket("quantile") <= 250
-
-    with pytest.raises(ValueError, match="balance"):
-        bucket_by_leading_key(df, "k", 8, balance="nope")
+    got = sorted((r["k"], r["tie"], r["s"]) for r in
+                 scalable_running_sum(df, ["k", "tie"], "v", "s",
+                                      num_partitions=8).collect())
+    assert got == want
 
 
 def test_scalable_running_sum_null_keys_sort_first(spark):
     """NULL leading keys sort first (Spark NULLS FIRST) and must land in
-    bucket 0 under BOTH balance modes. The linear mode once sent them to
-    the LAST bucket because least()/greatest() SKIP nulls instead of
-    propagating them — least(n-1, NULL) = n-1 — silently shifting every
-    later row's offset."""
+    bucket 0. The bucketing once sent them to the LAST bucket because
+    least()/greatest() SKIP nulls instead of propagating them —
+    least(n-1, NULL) = n-1 — silently shifting every later row's
+    offset."""
     from pyspark.sql import Window
 
     from data_services_spark.operators.windows import scalable_running_sum
@@ -1176,13 +1111,11 @@ def test_scalable_running_sum_null_keys_sort_first(spark):
     want = sorted(((r["k"], r["tie"], r["s"]) for r in
                    df.withColumn("s", F.sum("v").over(w)).collect()),
                   key=repr)
-    for mode in ("linear", "quantile"):
-        got = sorted(((r["k"], r["tie"], r["s"]) for r in
-                      scalable_running_sum(df, ["k", "tie"], "v", "s",
-                                           num_partitions=4,
-                                           balance=mode).collect()),
-                     key=repr)
-        assert got == want, mode
+    got = sorted(((r["k"], r["tie"], r["s"]) for r in
+                  scalable_running_sum(df, ["k", "tie"], "v", "s",
+                                       num_partitions=4).collect()),
+                 key=repr)
+    assert got == want
 
 
 def _winnow_ref(text: str, k: int = 8, w: int = 4) -> list[int]:
@@ -1432,16 +1365,15 @@ def test_semdedup_indexed_matches_reference_both_layouts(spark, tmp_path):
 
 
 def test_semdedup_blocked_triangle_join_parity(spark, tmp_path):
-    """The blocked triangle join (skew fix for heavy k-means cells) must
-    produce bit-identical decisions to the plain cell self-join: blocks
-    partition members by id rank, so every (earlier, later) pair lands
-    in exactly one block-pair. block_size=7 forces multi-block cells on
-    a corpus with heavy duplicate clusters (the skew shape that
-    serializes the plain join into one straggler task at scale)."""
+    """The SQL cell equi-join (the literal-centroid twin's drop rule)
+    and the numpy kernel of semdedup_indexed decide identically on the
+    same (id, vec, cell) frame — the index corpus — on a corpus with
+    heavy duplicate clusters (the skew shape of hot k-means cells)."""
+    import os
     import random
 
     from data_services_spark.operators.similarity import (
-        ivf_build_index, semdedup_indexed,
+        _semdedup_survivors, ivf_build_index, semdedup_indexed,
     )
 
     rnd = random.Random(41)
@@ -1474,22 +1406,18 @@ def test_semdedup_blocked_triangle_join_parity(spark, tmp_path):
     margin = np.abs(off_diag - 0.98).min()
     assert margin > 1e-4, f"fixture pair within {margin} of threshold"
 
-    plain = {r["vec_id"]: (r["cell"], r["kept"])
-             for r in semdedup_indexed(spark, index_dir, threshold=0.98,
-                                       dim=dim, kernel="sql",
-                                       block_size=None).collect()}
-    blocked = {r["vec_id"]: (r["cell"], r["kept"])
-               for r in semdedup_indexed(spark, index_dir, threshold=0.98,
-                                         dim=dim, kernel="sql",
-                                         block_size=7).collect()}
-    assert plain == blocked
-    # the numpy kernel (default) decides identically on margin-bearing
-    # data — the documented Arrow-kernel float contract
+    tagged = spark.read.parquet(os.path.join(index_dir, "corpus")).select(
+        "vec_id", "embedding", F.col("__cell").cast("long").alias("cell"))
+    sql = {r["vec_id"]: (r["cell"], r["kept"])
+           for r in _semdedup_survivors(tagged, 0.98, "vec_id", "embedding",
+                                        dim).collect()}
+    # the numpy kernel decides identically on margin-bearing data — the
+    # documented Arrow-kernel float contract
     arrow = {r["vec_id"]: (r["cell"], r["kept"])
              for r in semdedup_indexed(spark, index_dir,
                                        threshold=0.98).collect()}
-    assert plain == arrow
-    assert sum(1 for c, k in plain.values() if not k) >= 80  # dups dropped
+    assert sql == arrow
+    assert sum(1 for c, k in sql.values() if not k) >= 80  # dups dropped
 
 
 def test_semdedup_arrow_kernel_single_python_boundary(spark, tmp_path):
@@ -1513,48 +1441,6 @@ def test_semdedup_arrow_kernel_single_python_boundary(spark, tmp_path):
                "PythonUDTF"):
         assert op not in plan
     assert df.count() == 40
-
-
-def test_semdedup_indexed_rejects_sql_knobs_on_arrow_kernel(spark, tmp_path):
-    """dim/block_size tune the SQL blocked-triangle join only; the
-    arrow kernel batches whole cells and ignores both.  Passing them
-    with kernel='arrow' must raise, not silently no-op (round-7
-    ADVICE: block_size looked tunable but did nothing on the default
-    path)."""
-    import pytest as _pytest
-
-    from data_services_spark.operators.similarity import (
-        ivf_build_index, semdedup_indexed,
-    )
-
-    e = spark.createDataFrame(
-        [(i, [float(i % 5), 1.0]) for i in range(20)],
-        "vec_id long, embedding array<float>")
-    index_dir = str(tmp_path / "ivf_knobs")
-    ivf_build_index(e, index_dir, n_cells=2, seed=3)
-    with _pytest.raises(ValueError, match="kernel='sql'"):
-        semdedup_indexed(spark, index_dir, threshold=0.9, block_size=64)
-    with _pytest.raises(ValueError, match="kernel='sql'"):
-        semdedup_indexed(spark, index_dir, threshold=0.9, dim=2)
-    # an EXPLICIT block_size=None is a knob too (it selects the plain
-    # equi-join below) — the arrow kernel must reject it just as
-    # loudly, not silently conflate it with "unset" (round-8 advice)
-    with _pytest.raises(ValueError, match="kernel='sql'"):
-        semdedup_indexed(spark, index_dir, threshold=0.9, block_size=None)
-    # the sql kernel still accepts them
-    assert semdedup_indexed(spark, index_dir, threshold=0.9,
-                            kernel="sql", dim=2,
-                            block_size=64).count() == 20
-    # explicit None reaches the UNBLOCKED triangle join (no __blk rank
-    # window in the plan) and decides identically to the blocked form
-    plain = semdedup_indexed(spark, index_dir, threshold=0.9,
-                             kernel="sql", block_size=None)
-    assert "__blk" not in plain._jdf.queryExecution().optimizedPlan() \
-        .toString()
-    blocked = semdedup_indexed(spark, index_dir, threshold=0.9,
-                               kernel="sql", block_size=64)
-    assert sorted(map(tuple, plain.collect())) == \
-        sorted(map(tuple, blocked.collect()))
 
 
 def test_ivf_auto_sizes_cells_and_warns_on_hot_cells(spark, tmp_path):

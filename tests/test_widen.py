@@ -232,11 +232,11 @@ def test_env_knobs_are_deployment_settings_only():
         names |= set(re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read_text()))
     assert names == {f"SPARK_GRAFT_{n}" for n in (
         "CPUS", "MASTER", "DRIVER_MEM", "SF_DIR", "AQE_ADVISORY_BYTES",
-        "BCAST_BYTES", "PARQUET_BATCH_ROWS")}
+        "BCAST_BYTES")}
 
 
 def test_one_driver_side_memo():
-    """Cache-creep guard: the only module-level memo dict in the
+    """Cache-creep guard: the only module-level empty dict in the
     package is plans/plan_memo.py's stat-checked ``_MEMO``; nothing
     keys state on a py4j wrapper id; ``register`` has no caching
     parameter, and QUERIES/RAW_QUERIES are one dict of fresh builds."""
@@ -253,8 +253,7 @@ def test_one_driver_side_memo():
         text = f.read_text()
         rel = f.relative_to(pkg).as_posix()
         memos += [f"{rel}:{m}" for m in re.findall(
-            r"^(_[A-Z_]*(?:CACHE|MEMO|PREPARED|BY_SESSION)[A-Z_]*): dict",
-            text, re.M)]
+            r"^(_[A-Z_]+): dict\[.*\] = \{\}$", text, re.M)]
         if "id(spark._jsparkSession)" in text:
             id_keys.append(rel)
     assert memos == ["plans/plan_memo.py:_MEMO"]
@@ -262,6 +261,47 @@ def test_one_driver_side_memo():
     assert list(inspect.signature(register).parameters) == \
         ["name", "sql", "lazy_build"]
     assert QUERIES is RAW_QUERIES
+
+
+def test_one_path_per_operator():
+    """Option-creep guard: the strategy parameters that selected a
+    second code path nobody outside the tests ran stay deleted. Each
+    operator has the one path every registered query runs."""
+    import inspect
+
+    from data_services_spark.operators.bpe import bpe_train
+    from data_services_spark.operators.components import bfs_levels
+    from data_services_spark.operators.normalize import (
+        apply_node_map, apply_predicate_map)
+    from data_services_spark.operators.sampling import pack_by_token_budget
+    from data_services_spark.operators.similarity import semdedup_indexed
+    from data_services_spark.operators.text import hashed_linear_score
+    from data_services_spark.operators.windows import (
+        bucket_by_leading_key, scalable_running_sum)
+    from data_services_spark.plans.quality import unique
+    from data_services_spark.session import configure_session
+    from data_services_spark.streaming.crawl import ingest_crawl_batch
+    from data_services_spark.streaming.domaincap import cap_domain_batch
+
+    deleted = {
+        semdedup_indexed: {"kernel", "block_size", "dim"},
+        bucket_by_leading_key: {"balance", "bucket_alias"},
+        scalable_running_sum: {"balance"},
+        bpe_train: {"strict_order"},
+        bfs_levels: {"checkpoint"},
+        pack_by_token_budget: {"persist"},
+        apply_node_map: {"broadcast"},
+        apply_predicate_map: {"broadcast"},
+        unique: {"approx"},
+        hashed_linear_score: {"validate"},
+        cap_domain_batch: {"prune_state_read"},
+        ingest_crawl_batch: {"prune_state_read"},
+        configure_session: {"aqe_advisory_bytes"},
+    }
+    found = {fn.__name__: sorted(names & set(
+                 inspect.signature(fn).parameters))
+             for fn, names in deleted.items()}
+    assert {k: v for k, v in found.items() if v} == {}
 
 
 def test_dir_data_file_sizes_recursive(tmp_path):
