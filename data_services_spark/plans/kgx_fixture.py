@@ -109,6 +109,51 @@ FROM {lineitem}
 """
 
 
+# Int proxies of the kgx_edges key and the string builders that map each
+# proxy back to its column. Every builder is injective on its proxy's
+# domain (tests/test_kgx_fixture.py pins it on the fixture), so grouping,
+# joining or distinct-counting on the proxies gives exactly the groups
+# of the string form; the proxy-keyed rewrites (kgx_edge_merge,
+# kgx_two_hop, record_counts, skew_salted_degree) shuffle ints and build
+# each string once per output row.
+
+def subject_proxy() -> F.Column:
+    """subject = 'ORD:' || l_orderkey."""
+    return F.col("l_orderkey")
+
+
+def object_proxy() -> F.Column:
+    """object = 'PART:' || l_partkey."""
+    return F.col("l_partkey")
+
+
+def returned_proxy() -> F.Column:
+    """The predicate CASE's fibre: true exactly for biolink:returned."""
+    return F.col("l_returnflag").eqNullSafe(F.lit("R"))
+
+
+def source_proxy() -> F.Column:
+    """primary_knowledge_source = 'infores:src' || (l_suppkey % 3)."""
+    return F.col("l_suppkey") % 3
+
+
+def subject_curie(proxy) -> F.Column:
+    return _curie("ORD", proxy)
+
+
+def object_curie(proxy) -> F.Column:
+    return _curie("PART", proxy)
+
+
+def predicate_curie(returned) -> F.Column:
+    return (F.when(returned, F.lit("biolink:returned"))
+            .otherwise(F.lit("biolink:contains")))
+
+
+def source_curie(proxy) -> F.Column:
+    return F.concat(F.lit("infores:src"), proxy.cast("string"))
+
+
 def kgx_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edges from lineitem: ORD:<orderkey> -[predicate]-> PART:<partkey>.
 
@@ -190,12 +235,15 @@ raw_pred_edges AS (
 
 
 def predicate_map(spark: SparkSession) -> DataFrame:
-    """Tiny raw→biolink predicate vocabulary (broadcast side)."""
-    return spark.createDataFrame(
-        [("returned", "biolink:returned"),
-         ("contains", "biolink:contains"),
-         ("ships", "biolink:ships")],  # unused entry: map ⊅ data is normal
-        "raw_pred string, biolink_pred string")
+    """Tiny raw→biolink predicate vocabulary (broadcast side). Built
+    from an Arrow table, which plans a LocalTableScan; a Python list
+    would plan a Scan ExistingRDD, whose RDD keeps the plan out of the
+    analyzed-plan memo."""
+    import pyarrow as pa
+    return spark.createDataFrame(pa.table({
+        "raw_pred": ["returned", "contains", "ships"],  # ships: unused
+        "biolink_pred": ["biolink:returned", "biolink:contains",
+                         "biolink:ships"]}))
 
 
 PREDICATE_MAP_SQL = """

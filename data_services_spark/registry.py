@@ -17,6 +17,7 @@ bit-stable across Spark and DuckDB (SURVEY §7 "hard parts"):
 
 from __future__ import annotations
 
+import functools
 import os.path
 
 from collections.abc import Callable
@@ -73,24 +74,27 @@ def register(name: str, sql: str | None = None, lazy_build: bool = False):
     re-executing an already-built plan never lands here.
 
     ``lazy_build=True`` (round 14, VERDICT ask #6) declares the builder
-    PURE-LAZY — no jobs run at build time, no persist/one-slot cache in
-    the plan, no closures over values computed from the input — and
-    routes the entry through the analyzed-plan rebuild
+    PURE-LAZY — no jobs run at build time, no persist/one-slot cache or
+    Python RDD in the plan, no closures over values computed from the
+    input except through the stat-checked memo — and routes the entry
+    through the analyzed-plan rebuild
     (plans/plan_memo.py): repeat fresh builds wrap the memoized
     analyzed tree in a brand-new Dataset, so every execution still
     re-reads parquet and re-shuffles in full while the pure driver
     constant (py4j tree construction + Catalyst analysis + widen
     probes) is paid once per (session, sf_dir, split confs, file
-    stats)."""
+    stats). The entry carries the flag as ``lazy_build`` and the
+    builder as ``__wrapped__``; tests/test_plan_memo.py checks the
+    contract for every flagged entry."""
     def deco(fn: QueryFn) -> QueryFn:
+        @functools.wraps(fn)
         def building(spark: SparkSession, sf_dir: str) -> DataFrame:
             release_all_slots()
             if lazy_build:
                 return rebuild_or_build(spark, name, sf_dir, fn)
             return fn(spark, sf_dir)
 
-        building.__name__ = fn.__name__
-        building.__doc__ = fn.__doc__
+        building.lazy_build = lazy_build
         QUERIES[name] = building
         if sql is not None:
             ORACLES[name] = sql
@@ -794,22 +798,18 @@ def kgx_edge_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_linenumber"),
         "l_orderkey")
     g = (li.groupBy(
-            F.col("l_orderkey"),
-            F.col("l_returnflag").eqNullSafe(F.lit("R")).alias("__ret"),
-            F.col("l_partkey"),
-            (F.col("l_suppkey") % 3).alias("__pks"))
+            kgx.subject_proxy(),
+            kgx.returned_proxy().alias("__ret"),
+            kgx.object_proxy(),
+            kgx.source_proxy().alias("__pks"))
          .agg(F.collect_set("l_linenumber").alias("__lns"),
               F.collect_set(F.col("l_suppkey") % 2).alias("__aggs"),
               F.count(F.lit(1)).alias("n_merged")))
     return g.select(
-        F.concat(F.lit("ORD:"), F.col("l_orderkey").cast("string"))
-        .alias("subject"),
-        F.when(F.col("__ret"), F.lit("biolink:returned"))
-        .otherwise(F.lit("biolink:contains")).alias("predicate"),
-        F.concat(F.lit("PART:"), F.col("l_partkey").cast("string"))
-        .alias("object"),
-        F.concat(F.lit("infores:src"), F.col("__pks").cast("string"))
-        .alias("primary_knowledge_source"),
+        kgx.subject_curie(kgx.subject_proxy()).alias("subject"),
+        kgx.predicate_curie(F.col("__ret")).alias("predicate"),
+        kgx.object_curie(kgx.object_proxy()).alias("object"),
+        kgx.source_curie(F.col("__pks")).alias("primary_knowledge_source"),
         F.array_join(F.array_sort(F.transform(
             "__lns",
             lambda x: F.concat(F.lit("PMID:"), (x * 7).cast("string")))),
@@ -828,7 +828,7 @@ SELECT COALESCE(m.canon_id, e.subject) AS subject,
        e.predicate, e.object,
        (m.canon_id IS NOT NULL) AS subject_normalized
 FROM order_edges e LEFT JOIN norm_map m ON e.subject = m.orig_id
-""")
+""", lazy_build=True)
 def kgx_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 endpoint normalization: broadcast-join id rewrite
     `[R: Common/kgx_file_normalizer.py — unverified]`."""
@@ -847,7 +847,7 @@ SELECT subject,
        object, line_no,
        (m.biolink_pred IS NOT NULL) AS predicate_normalized
 FROM raw_pred_edges e LEFT JOIN pred_map m ON e.predicate = m.raw_pred
-""")
+""", lazy_build=True)
 def kgx_edge_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 predicate normalization (EdgeNormalizer twin): broadcast map join
     rewriting raw relation verbs to biolink predicates, unmapped rows
@@ -865,7 +865,7 @@ WITH {kgx.NORM_MAP_SQL.strip()},
 SELECT DISTINCT e.subject AS failed_id
 FROM order_edges e
 WHERE NOT EXISTS (SELECT 1 FROM norm_map m WHERE m.orig_id = e.subject)
-""")
+""", lazy_build=True)
 def kgx_norm_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 normalization-failure routing (anti join)."""
     return normalization_failures(kgx.order_edges(spark, sf_dir),
@@ -885,7 +885,7 @@ SELECT e.subject, e.predicate, e.object, e.primary_knowledge_source
 FROM kgx_edges e
 WHERE EXISTS (SELECT 1 FROM node_ids n WHERE n.id = e.subject)
   AND EXISTS (SELECT 1 FROM node_ids n WHERE n.id = e.object)
-""")
+""", lazy_build=True)
 def kgx_connected_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 connected-edge-subset merge strategy: keep edges with both
     endpoints in the node set (two semi joins)
@@ -927,7 +927,7 @@ SELECT subject,
        CAST(COUNT(DISTINCT neighbor) AS BIGINT) AS n_neighbors,
        CAST(COUNT(*) AS BIGINT) AS n_paths
 FROM p GROUP BY subject
-""")
+""", lazy_build=True)
 def kgx_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KG pattern matching (the meta-path query every graph user runs:
     "chemical -[affects]-> gene <-[associated_with]- disease"): typed
@@ -956,10 +956,9 @@ def kgx_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_partkey"),
         "l_orderkey")
-    e = (li.select(F.col("l_orderkey").alias("__s"),
-                   F.col("l_returnflag").eqNullSafe(F.lit("R"))
-                   .alias("__ret"),
-                   F.col("l_partkey").alias("__m"))
+    e = (li.select(kgx.subject_proxy().alias("__s"),
+                   kgx.returned_proxy().alias("__ret"),
+                   kgx.object_proxy().alias("__m"))
          .distinct())
     mid = (load_table(spark, sf_dir, "part")
            .filter(F.col("p_retailprice") > 950)
@@ -974,10 +973,8 @@ def kgx_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("__m").alias("n_mid"),
         F.count_distinct("__nbr").alias("n_neighbors"),
         F.count(F.lit(1)).alias("n_paths"))
-    return agg.select(
-        F.concat(F.lit("ORD:"), F.col("__s").cast("string"))
-        .alias("subject"),
-        "n_mid", "n_neighbors", "n_paths")
+    return agg.select(kgx.subject_curie(F.col("__s")).alias("subject"),
+                      "n_mid", "n_neighbors", "n_paths")
 
 
 # EP2 graph-spec build: the src_nodes / edge CTEs shared by the
@@ -1117,7 +1114,7 @@ SELECT subject, predicate, object, primary_knowledge_source,
        COUNT(*) AS n_merged
 FROM all_edges
 GROUP BY subject, predicate, object, primary_knowledge_source
-""")
+""", lazy_build=True)
 def graph_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2 graph-spec build end-to-end (plans/graph_build.py::build_graph
     `[R: Common/build_manager.py — GraphBuilder — unverified]`): a
@@ -1144,7 +1141,7 @@ SELECT id,
        {_ARGMIN.format(v='acctbal')},
        COUNT(*) AS n_merged
 FROM src_nodes GROUP BY id
-""")
+""", lazy_build=True)
 def graph_build_nodes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2 build, node side: spec-stamped source ranks (NOT the fixture's
     row-level ranks) drive first-wins, exercising the per-source
@@ -1169,7 +1166,7 @@ FROM kgx_edges e
 JOIN node_cat sc ON e.subject = sc.id
 JOIN node_cat oc ON e.object = oc.id
 GROUP BY sc.node_category, e.predicate, oc.node_category
-""")
+""", lazy_build=True)
 def kgx_meta_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 meta-KG triple counts `[R: Common/meta_kg.py — unverified]`."""
     o = load_table(spark, sf_dir, "orders")
@@ -1188,7 +1185,7 @@ def kgx_meta_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {kgx.KGX_EDGES_SQL.strip()}
 SELECT subject, COUNT(*) AS degree
 FROM kgx_edges GROUP BY subject
-""")
+""", lazy_build=True)
 def skew_salted_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe node out-degree via two-phase salted aggregation
     (operators/skew.py) — identical result to a plain groupBy, but hub
@@ -1204,9 +1201,7 @@ def skew_salted_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
     deg = salted_count(li, ["l_orderkey"], out="degree")
     return deg.select(
-        F.concat(F.lit("ORD:"), F.col("l_orderkey").cast("string"))
-        .alias("subject"),
-        "degree")
+        kgx.subject_curie(kgx.subject_proxy()).alias("subject"), "degree")
 
 
 @register("cluster_collect", """
@@ -2313,6 +2308,36 @@ def semdedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                     threshold=0.9, dim=64)
 
 
+def _ivf_index(emb: DataFrame, sf_dir: str) -> str:
+    """The persisted 16-cell IVF index over ``emb`` (sf_dir's
+    embeddings table) that ivf_topk and semdedup_trained share, built
+    on first use. The directory is keyed on the absolute sf_dir, so two
+    data directories with one basename never share an index, and
+    centroids.json records the embeddings files' (size, mtime_ns): an
+    in-place rewrite rebuilds the index instead of serving it stale
+    (files that cannot be stat'ed locally rebuild it on every call)."""
+    import hashlib
+
+    from data_services_spark.operators.similarity import (
+        _ivf_write_meta, ivf_build_index, ivf_load_meta,
+    )
+    from data_services_spark.plans.plan_memo import _local_file_stats
+    n_cells, seed = 16, 42
+    sf_abs = os.path.abspath(sf_dir)
+    index_dir = os.path.join(
+        "spark-warehouse",
+        f"ivf_{os.path.basename(sf_abs)}"
+        f"_{hashlib.sha1(sf_abs.encode()).hexdigest()[:10]}"
+        f"_c{n_cells}_s{seed}")
+    stats = _local_file_stats(sorted(emb.inputFiles()))
+    stats = None if stats is None else [list(st) for st in stats]
+    meta = ivf_load_meta(index_dir)
+    if meta is None or stats is None or meta.get("input_stats") != stats:
+        meta = ivf_build_index(emb, index_dir, n_cells=n_cells, seed=seed)
+        _ivf_write_meta(index_dir, {**meta, "input_stats": stats})
+    return index_dir
+
+
 @register("ivf_topk")  # trained k-means cells -> rows-only (recall in pytest)
 def ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 IVF ANN, build-once-probe-many: the first call trains the
@@ -2325,19 +2350,11 @@ def ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only driver check;
     tests/test_operators.py::test_ivf_topk_recall_vs_bruteforce asserts
     recall >= 0.9 vs brute force."""
-    import os
-
     from data_services_spark.operators.similarity import (
-        _query_vector, ivf_build_index, ivf_load_meta, ivf_probe_topk,
+        _query_vector, ivf_probe_topk,
     )
-    n_cells, seed = 16, 42
-    index_dir = os.path.join(
-        "spark-warehouse",
-        f"ivf_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_c{n_cells}_s{seed}")
     e = load_table(spark, sf_dir, "embeddings")
-    if ivf_load_meta(index_dir) is None:
-        ivf_build_index(e, index_dir, n_cells=n_cells, seed=seed)
+    index_dir = _ivf_index(e, sf_dir)
     qv = _query_vector(e, 0, "vec_id", "embedding")
     return ivf_probe_topk(spark, index_dir, qv, k=10, nprobe=4,
                           exclude_id=0)
@@ -2355,19 +2372,8 @@ def semdedup_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_semdedup_indexed_matches_reference_both_layouts proves
     trained-index decisions equal a Python reference on both index
     layouts, appends included."""
-    import os
-
-    from data_services_spark.operators.similarity import (
-        ivf_build_index, ivf_load_meta, semdedup_indexed,
-    )
-    n_cells, seed = 16, 42
-    index_dir = os.path.join(
-        "spark-warehouse",
-        f"ivf_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_c{n_cells}_s{seed}")
-    if ivf_load_meta(index_dir) is None:
-        ivf_build_index(load_table(spark, sf_dir, "embeddings"),
-                        index_dir, n_cells=n_cells, seed=seed)
+    from data_services_spark.operators.similarity import semdedup_indexed
+    index_dir = _ivf_index(load_table(spark, sf_dir, "embeddings"), sf_dir)
     return semdedup_indexed(spark, index_dir, threshold=0.9)
 
 
@@ -3651,7 +3657,7 @@ SELECT primary_knowledge_source,
        CAST(COUNT(DISTINCT object) AS BIGINT) AS n_objects
 FROM kgx_edges
 GROUP BY primary_knowledge_source
-""")
+""", lazy_build=True)
 def record_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 per-source record counting — the load-metadata numbers the
     reference tracks per stage `[R: Common/metadata.py — unverified]`.
@@ -3672,13 +3678,12 @@ def record_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_suppkey"),
         "l_orderkey")
-    g = (li.groupBy((F.col("l_suppkey") % 3).alias("__pks"))
+    g = (li.groupBy(kgx.source_proxy().alias("__pks"))
          .agg(F.count(F.lit(1)).alias("n_records"),
-              F.countDistinct("l_orderkey").alias("n_subjects"),
-              F.countDistinct("l_partkey").alias("n_objects")))
+              F.countDistinct(kgx.subject_proxy()).alias("n_subjects"),
+              F.countDistinct(kgx.object_proxy()).alias("n_objects")))
     return g.select(
-        F.concat(F.lit("infores:src"), F.col("__pks").cast("string"))
-        .alias("primary_knowledge_source"),
+        kgx.source_curie(F.col("__pks")).alias("primary_knowledge_source"),
         "n_records", "n_subjects", "n_objects")
 
 

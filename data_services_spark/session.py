@@ -82,6 +82,18 @@ _BCAST_DEFAULT = 16 * 1024 * 1024
 # SPARK_GRAFT_AQE_ADVISORY_BYTES=4194304. At cluster scale against TB
 # shuffles leave it unset (Spark's 64MB default) or set 64-256MB; a small
 # value there inflates task counts pathologically.
+# A set advisory also sets the coalescing floor
+# (coalescePartitions.minPartitionSize) to advisory // 64, Spark's own
+# default ratio (64MB : 1MB). AQE's parallelism-first coalescing keeps
+# defaultParallelism partitions for any shuffle above cores x floor.
+# Under Spark's 1MB floor, kgx_edge_merge's 1.45MB shuffle coalesced to
+# ONE partition, so its post-exchange ObjectHashAggregate and parquet
+# write ran as one ~0.5 s task (perfbench kg_etl at sf0.01, 4 cores,
+# traced). With the 64KB floor at the 4MB advisory that stage runs on
+# every core: kg_etl tasks 14 -> 19, core-busy ratio 0.18 -> 0.34, and
+# kgx_edge_merge (already plan-memoized, so the floor is its only
+# change) 0.94 -> 0.68 s warm median over 10 interleaved seed pairs.
+# Unset (cluster deploys, __spark_entry__.py), Spark's 1MB floor stays.
 _AQE_ADVISORY_ENV = "SPARK_GRAFT_AQE_ADVISORY_BYTES"
 
 
@@ -101,16 +113,19 @@ def _build_confs() -> dict[str, str]:
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (idempotent, cheap).
 
-    $SPARK_GRAFT_AQE_ADVISORY_BYTES overrides the AQE coalesce target;
-    unset leaves Spark's default (64MB) — see the _AQE_ADVISORY_ENV
-    comment for why this is not a hard global. Env knobs are read here,
-    at CALL time, so setting one after import still takes effect.
+    $SPARK_GRAFT_AQE_ADVISORY_BYTES overrides the AQE coalesce target
+    and sets the coalescing floor to 1/64 of it; unset leaves Spark's
+    defaults (64MB, 1MB) — see the _AQE_ADVISORY_ENV comment for why
+    this is not a hard global. Env knobs are read here, at CALL time,
+    so setting one after import still takes effect.
     """
     confs = dict(_RUNTIME_CONFS)
     advisory = os.environ.get(_AQE_ADVISORY_ENV)
     if advisory:
         confs["spark.sql.adaptive.advisoryPartitionSizeInBytes"] = \
             str(int(advisory))
+        confs["spark.sql.adaptive.coalescePartitions.minPartitionSize"] = \
+            str(int(advisory) // 64)
     bcast = str(int(os.environ.get(_BCAST_ENV, _BCAST_DEFAULT)))
     confs["spark.sql.autoBroadcastJoinThreshold"] = bcast
     confs["spark.sql.adaptive.autoBroadcastJoinThreshold"] = bcast

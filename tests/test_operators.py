@@ -4,6 +4,7 @@ similarity, text, multimodal operators on tiny in-memory frames."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -1222,6 +1223,53 @@ def test_winnow_rows_equals_array_form(spark):
         got = {(r.doc_id, r.fp) for r in
                winnow_fingerprint_rows(d, k=k, window=w).collect()}
         assert got == want, (k, w)
+
+
+def test_ivf_query_index_rebuilds_on_rewrite_and_keys_on_path(
+        spark, tmp_path, monkeypatch):
+    """The IVF index behind ivf_topk/semdedup_trained is rebuilt after
+    an in-place rewrite of embeddings.parquet, and two data directories
+    with the same basename get separate indexes."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from data_services_spark import registry
+    from data_services_spark.catalog import load_table
+    from data_services_spark.operators import similarity
+    from tests.conftest import SF_DIR
+
+    builds = []
+    build = similarity.ivf_build_index
+
+    def counting(emb, index_dir, **kw):
+        builds.append(index_dir)
+        return build(emb, index_dir, **kw)
+
+    monkeypatch.setattr(similarity, "ivf_build_index", counting)
+    src = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    dirs = [str(tmp_path / side / "sf") for side in ("a", "b")]
+    for d in dirs:
+        os.makedirs(d)
+        pq.write_table(src, os.path.join(d, "embeddings.parquet"))
+
+    def index(d):
+        return registry._ivf_index(load_table(spark, d, "embeddings"), d)
+
+    made = []
+    try:
+        made.append(index(dirs[0]))
+        assert index(dirs[0]) == made[0] and len(builds) == 1
+        pq.write_table(src.slice(0, src.num_rows // 2),
+                       os.path.join(dirs[0], "embeddings.parquet"))
+        assert index(dirs[0]) == made[0] and len(builds) == 2
+        n = sum(similarity.ivf_load_meta(made[0])["cell_counts"].values())
+        assert n == src.num_rows // 2
+        made.append(index(dirs[1]))
+        assert made[1] != made[0] and len(builds) == 3
+    finally:
+        for d in made:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_ivf_incremental_append_probe_and_retrain(spark, tmp_path):

@@ -102,20 +102,86 @@ def test_plan_memo_invalidates_on_file_rewrite(spark, tmp_path):
     assert _rows(q1) == _rows(want)
 
 
-@pytest.mark.parametrize("name", [
-    "q1_pricing_summary", "q3_shipping_priority", "kgx_edge_merge",
-    "kgx_node_merge", "window_running_sum", "tumbling_window",
-    "knn_cosine", "crawl_ingest", "text_dedup_exact", "bpe_tokenize",
-    "bpe_tokenize_dict",
-])
-def test_lazy_build_queries_value_parity_first_vs_rebuilt(spark, name):
-    """Every lazy_build-marked bench query: first build (builder path)
-    and rebuilt (memo path) produce identical rows."""
-    from data_services_spark.registry import RAW_QUERIES
+def _lazy_build_names() -> list[str]:
+    from data_services_spark.registry import QUERIES
+    return sorted(n for n, f in QUERIES.items() if f.lazy_build)
 
-    first = _rows(RAW_QUERIES[name](spark, SF_DIR))
-    rebuilt = _rows(RAW_QUERIES[name](spark, SF_DIR))
-    assert first == rebuilt
+
+def _lazy_build_violations(spark, builder) -> list[str]:
+    """Run ``builder`` under a dedicated job group and return how it
+    breaks the lazy_build contract: a Spark job started during the
+    build, a cached relation or a Python RDD in its plan."""
+    sc = spark.sparkContext
+    group = f"lazy-build-contract-{id(builder)}"
+    sc.setJobGroup(group, "lazy_build contract")
+    try:
+        df = builder(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    qe = df._jdf.queryExecution()
+    out = []
+    if sc.statusTracker().getJobIdsForGroup(group):
+        out.append("job")
+    if "InMemoryRelation" in qe.withCachedData().toString():
+        out.append("InMemoryRelation")
+    if "LogicalRDD" in qe.analyzed().toString():
+        out.append("LogicalRDD")
+    return out
+
+
+def test_lazy_build_marks_the_kgx_builders():
+    """The KGX section's pure builders are memoized; the contract test
+    below checks each one."""
+    names = set(_lazy_build_names())
+    assert {"graph_build", "graph_build_nodes", "kgx_normalize",
+            "kgx_edge_normalize", "kgx_norm_failures",
+            "kgx_connected_subset", "kgx_two_hop", "kgx_meta_kg",
+            "skew_salted_degree", "record_counts"} <= names
+
+
+@pytest.mark.parametrize("name", _lazy_build_names())
+def test_lazy_build_queries_value_parity_first_vs_rebuilt(
+        spark, monkeypatch, name):
+    """Every lazy_build entry: with the memo emptied, the first call
+    really runs the builder (warming only stat-checked data entries:
+    table handles, query vectors); a second run of the builder starts
+    no Spark job and plans no cached relation or Python RDD; and the
+    memo's rebuild returns the first build's rows."""
+    from data_services_spark.plans import plan_memo as pm
+    from data_services_spark.registry import QUERIES
+
+    monkeypatch.setattr(pm, "_MEMO", {})
+    entry = QUERIES[name]
+    first = _rows(entry(spark, SF_DIR))
+    assert _lazy_build_violations(spark, entry.__wrapped__) == []
+    assert _rows(entry(spark, SF_DIR)) == first
+
+
+def test_lazy_build_check_catches_eager_builders(spark):
+    """The contract check fails a builder that runs a job, one that
+    persists, and one that plans a Python RDD."""
+    persisted = []
+
+    def counts(s, sf):
+        df = s.range(3)
+        df.count()
+        return df
+
+    def persists(s, sf):
+        persisted.append(s.range(5).filter("id > 0").persist())
+        return persisted[-1]
+
+    def rdd(s, sf):
+        return s.createDataFrame([(1,)], "x long")
+
+    assert _lazy_build_violations(spark, counts) == ["job"]
+    try:
+        assert _lazy_build_violations(spark, persists) == \
+            ["InMemoryRelation"]
+    finally:
+        for df in persisted:
+            df.unpersist()
+    assert _lazy_build_violations(spark, rdd) == ["LogicalRDD"]
 
 
 def test_memo_evicts_oldest_skips_remote_and_refetches_query_vector(

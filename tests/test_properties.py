@@ -16,6 +16,21 @@ _SETTINGS = dict(max_examples=10, deadline=None,
                  suppress_health_check=list(HealthCheck))
 
 
+def _frame(spark, rows, ddl: str):
+    """``rows`` under the DDL schema as a local relation. An Arrow table
+    plans a LocalTableScan; a Python list would plan a Scan ExistingRDD,
+    and every job over it would start Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def _dsum_reference(xs: list[float]) -> float:
     """The documented dsum contract, in plain Python integer math."""
     ip = sum(math.floor(x) for x in xs)
@@ -35,9 +50,9 @@ def test_dsum_partitioning_and_order_invariant(spark, xs, parts):
     partition count and any row order (the property plain SUM(double)
     lacks, and the reason every oracle hash comparison is sound)."""
     want = _dsum_reference(xs)
-    df = spark.createDataFrame([(x,) for x in xs], "v double")
+    df = _frame(spark, [(x,) for x in xs], "v double")
     got = df.repartition(parts).agg(dsum("v", "s")).first().s
-    rev = (spark.createDataFrame([(x,) for x in reversed(xs)], "v double")
+    rev = (_frame(spark, [(x,) for x in reversed(xs)], "v double")
            .repartition(max(1, parts - 1)).agg(dsum("v", "s")).first().s)
     assert got == want and rev == want  # exact equality, not approx
 
@@ -75,7 +90,7 @@ def test_connected_components_match_union_find(spark, edges):
         connected_components, connected_components_star)
 
     want = _components_reference(edges)
-    df = spark.createDataFrame(edges, "src long, dst long")
+    df = _frame(spark, edges, "src long, dst long")
     got = {r.node: r.component
            for r in connected_components(df).collect()}
     assert got == want
@@ -98,7 +113,7 @@ def test_split_partition_invariant(spark, ids, parts):
     reordering can never move a row between train/val/test."""
     from data_services_spark.operators.sampling import deterministic_split
 
-    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    df = _frame(spark, [(i,) for i in ids], "doc_id long")
     a = {r.doc_id: r.split
          for r in deterministic_split(df, "doc_id").collect()}
     b = {r.doc_id: r.split
@@ -148,10 +163,9 @@ def test_asof_join_matches_bruteforce(spark, left, right):
             continue
         seen.add((u, t))
         rrows.append((u, base + dt.timedelta(minutes=t), f"s{i}"))
-    ldf = spark.createDataFrame(lrows, "user_id long, ts timestamp, pid string")
-    rdf = spark.createDataFrame(
-        rrows or [(99, base, "sx")],
-        "user_id long, ts timestamp, sid string")
+    ldf = _frame(spark, lrows, "user_id long, ts timestamp, pid string")
+    rdf = _frame(spark, rrows or [(99, base, "sx")],
+                 "user_id long, ts timestamp, sid string")
     got = {r.pid: r.sid_right
            for r in asof_join(ldf, rdf, on=["user_id"], left_ts="ts",
                               right_ts="ts",
@@ -186,8 +200,8 @@ def test_bfs_levels_match_reference(spark, edges, seeds, rounds):
     (monotone convergence)."""
     from data_services_spark.operators.components import bfs_levels
 
-    e = spark.createDataFrame(edges, "src long, dst long")
-    s = spark.createDataFrame([(x,) for x in seeds], "s long")
+    e = _frame(spark, edges, "src long, dst long")
+    s = _frame(spark, [(x,) for x in seeds], "s long")
     got = {r["node"]: r["dist"]
            for r in bfs_levels(e, s, iterations=rounds).collect()}
     assert got == _bfs_reference(edges, seeds, rounds)
@@ -212,11 +226,10 @@ def test_scd2_merge_idempotent_and_conserves_opens(spark, rows):
                   {k: (k, v, u) for k, v, u in rows}.values()]
     upd_rows = [(k, v + "x", 100) for k, v, u in
                 {k: (k, v, u) for k, v, u in rows}.values() if u]
-    state = spark.createDataFrame(
-        state_rows, "id long, seg string, valid_from long, valid_to long")
-    upd = spark.createDataFrame(
-        upd_rows or [(99, "z", 100)],
-        "id long, seg string, eff_ms long")
+    state = _frame(spark, state_rows,
+                   "id long, seg string, valid_from long, valid_to long")
+    upd = _frame(spark, upd_rows or [(99, "z", 100)],
+                 "id long, seg string, eff_ms long")
     once = scd2_merge(state, upd, ["id"], ["seg"])
     twice = scd2_merge(once, upd, ["id"], ["seg"])
     a = sorted(map(tuple, once.collect()), key=repr)
@@ -244,7 +257,7 @@ def test_scalable_running_sum_matches_sequential_prefix(spark, vals,
 
     rows = list(enumerate(vals))  # unique keys -> total order
     random.Random(shuffle_seed).shuffle(rows)
-    df = spark.createDataFrame(rows, "k long, v long")
+    df = _frame(spark, rows, "k long, v long")
     got = {r.k: r.run for r in
            scalable_running_sum(df, ["k"], "v", "run",
                                 num_partitions=parts).collect()}
@@ -267,7 +280,7 @@ def test_heavy_hitters_matches_counter_reference(spark, toks, s, parts):
 
     from data_services_spark.operators.sampling import heavy_hitters
 
-    df = spark.createDataFrame([(t,) for t in toks], "term string")
+    df = _frame(spark, [(t,) for t in toks], "term string")
     got = {(r.term, r.n) for r in
            heavy_hitters(df.repartition(parts), "term", s).collect()}
     want = {(t, c) for t, c in Counter(toks).items() if c >= s}
@@ -290,19 +303,19 @@ def test_incremental_merge_matches_one_shot(spark, rows, cut):
     specs = {"n": ("count", "*"), "s": ("sum", "v"),
              "lo": ("min", "v"), "hi": ("max", "v")}
     schema = "k long, v long"
-    all_df = spark.createDataFrame(rows, schema)
+    all_df = _frame(spark, rows, schema)
     want = sorted(map(tuple, agg_state(all_df, ["k"], specs).collect()),
                   key=repr)
     if not base:
         base_state = agg_state(all_df.filter("1=0"), ["k"], specs)
     else:
-        base_state = agg_state(spark.createDataFrame(base, schema),
+        base_state = agg_state(_frame(spark, base, schema),
                                ["k"], specs)
     if not delta:
         got_df = base_state
     else:
         got_df = merge_agg_state(
-            base_state, spark.createDataFrame(delta, schema), ["k"], specs)
+            base_state, _frame(spark, delta, schema), ["k"], specs)
     assert sorted(map(tuple, got_df.collect()), key=repr) == want
 
 
@@ -340,8 +353,7 @@ def test_winnow_forms_match_python_reference(spark, texts, k, w):
     from data_services_spark.operators import (winnow_fingerprint_rows,
                                                winnow_fingerprints)
 
-    d = spark.createDataFrame(list(enumerate(texts)),
-                              "doc_id long, text string")
+    d = _frame(spark, list(enumerate(texts)), "doc_id long, text string")
     want = {i: _winnow_py(t, k, w) for i, t in enumerate(texts)}
     arr = {r.doc_id: list(r.fps)
            for r in winnow_fingerprints(d, k=k, window=w).collect()}
@@ -396,7 +408,7 @@ def test_merge_state_with_deletes_matches_dict_reference(
             if is_del:
                 ref.pop(kid, None)
         merge_upsert_batch(
-            spark, spark.createDataFrame(rows, SCHEMA), state_dir,
+            spark, _frame(spark, rows, SCHEMA), state_dir,
             batch_id=bi, delete_flag="is_deleted", num_buckets=4)
 
     try:
@@ -426,7 +438,7 @@ def test_prefix_jaccard_equals_bruteforce_on_random_corpora(spark, docs,
     )
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = _frame(spark, rows, "doc_id long, text string")
     brute = {(r["id_a"], r["id_b"]) for r in
              jaccard_pairs(df, threshold=thr).collect()}
     got = {(r["id_a"], r["id_b"]): r for r in
