@@ -96,9 +96,11 @@ def main() -> None:
     # RAW_QUERIES builds a FRESH DataFrame per timed run, so every run pays
     # the full physical plan + shuffle + collect cost (a memoized handle
     # would reuse materialized shuffle stages and under-report the query's
-    # work). For lazy_build queries the fresh DataFrame wraps a memoized
-    # ANALYZED plan (plans/plan_memo.py), so their reps skip the py4j
-    # build + Catalyst analysis constant, never the data work.
+    # work). For a query whose build the plan memo found pure (no job, no
+    # cached relation or Python RDD, local input files) the fresh
+    # DataFrame wraps a memoized ANALYZED plan (plans/plan_memo.py), so
+    # its reps skip the py4j build + Catalyst analysis constant, never
+    # the data work; the two warm-up passes above store it.
     # Alongside it, the MARGINAL number re-executes one already-built plan
     # back-to-back: the delta between the two isolates the per-plan driver
     # constant (Catalyst analysis + codegen source generation + ~0.1-0.15s
@@ -120,8 +122,8 @@ def main() -> None:
         # runs on this VM (host contention + C2 compilation still warming
         # during early reps); 5 reps lets the min converge on the true
         # floor while staying honest — every rep is a fresh physical
-        # plan + shuffle + fetch (lazy_build queries reuse only their
-        # memoized analyzed plan; see above).
+        # plan + shuffle + fetch (queries with a pure build reuse only
+        # their memoized analyzed plan; see above).
         for _ in range(5):
             t0 = time.perf_counter()
             # toArrow(): full materialization of every result row into

@@ -32,20 +32,36 @@ fresh-build 0.72 s, ofRows-rebuild 0.56 s, same-handle marginal
 re-run 0.06 s — the rebuild sits at full-execution cost minus the
 build constant, nowhere near the shuffle-reusing marginal.
 
-Eligibility is OPT-IN per registry entry (``@register(...,
-lazy_build=True)``) and restricted to PURE-LAZY builders:
+Every registered entry goes through :func:`rebuild_or_build`, and the
+memo decides per build whether the build was PURE and may be stored.
+It stores the analyzed plan only when all four checks pass, cheapest
+refusal first:
 
-- no jobs at build time (the CC capstones run their label loop
-  eagerly inside the builder; memoizing their final plan would skip
-  that work and reference checkpointed RDD blocks — result caching);
-- no ``persist``/one-slot cache in the plan (Spark's CacheManager
-  matches by canonicalized plan, so a rebuilt twin of a persisted
-  subtree would silently read the previous call's cached data);
-- no closures over values computed FROM the input at build time.
+1. no Spark job started during the build: the DAGScheduler's job
+   counter, which updates synchronously (the status tracker does not),
+   is equal before and after. The CC capstones run their label loop
+   eagerly inside the builder; memoizing their final plan would skip
+   that work and reference checkpointed RDD blocks. A first build that
+   fills a memoized value (a table handle's schema read, knn's query
+   vector) runs a job too, so it is not stored and the next one is;
+2. the plan has input files, all locally stat-able (remote deployments
+   and file-less plans, e.g. the streaming drains, are never stored);
+3. no ``InMemoryRelation`` in ``withCachedData`` (Spark's CacheManager
+   matches by canonicalized plan, so a rebuilt twin of a persisted
+   subtree would silently read the previous call's cached data);
+4. no ``LogicalRDD`` in the analyzed plan (a Python RDD is built from
+   values the driver holds, not from the plan's input files).
 
-The plan key adds defaultParallelism, sf_dir and the split confs; the
-layout gates are module constants (plans/widen.py), fixed for the
-process. A plan with no input files is never memoized.
+A builder may close over a value it reads from the store (a table
+handle, a query vector, a trained table) only when that value is built
+from the plan's own input files or from a literal, so the plan's stat
+check also covers it. The IVF entries' plans read the index, not
+``embeddings``; they run a job on every build and are never stored.
+
+The plan key adds defaultParallelism, sf_dir and the confs a build
+reads (split sizing for the widen decision, shuffle partitions for
+scalable_running_sum's bucket count); the layout gates are module
+constants (plans/widen.py), fixed for the process.
 """
 
 from __future__ import annotations
@@ -56,10 +72,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from data_services_spark.plans.widen import _local_path
 
-# Confs that set a scan's split count, and with it the widen decision.
-_SPLIT_CONF_KEYS = ("spark.sql.files.maxPartitionBytes",
+# Confs a build reads: a scan's split count (and with it the widen
+# decision) and the shuffle partitions scalable_running_sum buckets to.
+_BUILD_CONF_KEYS = ("spark.sql.files.maxPartitionBytes",
                     "spark.sql.files.openCostInBytes",
-                    "spark.sql.files.minPartitionNum")
+                    "spark.sql.files.minPartitionNum",
+                    "spark.sql.shuffle.partitions")
 
 MEMO_CAP = 512
 
@@ -100,12 +118,14 @@ def memo_get(spark: SparkSession, key: tuple):
 
 
 def memo_put(spark: SparkSession, key: tuple, value,
-             files: list[str]) -> None:
+             files: list[str], stats: tuple | None = None) -> None:
     """Store ``value`` under ``key`` for this session, built from
     ``files`` (may be empty); stores nothing when any file is not
-    locally stat-able."""
+    locally stat-able. A caller that already stat'ed ``sorted(files)``
+    passes those ``stats`` so each file is stat'ed once."""
     files = sorted(files)
-    stats = _local_file_stats(files)
+    if stats is None:
+        stats = _local_file_stats(files)
     if stats is None:
         return
     _MEMO[(spark.sparkContext.applicationId, *key)] = (value, files, stats)
@@ -113,25 +133,42 @@ def memo_put(spark: SparkSession, key: tuple, value,
         del _MEMO[next(iter(_MEMO))]
 
 
+def _plan_key(spark: SparkSession, name: str, sf_dir: str) -> tuple:
+    return (spark.sparkContext.defaultParallelism, name, sf_dir,
+            tuple(spark.conf.get(k, None) for k in _BUILD_CONF_KEYS))
+
+
+def _jobs_started(spark: SparkSession) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
 def rebuild_or_build(spark: SparkSession, name: str, sf_dir: str,
                      builder) -> DataFrame:
     """Fresh DataFrame for ``name``: ofRows over the memoized analyzed
     plan when the key matches and every input file is byte/mtime
-    identical; otherwise run ``builder`` and (when stat-able) memoize
-    its analyzed plan."""
-    key = (spark.sparkContext.defaultParallelism, name, sf_dir,
-           tuple(spark.conf.get(k, None) for k in _SPLIT_CONF_KEYS))
+    identical; otherwise run ``builder`` and memoize its analyzed plan
+    when the build was pure (module docstring, checks 1-4)."""
+    key = _plan_key(spark, name, sf_dir)
     jplan = memo_get(spark, key)
     if jplan is not None:
         jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
             spark._jsparkSession, jplan)
         return DataFrame(jdf, spark)
+    jobs = _jobs_started(spark)
     df = builder(spark, sf_dir)
+    if _jobs_started(spark) != jobs:
+        return df
     try:
-        files = df.inputFiles()
-        jplan = df._jdf.queryExecution().analyzed()
+        files = sorted(df.inputFiles())
+        stats = _local_file_stats(files) if files else None
+        if stats is None:
+            return df
+        qe = df._jdf.queryExecution()
+        jplan = qe.analyzed()
+        if "LogicalRDD" in jplan.toString() or \
+                "InMemoryRelation" in qe.withCachedData().toString():
+            return df
     except Exception:
         return df  # un-introspectable plan: never memoize, always build
-    if files:
-        memo_put(spark, key, jplan, files)
+    memo_put(spark, key, jplan, files, stats)
     return df

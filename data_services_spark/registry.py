@@ -63,38 +63,27 @@ def _bpe_frag():
     return bpe_sql("text")
 
 
-def register(name: str, sql: str | None = None, lazy_build: bool = False):
+def register(name: str, sql: str | None = None):
     """Register a query builder and its DuckDB oracle SQL.
 
-    Every call of the registered entry is a fresh build: it first
-    releases every one-slot persist left by PREVIOUS queries
-    (functions/cache.py — e.g. corpus_curate's full-text survivor cache
-    no longer stays pinned for the rest of the session); each query
-    re-fills its own slots inside its own timed region, and
-    re-executing an already-built plan never lands here.
-
-    ``lazy_build=True`` (round 14, VERDICT ask #6) declares the builder
-    PURE-LAZY — no jobs run at build time, no persist/one-slot cache or
-    Python RDD in the plan, no closures over values computed from the
-    input except through the stat-checked memo — and routes the entry
-    through the analyzed-plan rebuild
-    (plans/plan_memo.py): repeat fresh builds wrap the memoized
-    analyzed tree in a brand-new Dataset, so every execution still
-    re-reads parquet and re-shuffles in full while the pure driver
-    constant (py4j tree construction + Catalyst analysis + widen
-    probes) is paid once per (session, sf_dir, split confs, file
-    stats). The entry carries the flag as ``lazy_build`` and the
-    builder as ``__wrapped__``; tests/test_plan_memo.py checks the
-    contract for every flagged entry."""
+    Every call of the registered entry first releases every one-slot
+    persist left by PREVIOUS queries (functions/cache.py — e.g.
+    corpus_curate's full-text survivor cache no longer stays pinned for
+    the rest of the session), then goes through the analyzed-plan
+    rebuild (plans/plan_memo.py). A build that passes the memo's purity
+    checks (no Spark job started, local input files, no cached relation
+    or Python RDD in its plan) is stored, and later calls wrap its
+    analyzed tree in a brand-new Dataset: every execution still
+    re-reads parquet and re-shuffles in full, while py4j tree
+    construction and Catalyst analysis are paid once per (session,
+    sf_dir, build confs, file stats). Any other build runs again on
+    every call."""
     def deco(fn: QueryFn) -> QueryFn:
         @functools.wraps(fn)
         def building(spark: SparkSession, sf_dir: str) -> DataFrame:
             release_all_slots()
-            if lazy_build:
-                return rebuild_or_build(spark, name, sf_dir, fn)
-            return fn(spark, sf_dir)
+            return rebuild_or_build(spark, name, sf_dir, fn)
 
-        building.lazy_build = lazy_build
         QUERIES[name] = building
         if sql is not None:
             ORACLES[name] = sql
@@ -137,7 +126,7 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-@register("q1_pricing_summary", _Q1_SQL, lazy_build=True)
+@register("q1_pricing_summary", _Q1_SQL)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-agg with full pushdown (P4+A8+F3).
 
@@ -166,7 +155,7 @@ ORDER BY revenue DESC, l_orderkey LIMIT 10
 """
 
 
-@register("q3_shipping_priority", _Q3_SQL, lazy_build=True)
+@register("q3_shipping_priority", _Q3_SQL)
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter -> fact joins -> agg -> top-k.
     Catalyst broadcast-joins the filtered customer side (J5+A8+O2).
@@ -741,7 +730,7 @@ SELECT id,
        {_ARGMIN.format(v='acctbal')},
        COUNT(*) AS n_merged
 FROM kgx_nodes GROUP BY id
-""", lazy_build=True)
+""")
 def kgx_node_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 node merge: deterministic first-wins scalars (min_by rank),
     set-union list props. The core reference operator
@@ -768,7 +757,7 @@ SELECT subject, predicate, object, primary_knowledge_source,
        COUNT(*) AS n_merged
 FROM kgx_edges
 GROUP BY subject, predicate, object, primary_knowledge_source
-""", lazy_build=True)
+""")
 def kgx_edge_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 edge merge on (s, p, o, primary_knowledge_source)
     `[R: Common/merging.py — merge_edges — unverified]`.
@@ -828,7 +817,7 @@ SELECT COALESCE(m.canon_id, e.subject) AS subject,
        e.predicate, e.object,
        (m.canon_id IS NOT NULL) AS subject_normalized
 FROM order_edges e LEFT JOIN norm_map m ON e.subject = m.orig_id
-""", lazy_build=True)
+""")
 def kgx_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 endpoint normalization: broadcast-join id rewrite
     `[R: Common/kgx_file_normalizer.py — unverified]`."""
@@ -847,7 +836,7 @@ SELECT subject,
        object, line_no,
        (m.biolink_pred IS NOT NULL) AS predicate_normalized
 FROM raw_pred_edges e LEFT JOIN pred_map m ON e.predicate = m.raw_pred
-""", lazy_build=True)
+""")
 def kgx_edge_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 predicate normalization (EdgeNormalizer twin): broadcast map join
     rewriting raw relation verbs to biolink predicates, unmapped rows
@@ -865,7 +854,7 @@ WITH {kgx.NORM_MAP_SQL.strip()},
 SELECT DISTINCT e.subject AS failed_id
 FROM order_edges e
 WHERE NOT EXISTS (SELECT 1 FROM norm_map m WHERE m.orig_id = e.subject)
-""", lazy_build=True)
+""")
 def kgx_norm_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 normalization-failure routing (anti join)."""
     return normalization_failures(kgx.order_edges(spark, sf_dir),
@@ -885,7 +874,7 @@ SELECT e.subject, e.predicate, e.object, e.primary_knowledge_source
 FROM kgx_edges e
 WHERE EXISTS (SELECT 1 FROM node_ids n WHERE n.id = e.subject)
   AND EXISTS (SELECT 1 FROM node_ids n WHERE n.id = e.object)
-""", lazy_build=True)
+""")
 def kgx_connected_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 connected-edge-subset merge strategy: keep edges with both
     endpoints in the node set (two semi joins)
@@ -927,7 +916,7 @@ SELECT subject,
        CAST(COUNT(DISTINCT neighbor) AS BIGINT) AS n_neighbors,
        CAST(COUNT(*) AS BIGINT) AS n_paths
 FROM p GROUP BY subject
-""", lazy_build=True)
+""")
 def kgx_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KG pattern matching (the meta-path query every graph user runs:
     "chemical -[affects]-> gene <-[associated_with]- disease"): typed
@@ -1114,7 +1103,7 @@ SELECT subject, predicate, object, primary_knowledge_source,
        COUNT(*) AS n_merged
 FROM all_edges
 GROUP BY subject, predicate, object, primary_knowledge_source
-""", lazy_build=True)
+""")
 def graph_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2 graph-spec build end-to-end (plans/graph_build.py::build_graph
     `[R: Common/build_manager.py — GraphBuilder — unverified]`): a
@@ -1141,7 +1130,7 @@ SELECT id,
        {_ARGMIN.format(v='acctbal')},
        COUNT(*) AS n_merged
 FROM src_nodes GROUP BY id
-""", lazy_build=True)
+""")
 def graph_build_nodes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2 build, node side: spec-stamped source ranks (NOT the fixture's
     row-level ranks) drive first-wins, exercising the per-source
@@ -1166,7 +1155,7 @@ FROM kgx_edges e
 JOIN node_cat sc ON e.subject = sc.id
 JOIN node_cat oc ON e.object = oc.id
 GROUP BY sc.node_category, e.predicate, oc.node_category
-""", lazy_build=True)
+""")
 def kgx_meta_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 meta-KG triple counts `[R: Common/meta_kg.py — unverified]`."""
     o = load_table(spark, sf_dir, "orders")
@@ -1185,7 +1174,7 @@ def kgx_meta_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {kgx.KGX_EDGES_SQL.strip()}
 SELECT subject, COUNT(*) AS degree
 FROM kgx_edges GROUP BY subject
-""", lazy_build=True)
+""")
 def skew_salted_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe node out-degree via two-phase salted aggregation
     (operators/skew.py) — identical result to a plain groupBy, but hub
@@ -1293,7 +1282,7 @@ SELECT event_id, user_id,
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-""", lazy_build=True)
+""")
 def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2+W3 in one pass over the same partition: running ROWS-frame sum
     (decimal-accumulated), lag delta, and a trailing-hour RANGE frame
@@ -1352,7 +1341,7 @@ SELECT epoch_ms(date_trunc('hour', ts)) AS window_start_ms, event_type,
        COUNT(*) AS n,
        {_DSUM_F('value', 'sum_value')}
 FROM events GROUP BY 1, 2
-""", lazy_build=True)
+""")
 def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1: tumbling 1-hour window aggregate (batch form of the streaming
     groupBy(window(...)) — the streaming twin `stream_tumbling` keeps
@@ -1599,7 +1588,7 @@ SELECT sha256(lower(trim(text))) AS content_hash,
        MIN(doc_id) AS keep_id,
        COUNT(*) AS n_dups
 FROM docs2 GROUP BY 1
-""", lazy_build=True)
+""")
 def text_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L1: exact dedup by content hash over a corpus with injected dups."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2007,10 +1996,14 @@ _MH_BAND_SELECTS = "\n    UNION ALL\n    ".join(
     for b in range(_MH_BANDS))
 
 
-@register("minhash_lsh_md5", f"""
-WITH toksn AS (
+# The md5-family MinHash LSH chain the LSH oracles share, over the
+# source relation ``src`` (doc_id, text): trigram shingles, the
+# 16-hash signature and its 4 band hashes, ending with `banded` =
+# (doc_id, band, bh, sig).
+def _mh_banded_over(src: str) -> str:
+    return f"""toksn AS (
     SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-    FROM documents
+    FROM {src}
 ), sh AS (
     SELECT doc_id,
            CASE WHEN len(t) - 2 <= 0 THEN [array_to_string(t, ' ')]
@@ -2024,7 +2017,11 @@ WITH toksn AS (
     SELECT doc_id, {_MH_SIG_COLS} FROM ex GROUP BY doc_id
 ), banded AS (
     {_MH_BAND_SELECTS}
-), pairs AS (
+)"""
+
+
+@register("minhash_lsh_md5", f"""
+WITH {_mh_banded_over('documents')}, pairs AS (
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
            a.sig AS sa, b.sig AS sb
     FROM banded a JOIN banded b
@@ -2047,23 +2044,7 @@ def minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("near_dup_verified", f"""
-WITH toksn AS (
-    SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-    FROM documents
-), sh AS (
-    SELECT doc_id,
-           CASE WHEN len(t) - 2 <= 0 THEN [array_to_string(t, ' ')]
-                ELSE list_transform(generate_series(1, len(t) - 2),
-                                    i -> t[i] || ' ' || t[i+1] || ' ' ||
-                                         t[i+2]) END AS shl
-    FROM toksn
-), ex AS (
-    SELECT doc_id, unnest(shl) AS s FROM sh
-), sig AS (
-    SELECT doc_id, {_MH_SIG_COLS} FROM ex GROUP BY doc_id
-), banded AS (
-    {_MH_BAND_SELECTS}
-), cand AS (
+WITH {_mh_banded_over('documents')}, cand AS (
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM banded a JOIN banded b
       ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
@@ -2151,7 +2132,7 @@ FROM scored ORDER BY sim DESC, vec_id LIMIT 10
 """
 
 
-@register("knn_cosine", _KNN_SQL, lazy_build=True)
+@register("knn_cosine", _KNN_SQL)
 def knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3: brute-force cosine top-k, pure Catalyst.
 
@@ -3216,7 +3197,7 @@ SELECT doc_id, domain, n_features, logit_sum,
        CAST(logit_sum AS DOUBLE) / n_features AS score,
        logit_sum > 0 AS keep
 FROM s
-""", lazy_build=True)
+""")
 def crawl_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The crawl-INGEST capstone (the front-end sibling of
     corpus_curate): messy URL -> canonicalize -> exact-URL dedup
@@ -3657,7 +3638,7 @@ SELECT primary_knowledge_source,
        CAST(COUNT(DISTINCT object) AS BIGINT) AS n_objects
 FROM kgx_edges
 GROUP BY primary_knowledge_source
-""", lazy_build=True)
+""")
 def record_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 per-source record counting — the load-metadata numbers the
     reference tracks per stage `[R: Common/metadata.py — unverified]`.
@@ -4472,23 +4453,7 @@ def pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Parameterized over the source relation so composed pipelines
 # (corpus_curate) can run the identical chain over a filtered corpus.
 def _dedup_labels_over(src: str) -> str:
-    return f"""toksn AS (
-    SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-    FROM {src}
-), sh AS (
-    SELECT doc_id,
-           CASE WHEN len(t) - 2 <= 0 THEN [array_to_string(t, ' ')]
-                ELSE list_transform(generate_series(1, len(t) - 2),
-                                    i -> t[i] || ' ' || t[i+1] || ' ' ||
-                                         t[i+2]) END AS shl
-    FROM toksn
-), ex AS (
-    SELECT doc_id, unnest(shl) AS s FROM sh
-), sig AS (
-    SELECT doc_id, {_MH_SIG_COLS} FROM ex GROUP BY doc_id
-), banded AS (
-    {_MH_BAND_SELECTS}
-), cand AS (
+    return f"""{_mh_banded_over(src)}, cand AS (
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM banded a JOIN banded b
       ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
@@ -5262,7 +5227,7 @@ FROM documents
 """
 
 
-@register("bpe_tokenize", _BPE_TOKENIZE_SQL, lazy_build=True)
+@register("bpe_tokenize", _BPE_TOKENIZE_SQL)
 def bpe_tokenize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-10 BPE subword tokenization (operators/bpe.py): the fixed
     public merge table applied as a chain of built-in replace() passes
@@ -5277,7 +5242,7 @@ def bpe_tokenize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_tokenize(d)
 
 
-@register("bpe_tokenize_dict", _BPE_TOKENIZE_SQL, lazy_build=True)
+@register("bpe_tokenize_dict", _BPE_TOKENIZE_SQL)
 def bpe_tokenize_dict_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-12 REAL-VOCABULARY tokenizer form (the r11 verdict's
     missing #1, operators/bpe.py:bpe_tokenize_dict): the identical
@@ -6470,23 +6435,7 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("fuzzy_dedup_scalable", f"""
-WITH toksn AS (
-    SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-    FROM documents
-), sh AS (
-    SELECT doc_id,
-           CASE WHEN len(t) - 2 <= 0 THEN [array_to_string(t, ' ')]
-                ELSE list_transform(generate_series(1, len(t) - 2),
-                                    i -> t[i] || ' ' || t[i+1] || ' ' ||
-                                         t[i+2]) END AS shl
-    FROM toksn
-), ex AS (
-    SELECT doc_id, unnest(shl) AS s FROM sh
-), sig AS (
-    SELECT doc_id, {_MH_SIG_COLS} FROM ex GROUP BY doc_id
-), banded AS (
-    {_MH_BAND_SELECTS}
-), cand AS (
+WITH {_mh_banded_over('documents')}, cand AS (
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM banded a JOIN banded b
       ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id

@@ -157,11 +157,6 @@ def _read_manifest(state_dir: str) -> dict | None:
         return {"gen": int(raw), "buckets": None}
 
 
-def _committed_gen(state_dir: str) -> int | None:
-    m = _read_manifest(state_dir)
-    return None if m is None else m["gen"]
-
-
 def pin_snapshot(state_dir: str, generation: int | None = None,
                  ttl_seconds: float = 3600,
                  owner: str | None = None) -> dict:

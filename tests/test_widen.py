@@ -239,7 +239,8 @@ def test_one_driver_side_memo():
     """Cache-creep guard: the only module-level empty dict in the
     package is plans/plan_memo.py's stat-checked ``_MEMO``; nothing
     keys state on a py4j wrapper id; ``register`` has no caching
-    parameter, and QUERIES/RAW_QUERIES are one dict of fresh builds."""
+    parameter (the plan memo decides per build whether to store), and
+    QUERIES/RAW_QUERIES are one dict of fresh builds."""
     import inspect
     import pathlib
     import re
@@ -259,7 +260,7 @@ def test_one_driver_side_memo():
     assert memos == ["plans/plan_memo.py:_MEMO"]
     assert id_keys == []
     assert list(inspect.signature(register).parameters) == \
-        ["name", "sql", "lazy_build"]
+        ["name", "sql"]
     assert QUERIES is RAW_QUERIES
 
 

@@ -9,8 +9,9 @@ uses:
 
   build_s   DataFrame construction + Catalyst analysis: the registry
             builder call plus a .schema touch (analysis runs once per
-            plan; bench pays this inside every timed rep because each
-            rep builds a fresh un-memoized plan by design)
+            plan; bench pays this inside every timed rep, except for a
+            query whose build the plan memo found pure, whose reps wrap
+            its memoized analyzed plan in a fresh Dataset)
   exec_s    .toArrow() on that prebuilt DataFrame: optimization +
             codegen + job scheduling + shuffle + Arrow fetch
   fresh_s   build + exec timed as ONE region, exactly like bench.py
