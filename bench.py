@@ -69,9 +69,6 @@ def main() -> None:
     advisory = max(4, int(40 * sf)) * 1024 * 1024 if sf > 0 \
         else 4 * 1024 * 1024
     os.environ.setdefault("SPARK_GRAFT_AQE_ADVISORY_BYTES", str(advisory))
-    # Multi-GB Arrow results at sf>=1 need heap headroom for the fetch
-    # (the 16g default spent sf1 runs in GC; box has 128g).
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 

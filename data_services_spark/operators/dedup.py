@@ -15,7 +15,7 @@ Scale notes:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 
 from data_services_spark.operators.text import WS_SPLIT
 
@@ -340,12 +340,6 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", "jaccard"))
 
 
-# One-slot registry for prefix_jaccard_join's ordered-array cache —
-# the bm25/bigram device: at most one cached relation alive per session,
-# each call releases the previous call's.
-_PJ_CACHE: list[DataFrame] = []
-
-
 def prefix_jaccard_join(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id",
                         threshold: float = 0.8) -> DataFrame:
@@ -431,12 +425,10 @@ def prefix_jaccard_join(docs: DataFrame, text_col: str = "text",
                 lambda x: x["tok"]).alias("tks"))
             .withColumn("sz", F.size("tks").cast("long")))
     # The ordered-array relation is read three times (prefix explode +
-    # both verify sides); without a persist each read re-pays the
-    # corpus scan AND the token-df join — 8 parquet scans measured vs 2
-    # with the cache. One-slot MEMORY_ONLY (the bm25/bigram device):
-    # eviction degrades to recomputation, never a spill.
-    from data_services_spark.functions.cache import persist_slot
-    arrs = persist_slot(_PJ_CACHE, arrs)
+    # both verify sides). It sits above the per-doc groupBy's exchange,
+    # which ReuseExchange computes once; a one-slot persist measured
+    # slower (sf0.1, two sessions each: 22.7, 24.4 s with it; 21.2,
+    # 20.5 s without).
     # p = sz - ceil(t*sz) + 1, all-integer: ceil(n*s/d) = (n*s + d - 1) div d
     p = (F.col("sz")
          - F.floor((F.lit(num) * F.col("sz") + F.lit(den - 1)) / den)
@@ -607,12 +599,6 @@ def winnow_fingerprint_rows(docs: DataFrame, text_col: str = "text",
             .distinct())
 
 
-# One-slot registry for winnow_shared_pairs' inverted-index cache —
-# the bm25/bigram/PPJoin device (functions/cache.py): at most one
-# cached relation alive per session, each call releases the previous.
-_WINNOW_CACHE: list[DataFrame] = []
-
-
 def winnow_shared_pairs(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 24,
                         window: int = 8, min_shared: int = 2,
@@ -625,8 +611,8 @@ def winnow_shared_pairs(docs: DataFrame, text_col: str = "text",
     |bucket|^2, never corpus x corpus.
 
     ``max_df`` drops fingerprints appearing in more than that many
-    documents BEFORE the self-join (a semi-join against the small
-    per-fingerprint frequency aggregate). This is the operator's scale
+    documents BEFORE the self-join (a per-fingerprint count window on
+    the join's own hash exchange). This is the operator's scale
     guard: a boilerplate gram shared by 1M documents carries zero
     discrimination but would alone contribute 5x10^11 joined rows; the
     cap bounds every bucket's contribution to max_df^2, exactly the
@@ -645,23 +631,18 @@ def winnow_shared_pairs(docs: DataFrame, text_col: str = "text",
     inv = (fps.select(F.col(id_col).alias("id"),
                       F.explode_outer("fps").alias("fp"))
            .filter(F.col("fp").isNotNull()))
-    # The inverted index is read THREE times (max-df keep aggregate +
-    # both self-join sides), and each un-cached read re-pays the whole
-    # per-character md5 fingerprint fold — the single most expensive
-    # projection in the repo (measured r13 sf0.1: winnow_pairs 24.3 s
-    # noop with 3 re-derivations, 1.9 s with the cache + widen). One-
-    # slot MEMORY_ONLY (the bm25/bigram/PPJoin device, guide §5:
-    # reused AND expensive to recompute): eviction degrades to
-    # recomputation, never a spill; (id, fp) rows are 16 bytes each —
-    # at 100 TB this is the fingerprint table, ~1000x smaller than the
-    # corpus it indexes.
-    from data_services_spark.functions.cache import persist_slot
-    inv = persist_slot(_WINNOW_CACHE, inv)
+    # Both self-join sides read the inverted index, and each read would
+    # re-pay the per-character md5 fingerprint fold, the most expensive
+    # projection in the repo. The max-df count is a window over ``fp``,
+    # so the index crosses ONE hash exchange on the join key: both join
+    # sides are that exchange, which ReuseExchange computes once, and
+    # the join adds no exchange of its own. No persist, so the build
+    # stays pure; a groupBy count + semi-join needed a one-slot persist
+    # to match this form's time.
     if max_df is not None:
-        keep = (inv.groupBy("fp")
-                .agg(F.count(F.lit(1)).alias("__df"))
-                .filter(F.col("__df") <= max_df).select("fp"))
-        inv = inv.join(keep, "fp", "left_semi")
+        inv = (inv.withColumn("__df", F.count(F.lit(1)).over(
+                   Window.partitionBy("fp")))
+               .filter(F.col("__df") <= max_df).drop("__df"))
     a, b = inv.alias("a"), inv.alias("b")
     return (a.join(b, (F.col("a.fp") == F.col("b.fp"))
                    & (F.col("a.id") < F.col("b.id")))

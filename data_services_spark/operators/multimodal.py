@@ -436,7 +436,8 @@ def image_dhash(df: DataFrame, payload_col: str = "payload",
 # slot exists to avoid; results stay CORRECT by the MEMORY_ONLY
 # contract). If concurrent image pipelines are expected, serialize the
 # calls or key a slot per SparkSession; the registry's single-session
-# query model never interleaves.
+# query model never interleaves. sf0.1 image_near_dup, slot -> no
+# persist: 4.95, 4.14 s -> 4.62, 4.33 s (functions/cache.py).
 _NEAR_DUP_CACHE: list[DataFrame] = []
 
 
@@ -452,8 +453,8 @@ def image_near_dup(hashes: DataFrame, max_hamming: int = 10,
     sum of band-bucket quadratics, and only 16-byte hashes shuffle.
 
     The incoming hash relation is PERSISTED before banding (one-slot
-    MEMORY_ONLY — the bm25/bigram device; ``release_all_slots``
-    drops it, eviction degrades to recomputation): ``hashes`` is
+    MEMORY_ONLY, functions/cache.py; ``release_all_slots`` drops it,
+    eviction degrades to recomputation): ``hashes`` is
     normally the output of :func:`image_dhash`, i.e. a full
     decode-every-image Arrow pass, and the band self-join would
     otherwise re-run that pass on BOTH join sides — at 100 TB of

@@ -164,7 +164,9 @@ def ngram_contamination(docs: DataFrame, probes: DataFrame,
 # from multiple plan branches (bucket bounds, in-bucket prefix, offsets
 # totals), so without materialization the expression re-executes per
 # branch — measured 4 full-corpus tokenizations for token_packing_bpe
-# (r10 verdict, What's-wrong #1). Same device as _DSIR_CACHE/_BM25_CACHE.
+# (r10 verdict, What's-wrong #1). Same device as _DSIR_CACHE. sf0.1,
+# slot -> no persist: token_packing_dict 1.66, 1.81 s -> 1.62, 1.87 s;
+# token_packing_bpe 2.28, 2.56 s -> 2.14, 2.59 s (functions/cache.py).
 _PACK_CACHE: list[DataFrame] = []
 
 
@@ -383,7 +385,9 @@ def source_mixture_sample(df: DataFrame, source_col: str,
 # One-slot registry for dsir_logweights' token-stream cache: the
 # returned DataFrame lazily re-reads the persisted stream, so the
 # unpersist point belongs to the NEXT call (or an explicit release),
-# keeping at most one cached stream alive per session.
+# keeping at most one cached stream alive per session. sf0.1, slot -> no
+# persist: dsir_weights 1.12, 0.90 s -> 1.38, 1.29 s; dsir_resample
+# 1.15, 1.27 s -> 1.40, 1.49 s (functions/cache.py).
 _DSIR_CACHE: list[DataFrame] = []
 
 

@@ -443,12 +443,6 @@ def lsh_banded_near_dup(embeddings: DataFrame, dim: int,
             .select("id_a", "id_b"))
 
 
-# One-slot registry for semdedup's centroid-assignment cache — the
-# bm25/winnow device (functions/cache.py): at most one cached relation
-# alive per session, each call releases the previous call's.
-_SEMDEDUP_CACHE: list[DataFrame] = []
-
-
 def semdedup(embeddings: DataFrame, centroids: Sequence[Sequence[float]],
              threshold: float = 0.9, id_col: str = "vec_id",
              vec_col: str = "embedding",
@@ -490,15 +484,13 @@ def semdedup(embeddings: DataFrame, centroids: Sequence[Sequence[float]],
     not the bottleneck). At production k (SemDeDup uses 50k cells)
     literal centroids are off the table entirely — assignment becomes
     the broadcast-join of :func:`ivf_build_index`."""
-    # Round 13 (guide §2.2 + §5): the k x dim interpreted centroid fold
-    # is chain-weight map work — widen a narrow scan so assignment does
-    # not serialize — and `tagged` is read THREE times downstream (both
-    # pair-join sides + the final survivor-flag host), each un-cached
-    # read re-running the whole fold. One-slot MEMORY_ONLY persist (the
-    # bm25/winnow device, functions/cache.py): this is exactly the
-    # "materialize the assignment once" posture the 100 TB note below
-    # prescribes; eviction degrades to recomputation, never a spill.
-    from data_services_spark.functions.cache import persist_slot
+    # Round 13 (guide §2.2): the k x dim interpreted centroid fold is
+    # chain-weight map work — widen a narrow scan so assignment does
+    # not serialize. `tagged` is read three times (both pair-join sides
+    # + the survivor-flag host); the two join sides are one hash
+    # exchange on `cell`, which ReuseExchange computes once. A one-slot
+    # persist measured slower (sf0.1, two sessions each: 6.98, 7.46 s
+    # with it; 6.15, 5.06 s without).
     from data_services_spark.plans.widen import (
         CHAIN_MIN_BYTES, widen_if_narrow)
     embeddings = widen_if_narrow(embeddings.select(id_col, vec_col),
@@ -514,7 +506,6 @@ def semdedup(embeddings: DataFrame, centroids: Sequence[Sequence[float]],
                                            F.array_max("__ds"))
                           .cast("long"))
               .drop("__ds"))
-    tagged = persist_slot(_SEMDEDUP_CACHE, tagged)
     return _semdedup_survivors(tagged, threshold, id_col, vec_col, dim)
 
 

@@ -84,9 +84,6 @@ def tfidf(docs: DataFrame, text_col: str = "text",
     return out
 
 
-_BM25_CACHE: list[DataFrame] = []
-
-
 def bm25_scores(docs: DataFrame, query_terms: tuple[str, ...],
                 k1: float = 1.2, b: float = 0.75,
                 text_col: str = "text",
@@ -122,14 +119,11 @@ def bm25_scores(docs: DataFrame, query_terms: tuple[str, ...],
     Returns (id, score) for every document; compose with
     ``.orderBy(desc("score"), id).limit(k)`` for top-k retrieval.
 
-    The per-doc tf/length pass is derived once and PERSISTED
-    (MEMORY_ONLY, one-slot bound — the bigram_logprob device: each
-    call releases the previous call's cache, ``release_all_slots``
-    drops the last; eviction degrades to recomputation, never a disk
-    spill), so the corpus-stats aggregate and the scoring branch read
-    ONE materialization of the tokenize + literal-fold work instead of
-    re-paying it per branch — at 100 TB the second tokenize pass over
-    the scan was pure redundant CPU (round-8 verdict What's-wrong #4).
+    The per-doc tf/length pass ends in one hash exchange on the id, so
+    the corpus-stats aggregate and the scoring branch read the same
+    exchange, which Spark's ReuseExchange computes once: the tokenize +
+    literal-fold work runs once per call with no persist, and the build
+    stays pure, so the plan memo stores it.
     """
     toks = F.col("__toks")
 
@@ -145,9 +139,7 @@ def bm25_scores(docs: DataFrame, query_terms: tuple[str, ...],
         F.col(id_col),
         F.size(toks).cast("long").alias("__dl"),
         *[term_count(term).cast("long").alias(f"__tf{i}")
-          for i, term in enumerate(query_terms)])
-    from data_services_spark.functions.cache import persist_slot
-    per_doc = persist_slot(_BM25_CACHE, per_doc)
+          for i, term in enumerate(query_terms)]).repartition(id_col)
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("__N"),
         F.sum("__dl").alias("__total"),
@@ -304,10 +296,8 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
                  (dsum_expr(lp) / F.count(F.lit(1))).alias("avg_logprob")))
 
 
-# One-slot registry for bigram_logprob's bigram-stream cache — the
-# dsir_logweights device: the returned DataFrame lazily re-reads the
-# persisted stream, so the unpersist point is the NEXT call or an
-# explicit release; at most one cached stream alive per session.
+# One-slot persist for bigram_logprob's bigram stream (functions/cache.py).
+# sf0.1 lm_bigram_logprob, slot -> no persist: 2.28, 2.53 s -> 2.46, 2.44 s.
 _BIGRAM_CACHE: list[DataFrame] = []
 
 
@@ -333,10 +323,10 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
     distribution and are dropped — rank them with the unigram score).
 
     Scale shape: the bigram stream is derived once and PERSISTED
-    (MEMORY_ONLY, one-slot bound — the dsir_logweights device: each
-    call releases the previous call's cache, ``release_all_slots``
-    drops the last; eviction degrades to recomputation, never a disk
-    spill of the stream), so the two model fits (map-side-combined
+    (MEMORY_ONLY, one slot — functions/cache.py: each call releases the
+    previous call's cache, ``release_all_slots`` drops the last;
+    eviction degrades to recomputation, never a disk spill of the
+    stream), so the two model fits (map-side-combined
     groupBys of <= n_buckets² longs) and the scoring join all read one
     materialization of the tokenize+explode+double-md5 work instead of
     re-deriving it per branch. The bucket tables re-enter via broadcast

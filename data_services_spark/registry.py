@@ -68,8 +68,8 @@ def register(name: str, sql: str | None = None):
 
     Every call of the registered entry first releases every one-slot
     persist left by PREVIOUS queries (functions/cache.py — e.g.
-    corpus_curate's full-text survivor cache no longer stays pinned for
-    the rest of the session), then goes through the analyzed-plan
+    image_near_dup's decoded-hash cache does not stay pinned for the
+    rest of the session), then goes through the analyzed-plan
     rebuild (plans/plan_memo.py). A build that passes the memo's purity
     checks (no Spark job started, local input files, no cached relation
     or Python RDD in its plan) is stored, and later calls wrap its
@@ -1832,11 +1832,6 @@ def winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                                max_df=_WIN_MAXDF)
 
 
-# One-slot persist for winnow_clone_clusters' pair list (see in-function
-# comment; functions/cache.py documents the device's lifecycle).
-_WCC_PAIRS_CACHE: list[DataFrame] = []
-
-
 @register("winnow_clone_clusters", f"""
 WITH RECURSIVE fps AS ({_WINNOW_FPS_SQL}
 ), inv AS (
@@ -1877,28 +1872,19 @@ def winnow_clone_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     against one recursive-CTE oracle. Singleton documents are excluded
     (the roster lists CLONE clusters; unlisted docs are their own
     cluster by definition)."""
-    from data_services_spark.functions.cache import persist_slot
-    from data_services_spark.operators.components import dedup_clusters
+    from data_services_spark.operators.components import connected_components
     d = load_table(spark, sf_dir, "documents")
     pairs = winnow_shared_pairs(d, k=_WIN_K, window=_WIN_W,
-                                min_shared=2, max_df=_WIN_MAXDF) \
-        .select("id_a", "id_b")
-    # round 13 (guide §5): the pair list is read FOUR times (both
-    # sym-union branches inside connected_components' eager checkpoint
-    # + both roster semi-join branches), and each un-cached read
-    # re-runs the bucket self-join + groupBy. One-slot MEMORY_ONLY
-    # (the bm25/bigram device); the pair list is the tiny end of the
-    # pipeline (31 rows at sf0.01). Measured sf0.1: 33.6 s -> ~2 s
-    # together with the winnow inv cache + widen.
-    pairs = persist_slot(_WCC_PAIRS_CACHE, pairs)
-    lab = dedup_clusters(d, pairs)
-    return (lab.join(pairs.select(F.col("id_a").alias("doc_id"))
-                     .unionByName(pairs.select(F.col("id_b")
-                                               .alias("doc_id")))
-                     .distinct(), "doc_id", "left_semi")
-            .groupBy(F.col("cluster_id").cast("long").alias("cluster_id"))
+                                min_shared=2, max_df=_WIN_MAXDF)
+    # The roster is connected_components' own node set — exactly the
+    # documents that appear in a pair — so the pair list is read once,
+    # by the components' checkpointed symmetric union, whose two
+    # branches share the pair groupBy's exchange through ReuseExchange.
+    comp = connected_components(pairs, src="id_a", dst="id_b")
+    return (comp.groupBy(F.col("component").cast("long")
+                         .alias("cluster_id"))
             .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.max("doc_id").cast("long").alias("max_member")))
+                 F.max("node").cast("long").alias("max_member")))
 
 
 @register("near_dup_jaccard", """
@@ -4484,20 +4470,6 @@ def _dedup_labels_over(src: str) -> str:
 _DEDUP_LABELS_CTE = "\nWITH RECURSIVE " + _dedup_labels_over("documents")
 
 
-# One-slot persist for the LSH->verify pair list shared by the dedup
-# capstones (dedup_components / corpus_dedup / corpus_curate): the pair
-# list is read by both sym-union branches of connected_components' eager
-# checkpoint (plus the roster in corpus_curate), and every un-cached
-# read re-runs propose+verify end to end. Tiny relation (two ids/row);
-# one slot per device contract (functions/cache.py).
-_NEARDUP_PAIRS_CACHE: list[DataFrame] = []
-# corpus_curate's quality->exact-dedup survivor relation is read FIVE
-# times (LSH propose + both verify sides + the component docs + the
-# final semi-join host) — its own slot, released on the next capstone
-# call like every other occupant.
-_CURATE_EXACT_CACHE: list[DataFrame] = []
-
-
 @register("dedup_components", _DEDUP_LABELS_CTE + """
 SELECT d.doc_id,
        CAST(COALESCE(l.cluster_id, d.doc_id) AS BIGINT) AS cluster_id
@@ -4516,17 +4488,12 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5 LSH family, the verify step, and the component closure via a
     recursive CTE — an exact end-to-end check on an approximate pipeline
     plus an iterative distributed algorithm."""
-    from data_services_spark.functions.cache import persist_slot
     from data_services_spark.operators.components import dedup_clusters
     from data_services_spark.operators.dedup import verify_jaccard
     d = load_table(spark, sf_dir, "documents")
     cand = minhash_lsh_pairs(d, num_hashes=_MH_N, bands=_MH_BANDS,
                              hash_family="md5")
-    # round 13 (guide §5): both CC sym-union branches re-derive the
-    # pair list — persist it once (see _NEARDUP_PAIRS_CACHE).
-    pairs = persist_slot(
-        _NEARDUP_PAIRS_CACHE,
-        verify_jaccard(d, cand, threshold=0.8).select("id_a", "id_b"))
+    pairs = verify_jaccard(d, cand, threshold=0.8).select("id_a", "id_b")
     return dedup_clusters(d, pairs)
 
 
@@ -4547,17 +4514,12 @@ def corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the end. The oracle replays the identical pipeline (same md5 hash
     family, same recursive-CTE closure) and checks the SURVIVING ROW SET
     — an exact correctness gate on what the pipeline keeps/drops."""
-    from data_services_spark.functions.cache import persist_slot
     from data_services_spark.operators.components import dedup_clusters
     from data_services_spark.operators.dedup import verify_jaccard
     d = load_table(spark, sf_dir, "documents")
     cand = minhash_lsh_pairs(d, num_hashes=_MH_N, bands=_MH_BANDS,
                              hash_family="md5")
-    # round 13 (guide §5): both CC sym-union branches re-derive the
-    # pair list — persist it once (see _NEARDUP_PAIRS_CACHE).
-    pairs = persist_slot(
-        _NEARDUP_PAIRS_CACHE,
-        verify_jaccard(d, cand, threshold=0.8).select("id_a", "id_b"))
+    pairs = verify_jaccard(d, cand, threshold=0.8).select("id_a", "id_b")
     keep = (dedup_clusters(d, pairs)
             .filter(F.col("doc_id") == F.col("cluster_id"))
             .select("doc_id"))
@@ -4623,7 +4585,6 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log n) component rounds (3), and a tiny per-source aggregate
     broadcast back (4) — the corpus payload is never joined wider
     than ids + tokens after stage 2."""
-    from data_services_spark.functions.cache import persist_slot
     from data_services_spark.operators.components import dedup_clusters
     from data_services_spark.operators.dedup import verify_jaccard
     from data_services_spark.operators.sampling import source_mixture_sample
@@ -4637,25 +4598,22 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "source", "lang", "text",
                     n_tok.cast("long").alias("n_tokens")))
     keyw = Window.partitionBy(F.sha2(F.lower(F.trim("text")), 256))
-    # round 13 (guide §5): five downstream reads (LSH propose + both
-    # verify sides + component docs + the final semi-join host) each
-    # re-ran the quality filter + sha256 window — persist the survivor
-    # relation once (see _CURATE_EXACT_CACHE). The persisted partition
-    # layout is whatever materialized it, and AQE byte-coalesces the
-    # small window shuffle to 1-2 tasks at bench scale — which would
-    # serialize every cached read's downstream fold — so the gated
-    # rebalance (OFF for large/unknown inputs) widens the cache itself.
+    # The survivor relation is read five times (LSH propose + both
+    # verify sides + component docs + the final semi-join host). Every
+    # read ends in the same exchange, which ReuseExchange computes once:
+    # the gated rebalance's round-robin exchange at bench scale (AQE
+    # would byte-coalesce the small window shuffle to 1-2 tasks and
+    # serialize the LSH fold), the window's own hash exchange for large
+    # or unknown inputs. Persisting it and the pair list measured
+    # slower (sf0.1, two sessions each: 12.0, 14.7 s with both; 11.3,
+    # 9.58 s without).
     from data_services_spark.plans.widen import rebalance_if_small
-    exact = persist_slot(
-        _CURATE_EXACT_CACHE,
-        rebalance_if_small(
-            qual.withColumn("keeper", F.min("doc_id").over(keyw))
-            .filter(F.col("doc_id") == F.col("keeper")).drop("keeper")))
+    exact = rebalance_if_small(
+        qual.withColumn("keeper", F.min("doc_id").over(keyw))
+        .filter(F.col("doc_id") == F.col("keeper")).drop("keeper"))
     cand = minhash_lsh_pairs(exact, num_hashes=_MH_N, bands=_MH_BANDS,
                              hash_family="md5")
-    pairs = persist_slot(
-        _NEARDUP_PAIRS_CACHE,
-        verify_jaccard(exact, cand, threshold=0.8).select("id_a", "id_b"))
+    pairs = verify_jaccard(exact, cand, threshold=0.8).select("id_a", "id_b")
     keep = (dedup_clusters(exact, pairs)
             .filter(F.col("doc_id") == F.col("cluster_id"))
             .select("doc_id"))
@@ -4684,30 +4642,22 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM udtf_docs d, LATERAL tokenize_tf(d.text) t""")
 
 
-# One-slot persist for the part co-occurrence edge list shared by the
-# graph-analytics queries (triangle_count / pagerank_parts): the
-# lineitem self-join + distinct is the expensive derivation, and the
-# consumers read it 3x (triangle's two-path + closing edge) / 8x
-# (pagerank's degree + per-iteration joins over both union branches).
-# Tiny relation (two int keys per edge); device contract in
-# functions/cache.py.
-_COOC_PAIRS_CACHE: list[DataFrame] = []
-
-
 def _cooc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (src < dst) part co-occurrence pairs from lineitem,
-    persisted one-slot (round 13, guide §5: reused + expensive)."""
-    from data_services_spark.functions.cache import persist_slot
+    """Distinct (src < dst) part co-occurrence pairs from lineitem, the
+    edge list of triangle_count and pagerank_parts. Not persisted: the
+    self-join + distinct ends in one hash exchange, and every read of
+    the pairs in either consumer shares it through ReuseExchange (sf0.1
+    triangle_count, two sessions each: 6.86, 6.19 s with a one-slot
+    persist; 4.85, 4.72 s without)."""
     l = load_table(spark, sf_dir, "lineitem")
     a = l.select(F.col("l_orderkey").alias("ok"),
                  F.col("l_partkey").alias("pa"))
     b = l.select(F.col("l_orderkey").alias("ok"),
                  F.col("l_partkey").alias("pb"))
-    pairs = (a.join(b, "ok")
-             .filter(F.col("pa") < F.col("pb"))
-             .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-             .distinct())
-    return persist_slot(_COOC_PAIRS_CACHE, pairs)
+    return (a.join(b, "ok")
+            .filter(F.col("pa") < F.col("pb"))
+            .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
+            .distinct())
 
 
 @register("triangle_count", """
@@ -4728,9 +4678,6 @@ def triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-hoc division; see operators/components.py::triangle_count for
     the hub-vertex skew mitigation at scale."""
     from data_services_spark.operators.components import triangle_count
-    # round 13 (guide §5): the three plan references (two-path e1/e2 +
-    # closing e3) each re-ran the lineitem self-join — _cooc_pairs
-    # persists the edge list once.
     return triangle_count(_cooc_pairs(spark, sf_dir))
 
 
@@ -4775,22 +4722,7 @@ def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-degree >= 1 (no dangling mass — see operators/components.py::
     pagerank for the contract)."""
     from data_services_spark.operators.components import pagerank
-    # round 13, measured and deliberately NOT persisted (guide §1.1
-    # measure-first): routing this through _cooc_pairs' cache REGRESSED
-    # 3.8 -> 7.2 s at sf0.1 — the per-iteration contribution joins are
-    # identical subtrees whose exchanges Spark's ReuseExchange already
-    # computes once, and the cache boundary breaks that reuse (the
-    # same A/B run shows triangle_count, whose three reads need
-    # DIFFERENT distributions, winning 13.8 -> 8.7 s with the cache).
-    l = load_table(spark, sf_dir, "lineitem")
-    a = l.select(F.col("l_orderkey").alias("ok"),
-                 F.col("l_partkey").alias("pa"))
-    b = l.select(F.col("l_orderkey").alias("ok"),
-                 F.col("l_partkey").alias("pb"))
-    pairs = (a.join(b, "ok")
-             .filter(F.col("pa") < F.col("pb"))
-             .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-             .distinct())
+    pairs = _cooc_pairs(spark, sf_dir)
     edges = pairs.unionAll(pairs.select(F.col("dst").alias("src"),
                                         F.col("src").alias("dst")))
     return (pagerank(edges, iterations=_PR_ITERS, damping=_PR_DAMP)

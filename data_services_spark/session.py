@@ -97,14 +97,29 @@ _BCAST_DEFAULT = 16 * 1024 * 1024
 _AQE_ADVISORY_ENV = "SPARK_GRAFT_AQE_ADVISORY_BYTES"
 
 
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's MemTotal, capped at 16g: in local mode the driver
+    heap holds every executor, and a fixed 16g on a 15 GB host lets the
+    JVM grow until the kernel kills it. 16g where MemTotal is unknown."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    return f"{max(1, min(16 * 1024, kb // 2048))}m"
+
+
 def _build_confs() -> dict[str, str]:
     """Static confs for sessions we create ourselves (JVM-start-time
-    only). A FUNCTION, not a module constant: callers (bench.py) set
+    only). A FUNCTION, not a module constant: callers set
     $SPARK_GRAFT_DRIVER_MEM between import and get_spark(), so the env
-    must be read when the session is built, never at import time."""
+    must be read when the session is built, never at import time. An
+    explicit $SPARK_GRAFT_DRIVER_MEM wins over the host-sized default."""
     return {
         "spark.driver.memory":
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _default_driver_mem(),
         "spark.ui.enabled": "false",
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     }

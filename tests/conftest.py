@@ -18,8 +18,9 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
 def spark():
     from data_services_spark.session import get_spark
 
-    # The 16g default heap lets the JVM outgrow a 15 GB host (a full
-    # run was OOM-killed at 15.3 GB RSS); the suite passes with 8g.
+    # A fixed heap, whatever the host-sized default: a 16g heap let the
+    # JVM outgrow a 15 GB host (a full run was OOM-killed at 15.3 GB
+    # RSS); the suite passes with 8g.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     s = get_spark("tests", master="local[8]", shuffle_partitions=8)
     yield s

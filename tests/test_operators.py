@@ -458,6 +458,61 @@ def test_minhash_lsh_leaves_no_cached_rdds(spark):
     assert "ReusedExchange" in physical_plan(pairs)
 
 
+def _n_persisted(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_semdedup_leaves_no_cached_rdds(spark):
+    """semdedup persists nothing: its cell self-join reads one hash
+    exchange on `cell` from both sides (ReuseExchange computes it
+    once), and the rows are the hand-derived survivors."""
+    from data_services_spark.operators.similarity import semdedup
+    from data_services_spark.plans.bucketing import physical_plan
+
+    e = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [2.0, 0.0]), (3, [0.0, 1.0]),
+         (4, [0.1, 1.0]), (5, [1.0, 1.0])],
+        "vec_id long, embedding array<float>")
+    before = _n_persisted(spark)
+    out = semdedup(e, centroids=[[1.0, 0.0], [0.0, 1.0]], threshold=0.99)
+    got = sorted(tuple(r) for r in out.collect())
+    assert _n_persisted(spark) <= before
+    assert "ReusedExchange" in physical_plan(out)
+    assert "InMemoryTableScan" not in physical_plan(out)
+    # 2 is a scaled copy of 1 (cosine 1); 4 is cosine 0.995 to 3;
+    # 5 ties both centroids and takes the first cell
+    assert got == [(1, 1, True), (2, 1, False), (3, 2, True),
+                   (4, 2, False), (5, 1, True)]
+
+
+def test_cooc_pairs_leaves_no_cached_rdds(spark):
+    """The co-occurrence edge list shared by triangle_count and
+    pagerank_parts persists nothing: triangle_count's reads of it share
+    its distinct exchange through ReuseExchange. Its rows are the
+    distinct (src < dst) part pairs of each order."""
+    import pyarrow.parquet as pq
+
+    from data_services_spark.plans.bucketing import physical_plan
+    from data_services_spark.registry import RAW_QUERIES, _cooc_pairs
+    from tests.conftest import SF_DIR
+
+    li = pq.read_table(f"{SF_DIR}/lineitem.parquet",
+                       columns=["l_orderkey", "l_partkey"]).to_pydict()
+    parts: dict[int, set] = {}
+    for ok, pk in zip(li["l_orderkey"], li["l_partkey"]):
+        parts.setdefault(ok, set()).add(pk)
+    want = {(a, b) for ps in parts.values() for a in ps for b in ps
+            if a < b}
+    before = _n_persisted(spark)
+    got = {tuple(r) for r in _cooc_pairs(spark, SF_DIR).collect()}
+    tri = RAW_QUERIES["triangle_count"](spark, SF_DIR)
+    tri.collect()
+    assert _n_persisted(spark) <= before
+    assert got == want
+    assert "ReusedExchange" in physical_plan(tri)
+    assert "InMemoryTableScan" not in physical_plan(tri)
+
+
 def test_connected_components_frees_superseded_checkpoints(spark):
     """Iterative CC localCheckpoints every round; superseded rounds'
     blocks must be unpersisted as they're replaced, leaving exactly the
@@ -1176,30 +1231,41 @@ def test_winnow_guarantee_shared_substring_shares_fingerprint(spark):
     assert set(pairs) == {(1, 2)} and pairs[(1, 2)] >= 2
 
 
-def test_winnow_shared_pairs_one_slot_cache_and_release(spark):
-    """Round 13: winnow_shared_pairs persists its inverted index one-
-    slot (the bm25/PPJoin device) so the per-character fingerprint fold
-    runs once per call, not once per plan reference. Contract: at most
-    one cached relation alive (second call evicts the first), release
-    empties the slot, and the released path recomputes THE SAME rows."""
-    from data_services_spark.operators import dedup as dd
+def test_winnow_shared_pairs_leaves_no_cached_rdds(spark):
+    """winnow_shared_pairs persists nothing: its max-df count is a
+    window over the fingerprint, so both self-join sides read ONE hash
+    exchange on it, which ReuseExchange computes once — the
+    per-character fingerprint fold runs once per call. Its rows equal
+    the max-df cap applied as a per-fingerprint count in Python."""
+    from collections import Counter
 
+    from data_services_spark.operators.dedup import (
+        winnow_fingerprints, winnow_shared_pairs)
+    from data_services_spark.plans.bucketing import physical_plan
+
+    common = "a very distinctive common passage of text "
     d = spark.createDataFrame(
-        [(1, "a very distinctive common passage of text one"),
-         (2, "a very distinctive common passage of text two"),
-         (3, "zzz qqq vvv kkk www uuu mmm nnn ooo ppp rrr sss")],
+        [(1, common + "one"), (2, common + "two"),
+         (3, "zzz qqq vvv kkk www uuu mmm nnn ooo ppp rrr sss"),
+         (4, "the boilerplate footer repeats here " + common),
+         (5, "the boilerplate footer repeats here and there")],
         "doc_id long, text string")
-    cached = sorted(tuple(r) for r in
-                    dd.winnow_shared_pairs(d, k=8, window=4,
-                                           min_shared=1).collect())
-    dd.winnow_shared_pairs(d, k=8, window=4, min_shared=1).collect()
-    assert len(dd._WINNOW_CACHE) == 1   # second call evicted the first
-    release_all_slots()
-    assert not dd._WINNOW_CACHE
-    plain = dd.winnow_shared_pairs(d, k=8, window=4, min_shared=1)
-    recomputed = sorted(tuple(r) for r in plain.collect())
-    assert recomputed == cached
-    release_all_slots()
+    inv = [(r["doc_id"], fp) for r in
+           winnow_fingerprints(d, k=8, window=4).collect()
+           for fp in r["fps"]]
+    for max_df in (2, 256):
+        df_ = Counter(fp for _, fp in inv)
+        kept = [(i, fp) for i, fp in inv if df_[fp] <= max_df]
+        shared = Counter((a, b) for a, fa in kept for b, fb in kept
+                         if fa == fb and a < b)
+        want = sorted((a, b, n) for (a, b), n in shared.items())
+        before = _n_persisted(spark)
+        pairs = winnow_shared_pairs(d, k=8, window=4, min_shared=1,
+                                    max_df=max_df)
+        assert sorted(tuple(r) for r in pairs.collect()) == want
+        assert _n_persisted(spark) <= before
+        assert "ReusedExchange" in physical_plan(pairs)
+        assert "InMemoryTableScan" not in physical_plan(pairs)
 
 
 def test_winnow_rows_equals_array_form(spark):
@@ -1837,17 +1903,22 @@ def test_prefix_jaccard_matches_bruteforce(spark):
 
 
 def test_prefix_jaccard_threshold_validation_and_release(spark):
-    from data_services_spark.operators import dedup as dd
+    """The threshold is checked, and the join persists nothing: the
+    per-doc array relation's three reads share the per-doc groupBy's
+    exchange through ReuseExchange, so no block outlives the call."""
+    from data_services_spark.operators.dedup import prefix_jaccard_join
+    from data_services_spark.plans.bucketing import physical_plan
 
-    docs = spark.createDataFrame([(1, "a b"), (2, "a b")],
+    docs = spark.createDataFrame([(1, "a b"), (2, "a b"), (3, "c d e")],
                                  "doc_id long, text string")
     with pytest.raises(ValueError, match="threshold"):
-        dd.prefix_jaccard_join(docs, threshold=0.0)
-    dd.prefix_jaccard_join(docs).collect()
-    dd.prefix_jaccard_join(docs).collect()   # second call evicts first
-    assert len(dd._PJ_CACHE) == 1
-    release_all_slots()
-    assert not dd._PJ_CACHE
+        prefix_jaccard_join(docs, threshold=0.0)
+    before = _n_persisted(spark)
+    out = prefix_jaccard_join(docs)
+    assert [tuple(r) for r in out.collect()] == [(1, 2, 2, 2, 2, 1.0)]
+    assert _n_persisted(spark) <= before
+    assert "ReusedExchange" in physical_plan(out)
+    assert "InMemoryTableScan" not in physical_plan(out)
 
 
 def test_hashed_linear_score_sparse_weights_left_join(spark):

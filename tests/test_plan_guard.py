@@ -31,6 +31,10 @@ SF_DIR = "/root/testdata/sf0.01"
 #     OFFSETS — tiny aggregated rows — never the main table; the
 #     distribution test below proves the main table never funnels)
 #   py: exact count of Python/Arrow boundary operators
+#   inmem: exact post-AQE InMemoryTableScan count (pinned on the lazy-form
+#     entries: no persist anywhere in the plan)
+#   reused_min: at least this many post-AQE ReusedExchange nodes — each
+#     subtree the plan reads twice is computed once, with no persist
 EXPECTED = {
     "q1_pricing_summary": dict(scans=1, pushed_min=1, joins=set(),
                                exchanges_max=1, single_max=0, py=0),
@@ -154,41 +158,48 @@ EXPECTED = {
                            exchanges_max=1, single_max=1, py=0),
     # winnowing: the fingerprint projection is zero-shuffle map-only
     # (and zero Python — higher-order array funcs, staged so the
-    # interpreted lambdas never re-inline, dedup.py); the pairs query
-    # (round 13) persists the inverted index ONE-SLOT MEMORY_ONLY, so
-    # the per-character md5 fold runs ONCE — scans=1 (was 4: max-df
-    # keep + both join sides + fps each re-derived the corpus), the
-    # other reads are InMemoryTableScans. pushed_min drops to 0 with
-    # the scans it sat on; the 3 exchanges are the cached index's
-    # explode groupBy + the keep aggregate + the final pair groupBy.
+    # interpreted lambdas never re-inline, dedup.py). The pairs query
+    # sends the inverted index through ONE hash exchange on fp (the
+    # max-df window count); the second self-join side is that exchange
+    # reused, so the per-character md5 fold runs once with no persist.
+    # scans=2 is the pre-AQE text, which prints both sides; the 3
+    # exchanges are the fp exchange, its reuse and the pair groupBy.
     # Still broadcast-joins the tiny index; the corpus never funnels
     # through a single partition.
     "winnow_fingerprint": dict(scans=1, pushed_min=0, joins=set(),
                                exchanges_max=0, single_max=0, py=0),
-    "winnow_pairs": dict(scans=1, pushed_min=0,
+    "winnow_pairs": dict(scans=2, pushed_min=0,
                          joins={"BroadcastHashJoin"},
-                         exchanges_max=3, single_max=0, py=0),
+                         exchanges_max=3, single_max=0, py=0,
+                         inmem=0, reused_min=1),
+    # the roster groups connected_components' own output: it reads the
+    # components' checkpoint and nothing else — no parquet scan, so the
+    # pair list is never re-derived (the checkpointed union's reuse is
+    # pinned by test_winnow_clone_clusters_reads_the_pairs_once).
+    "winnow_clone_clusters": dict(scans=0, pushed_min=0, joins=set(),
+                                  exchanges_max=1, single_max=0, py=0,
+                                  inmem=0),
     # row-form winnowing: gram explode + frame-spec window min — one
     # doc_id shuffle, everything codegen'd, no arrays, no Python.
     "winnow_rows": dict(scans=1, pushed_min=0, joins=set(),
                         exchanges_max=1, single_max=0, py=0),
-    # round-7 additions, round-13 shape: semdedup now MATERIALIZES the
-    # centroid assignment once (one-slot MEMORY_ONLY — the "100 TB run
-    # materializes the assignment once" posture the round-7 comment
-    # prescribed), so the k x dim fold runs ONCE: 2 parquet scans (the
-    # corpus + injected-copies branches feeding the materialization),
-    # every other read an InMemoryTableScan. The widen guard's
-    # round-robin exchange (193 KB sf0.01 input is over the 128 KB
-    # chain gate) is the 1 exchange; the cell self-join stays SMJ over
-    # the cached relation and must never be a Cartesian. dsir's scoring
+    # round-7 additions: semdedup's cell self-join is ONE hash exchange
+    # on `cell` read by both sides (a ReusedExchange), so the k x dim
+    # centroid fold runs once for the pair proposal with no persist; the
+    # survivor-flag host reads the assignment a second time (2 of the 6
+    # pre-AQE scans: corpus + injected copies per read). The widen
+    # guard's round-robin exchange (193 KB sf0.01 input is over the
+    # 128 KB chain gate) is the other exchange; the cell self-join stays
+    # SMJ and must never be a Cartesian. dsir's scoring
     # pass must stay JOIN-FREE: the bucket models enter as literal map
     # lookups (the join formulation measured 10x slower at sf1 —
     # nested-loop total attachments broke codegen over the exploded
     # token stream), so the plan is one persisted token-stream scan
     # feeding the per-doc aggregate.
-    "semdedup": dict(scans=2, pushed_min=1,
+    "semdedup": dict(scans=6, pushed_min=1,
                      joins={"BroadcastHashJoin", "SortMergeJoin"},
-                     exchanges_max=2, single_max=0, py=0),
+                     exchanges_max=2, single_max=0, py=0,
+                     inmem=0, reused_min=1),
     "dsir_weights": dict(scans=1, pushed_min=0, joins=set(),
                          exchanges_max=1, single_max=0, py=0),
     # round-8: the selection step inherits the join-free scoring pass;
@@ -197,17 +208,18 @@ EXPECTED = {
     # below), never a global sort exchange.
     "dsir_resample": dict(scans=1, pushed_min=0, joins=set(),
                           exchanges_max=1, single_max=0, py=0),
-    # round-8/9: BM25 — ONE parquet scan: the per-doc tf/length fold
-    # persists (one-slot MEMORY_ONLY, bm25_scores device, round-9 —
-    # the r8 form re-tokenized the corpus for the stats branch), so
-    # the stats aggregate and the scoring branch are both
-    # InMemoryTableScans of the same materialization. The stats
-    # broadcast is the documented tiny-agg BNLJ crossJoin, the only
-    # exchange is the 1-row SinglePartition agg, and the ranking is
-    # TakeOrderedAndProject (pinned below with dsir_resample's).
-    "bm25_topk": dict(scans=1, pushed_min=0,
+    # round-8/9: BM25 — the per-doc tf/length fold ends in one hash
+    # exchange on doc_id, and the stats aggregate reads it as a
+    # ReusedExchange, so the corpus is tokenized once with no persist
+    # (scans=2 is the pre-AQE text, which prints both branches). The
+    # stats broadcast is the documented tiny-agg BNLJ crossJoin; the
+    # exchanges are the doc_id exchange, its reuse and the 1-row
+    # SinglePartition agg; the ranking is TakeOrderedAndProject
+    # (pinned below with dsir_resample's).
+    "bm25_topk": dict(scans=2, pushed_min=0,
                       joins={"BroadcastNestedLoopJoin"},
-                      exchanges_max=1, single_max=1, py=0),
+                      exchanges_max=3, single_max=1, py=0,
+                      inmem=0, reused_min=1),
     # round-8: hashed bigram LM — ONE parquet scan: the bigram stream
     # persists (one-slot MEMORY_ONLY, bigram_logprob device) and the
     # two bounded model fits (<= 256 / 65536 rows, map-side combined)
@@ -267,16 +279,26 @@ EXPECTED = {
     # zero Python. The classifier adds NO shuffle to a 100 TB corpus.
     "quality_classifier": dict(scans=1, pushed_min=0, joins=set(),
                                exchanges_max=0, single_max=0, py=0),
-    # round-9 PPJoin: the df-ordered per-doc array relation persists
-    # (one-slot MEMORY_ONLY, prefix_jaccard_join device) so the
-    # prefix explode and both verify sides read ONE materialization —
-    # 2 parquet scans (token-df fit + array build), not the 8 measured
-    # without the cache. Candidate and verify joins broadcast at this
-    # scale; the exchanges are the df groupBy + the per-doc array
-    # groupBy; zero Python.
-    "jaccard_prefix_join": dict(scans=2, pushed_min=0,
+    # round-9 PPJoin: the df-ordered per-doc array relation is read
+    # three times (prefix explode + both verify sides); each read is
+    # the per-doc groupBy's exchange, reused, so the executed plan
+    # scans the corpus twice (token-df fit + array build) with no
+    # persist — the 8 pre-AQE scans are text only. Candidate and
+    # verify joins broadcast at this scale; the exchanges are the df
+    # groupBy + the per-doc array groupBy and their reuses; zero
+    # Python.
+    "jaccard_prefix_join": dict(scans=8, pushed_min=0,
                                 joins={"BroadcastHashJoin"},
-                                exchanges_max=2, single_max=0, py=0),
+                                exchanges_max=4, single_max=0, py=0,
+                                inmem=0, reused_min=3),
+    # co-occurrence triangles: the lineitem self-join + distinct is one
+    # hash exchange on (a, b); the adjacency groupBy reads it as a
+    # ReusedExchange and the second adjacency side is the first's
+    # broadcast reused, so the self-join runs once with no persist.
+    "triangle_count": dict(scans=6, pushed_min=6,
+                           joins={"BroadcastHashJoin", "SortMergeJoin"},
+                           exchanges_max=4, single_max=1, py=0,
+                           inmem=0, reused_min=2),
     # round-14 int-proxy rewrite (guide §2.3): ONE widened lineitem scan
     # feeds both typed edge legs through the shared (s,p,o)-proxy
     # distinct (was one scan per leg = 5 scans; now lineitem + part +
@@ -407,6 +429,8 @@ def _facts(spark, df):
     executed = df._jdf.queryExecution().executedPlan().toString() \
         .split("== Initial Plan ==")[0]
     return dict(
+        inmem=executed.count("InMemoryTableScan"),
+        reused=len(re.findall(r"\bReusedExchange\b", executed)),
         scans=len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)),
         pushed=sum(1 for p in re.findall(r"PushedFilters: \[([^\]]*)\]",
                                          plan) if p.strip()),
@@ -435,6 +459,8 @@ def test_plan_invariants(spark, name):
     assert got["exchanges"] <= want["exchanges_max"], got
     assert got["single"] <= want["single_max"], got
     assert got["py"] == want["py"], got
+    assert got["inmem"] == want.get("inmem", got["inmem"]), got
+    assert got["reused"] >= want.get("reused_min", 0), got
     assert "CartesianProduct" not in got["joins"], got
 
 
@@ -553,3 +579,27 @@ def test_image_near_dup_single_decode_pass(spark):
     assert not arrow, f"Arrow op outside the hash cache: {arrow}"
     inmem = [n for n in seen if n == "InMemoryTableScan"]
     assert len(inmem) == 2, seen
+
+
+def test_winnow_clone_clusters_reads_the_pairs_once(spark, monkeypatch):
+    """winnow_clone_clusters reads its pair list once, with no persist:
+    connected_components checkpoints the symmetric union of the pairs,
+    and the union's second branch is the first branch's pair-groupBy
+    exchange, reused."""
+    from data_services_spark.operators import components
+    from data_services_spark.registry import RAW_QUERIES
+
+    seen = []
+    real = components._eager_checkpoint
+
+    def spy(df):
+        seen.append(df)
+        return real(df)
+
+    monkeypatch.setattr(components, "_eager_checkpoint", spy)
+    RAW_QUERIES["winnow_clone_clusters"](spark, SF_DIR).toArrow()
+    sym = seen[0]._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in sym, sym[:2000]
+    assert "ReusedExchange" in sym, sym[:2000]
+    assert "InMemoryTableScan" not in sym, sym[:2000]

@@ -109,11 +109,10 @@ def test_plan_memo_invalidates_on_file_rewrite(spark, tmp_path):
 # a persist or plan a Python RDD, and the file-less streaming drains.
 # Every other registered entry is stored from its second build on.
 _NEVER_STORED = frozenset({
-    "bm25_topk", "corpus_curate", "corpus_dedup", "dedup_components",
+    "corpus_curate", "corpus_dedup", "dedup_components",
     "dsir_resample", "dsir_weights", "image_near_dup", "ivf_topk",
-    "jaccard_prefix_join", "lm_bigram_logprob", "semdedup",
-    "semdedup_trained", "token_packing_bpe", "token_packing_dict",
-    "triangle_count", "winnow_clone_clusters", "winnow_pairs",
+    "lm_bigram_logprob", "semdedup_trained", "token_packing_bpe",
+    "token_packing_dict", "winnow_clone_clusters",
     "stream_classify", "stream_enrich", "stream_interval_join",
     "stream_session", "stream_sliding", "stream_tokenize",
     "stream_tumbling"})
@@ -140,6 +139,23 @@ def _build_twice(spark, name: str):
     first = QUERIES[name](spark, SF_DIR)
     QUERIES[name](spark, SF_DIR)
     return first
+
+
+def memo_rebuild(spark, monkeypatch, name: str):
+    """The entry as the memo serves it: with the memo emptied, build
+    twice and assert the second build was stored (every entry outside
+    ``_NEVER_STORED``), then return a third build — the memo's
+    rebuild — for the caller to execute. A never-stored entry is built
+    once: it has no rebuild to check."""
+    from data_services_spark.plans import plan_memo as pm
+    from data_services_spark.registry import QUERIES
+
+    if name in _NEVER_STORED:
+        return QUERIES[name](spark, SF_DIR)
+    monkeypatch.setattr(pm, "_MEMO", {})
+    _build_twice(spark, name)
+    assert _stored(spark, name)
+    return QUERIES[name](spark, SF_DIR)
 
 
 def test_lazy_build_marks_the_kgx_builders(spark, monkeypatch):
@@ -179,15 +195,15 @@ def test_impure_builds_are_never_stored(spark, monkeypatch):
 def test_lazy_build_queries_value_parity_first_vs_rebuilt(
         spark, monkeypatch, name):
     """Every entry outside ``_NEVER_STORED``: with the memo emptied,
-    the first call really runs the builder, the second build is
-    stored, and the memo's rebuild returns the first build's rows."""
+    the first call really runs the builder and the second build is
+    stored. Nothing is executed here: tests/test_oracle_parity.py runs
+    each entry's memo rebuild against its DuckDB oracle (or, for the
+    entries without one, checks that it returns rows)."""
     from data_services_spark.plans import plan_memo as pm
-    from data_services_spark.registry import QUERIES
 
     monkeypatch.setattr(pm, "_MEMO", {})
-    first = _build_twice(spark, name)
+    _build_twice(spark, name)
     assert _stored(spark, name)
-    assert _rows(QUERIES[name](spark, SF_DIR)) == _rows(first)
 
 
 def test_lazy_build_check_catches_eager_builders(spark):

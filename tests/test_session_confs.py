@@ -50,3 +50,26 @@ def test_aqe_advisory_env_override(spark, monkeypatch):
             else:
                 spark.conf.set(k, v)
     assert {k: spark.conf.get(k, None) for k in keys} == prior
+
+
+def test_driver_heap_sized_from_host(tmp_path, monkeypatch):
+    """The default driver heap is half of MemTotal, capped at 16g, and
+    16g when MemTotal cannot be read; an explicit
+    $SPARK_GRAFT_DRIVER_MEM wins."""
+    from data_services_spark.session import (
+        _build_confs, _default_driver_mem)
+
+    def host(kb):
+        p = tmp_path / f"meminfo{kb}"
+        p.write_text(f"MemTotal:       {kb} kB\nMemFree:  1 kB\n")
+        return str(p)
+
+    assert _default_driver_mem(host(15 * 1024 * 1024)) == "7680m"
+    assert _default_driver_mem(host(128 * 1024 * 1024)) == "16384m"
+    assert _default_driver_mem(str(tmp_path / "missing")) == "16g"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    heap = _build_confs()["spark.driver.memory"]
+    assert heap == _default_driver_mem()
+    assert int(heap.rstrip("mg")) <= 16 * 1024
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _build_confs()["spark.driver.memory"] == "3g"
