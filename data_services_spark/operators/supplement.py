@@ -18,11 +18,13 @@ from __future__ import annotations
 
 import subprocess
 from collections.abc import Iterator
-from typing import Sequence
+from typing import TYPE_CHECKING, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
+
+if TYPE_CHECKING:  # pandas is only needed in the Python workers
+    import pandas as pd
 
 
 def supplement(df: DataFrame, id_col: str = "id",

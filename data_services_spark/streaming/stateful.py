@@ -17,11 +17,13 @@ exact value total, and last-seen event time. Its batch twin is a plain
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
+from typing import TYPE_CHECKING, Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+if TYPE_CHECKING:  # imported at run time inside the Python workers only
+    import pandas as pd
 
 OUTPUT_SCHEMA = ("user_id bigint, n_events bigint, total_value_micros bigint,"
                  " last_ts_ms bigint")
@@ -33,6 +35,8 @@ _MICROS = 1_000_000
 def _accumulate(key: tuple[Any, ...],
                 batches: Iterator[pd.DataFrame],
                 state: GroupState) -> Iterator[pd.DataFrame]:
+    import pandas as pd
+
     n, total_micros, last_ms = state.get if state.exists else (0, 0, 0)
     for pdf in batches:
         n += len(pdf)
@@ -67,6 +71,8 @@ class _RunningTotals(StatefulProcessor):
             "totals", STATE_SCHEMA, ttlDurationMs=self._ttl_ms)
 
     def handleInputRows(self, key, rows, timer_values):
+        import pandas as pd
+
         cur = self._state.get()
         n, total_micros, last_ms = cur if cur is not None else (0, 0, 0)
         for pdf in rows:

@@ -7,7 +7,7 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",

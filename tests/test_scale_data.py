@@ -4,11 +4,12 @@ count scales linearly, never quadratically (copies must not cross-join)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.scale_data import scale  # noqa: E402
 

@@ -73,3 +73,54 @@ def test_driver_heap_sized_from_host(tmp_path, monkeypatch):
     assert int(heap.rstrip("mg")) <= 16 * 1024
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert _build_confs()["spark.driver.memory"] == "3g"
+
+
+def test_warm_pass_compiles_nothing(spark, tmp_path):
+    """A second pass over perfbench's 11 ops compiles no generated class.
+    The ops need 134 distinct classes here; under Spark's default cache
+    of 100 (4 Guava segments of 25, each evicting on its own) the second
+    pass recompiled 116 of them."""
+    import pathlib
+    import runpy
+
+    from data_services_spark.registry import RAW_QUERIES
+    from data_services_spark.session import _build_confs
+    from tests.conftest import SF_DIR
+
+    assert _build_confs()["spark.sql.codegen.cache.maxEntries"] == "4096"
+    # perfbench is a script directory, not a package: run its table's file.
+    wls = runpy.run_path(str(pathlib.Path(__file__).parents[1] / "perfbench"
+                             / "workloads.py"))["WORKLOADS"]
+    ops = [(op, wls[w].sink) for w in ("analytics", "kg_etl")
+           for op in wls[w].ops]
+    assert len(ops) == 11
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def one_pass():
+        for op, sink in ops:
+            df = RAW_QUERIES[op](spark, SF_DIR)
+            if sink == "parquet":
+                df.write.mode("overwrite").parquet(str(tmp_path / op))
+            else:
+                assert df.toArrow().num_rows > 0, op
+
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() == before
+
+
+def test_registry_imports_without_pandas():
+    """Importing the registry does not import pandas (about 0.3 s); the
+    operators that need it import it inside the functions their Python
+    workers run. pyspark itself imports pandas when a SparkContext
+    starts, so in a driver this moves the cost into session start."""
+    import pathlib
+    import subprocess
+    import sys
+
+    code = ("import sys, data_services_spark.registry; "
+            "assert 'pandas' not in sys.modules, 'pandas imported'")
+    subprocess.run([sys.executable, "-c", code], check=True,
+                   cwd=pathlib.Path(__file__).parents[1])

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -814,7 +815,7 @@ def test_pinned_snapshot_scope(spark, tmp_path):
 
 _READER_SCRIPT = r'''
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, @REPO@)
 import pyarrow.dataset as ds
 from data_services_spark.streaming.ingest import (
     _bucket_paths, _pinned_manifest, pin_snapshot, release_snapshot_pin,
@@ -887,7 +888,9 @@ def test_multiwriter_handoff_concurrent_readers_never_torn(spark, tmp_path):
     state = tmp_path / "state"
     done_flag = tmp_path / "DONE"
     script = tmp_path / "reader.py"
-    script.write_text(_READER_SCRIPT)
+    script.write_text(_READER_SCRIPT.replace(
+        "@REPO@", repr(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))))))
 
     # generation 0 exists before readers start
     def write_batch(k: int, owner: str):

@@ -26,13 +26,14 @@ Three layers of defense, cheapest first:
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pyarrow as pa
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.verify_queries import _type_class, compare_arrow_types
 

@@ -16,6 +16,12 @@ uses:
             codegen + job scheduling + shuffle + Arrow fetch
   fresh_s   build + exec timed as ONE region, exactly like bench.py
             (sanity: fresh_s ~= build_s + exec_s within noise)
+  compiles, compile_ms
+            generated classes compiled (janino) across the query's
+            timed reps, and the time spent compiling them: deltas of
+            Spark's CodegenMetrics and CodeGenerator.compileTime. After
+            the warmup a cache hit compiles nothing, so a nonzero count
+            is a recompile, which exec_s would otherwise hide
 
 Also prints the two one-time costs bench EXCLUDES from its metric
 (registry import, SparkSession startup) so the judge can see they are
@@ -33,7 +39,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -61,9 +67,19 @@ def main() -> None:
     for name in BENCH_QUERIES:
         RAW_QUERIES[name](spark, sf_dir).toArrow()
 
+    jvm = spark._jvm
+
+    def codegen_counts() -> tuple[int, float]:
+        """(classes compiled, ms spent compiling) since the JVM started."""
+        return (jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME().getCount(),
+                jvm.org.apache.spark.sql.catalyst.expressions.codegen
+                .CodeGenerator.compileTime() / 1e6)
+
     rows = []
     for name in BENCH_QUERIES:
         spark._jvm.System.gc()
+        n0, ms0 = codegen_counts()
         build = exec_ = fresh = float("inf")
         for _ in range(args.reps):
             t0 = time.perf_counter()
@@ -78,10 +94,13 @@ def main() -> None:
             t0 = time.perf_counter()
             RAW_QUERIES[name](spark, sf_dir).toArrow()
             fresh = min(fresh, time.perf_counter() - t0)
+        n1, ms1 = codegen_counts()
         rows.append({"query": name, "build_s": round(build, 4),
                      "exec_s": round(exec_, 4),
                      "fresh_s": round(fresh, 4),
-                     "build_pct": round(100 * build / (build + exec_), 1)})
+                     "build_pct": round(100 * build / (build + exec_), 1),
+                     "compiles": n1 - n0,
+                     "compile_ms": round(ms1 - ms0, 1)})
 
     cols = list(rows[0])
     print("| " + " | ".join(cols) + " |")
@@ -89,7 +108,8 @@ def main() -> None:
     for r in rows:
         print("| " + " | ".join(str(r[c]) for c in cols) + " |")
     totals = {k: round(sum(r[k] for r in rows), 4)
-              for k in ("build_s", "exec_s", "fresh_s")}
+              for k in ("build_s", "exec_s", "fresh_s", "compiles",
+                        "compile_ms")}
     print(json.dumps({"one_time_excluded": {
         "registry_import_s": round(import_s, 2),
         "session_startup_s": round(startup_s, 2)},

@@ -30,11 +30,12 @@ from __future__ import annotations
 import argparse
 import json
 import shutil
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.1"
 BANDS = 4

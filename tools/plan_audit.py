@@ -9,9 +9,10 @@ shuffle count. Usage:
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 AUDIT_QUERIES = (
     "q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",

@@ -22,7 +22,7 @@ Usage:
     python tools/scale_data.py [OUT_DIR] [--copies N] [--src SF_DIR]
                                [--table-copies events=100,embeddings=100]
 
-Default OUT_DIR is /root/repo/.bench_data/sf1 (gitignored). Writing is a
+Default OUT_DIR is .bench_data/sf1 in the checkout (gitignored). Writing is a
 single DuckDB pass per table: SELECT ... FROM tbl CROSS JOIN range(N).
 
 --table-copies overrides the factor per table: the non-TPC-H tables
@@ -125,7 +125,9 @@ def scale(src: str, out: str, copies: int,
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("out", nargs="?", default="/root/repo/.bench_data/sf1")
+    ap.add_argument("out", nargs="?", default=os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".bench_data", "sf1"))
     ap.add_argument("--copies", type=int, default=10)
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument("--table-copies", default="",

@@ -39,7 +39,7 @@ import time
 import duckdb
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
@@ -245,7 +245,8 @@ def main() -> int:
         proc = subprocess.run(
             [sys.executable, "-m", "pytest",
              "tests/test_plan_guard.py", "-q", "--no-header"],
-            cwd="/root/repo", capture_output=True, text=True)
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            capture_output=True, text=True)
         tail = proc.stdout.strip().splitlines()[-1] if proc.stdout else ""
         plan_guard = {"pass": proc.returncode == 0, "summary": tail,
                       "sec": round(time.time() - t0, 2)}
